@@ -37,27 +37,7 @@ object Materialize {
 
   val ReliableConf = "graft.checkpoint.reliable"
 
-  /** A/B instrumentation: `graft.checkpoint.disable=true` turns every
-    * pin into a pass-through (pinPartitionedBy keeps its repartition,
-    * drops the materialization), so the cost/benefit of pinning is
-    * measurable on the same query code — see the measured deltas cited
-    * at the q38/q46/q71 pin sites. Not a production mode: consumers
-    * then recompute the pinned subtree per use. */
-  val DisableConf = "graft.checkpoint.disable"
-
-  private def disabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption(DisableConf).exists(_.toBoolean)
-
-  def pin(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (disabled(df)) return df
-    val wantReliable = spark.conf.getOption(ReliableConf).exists(_.toBoolean)
-    if (wantReliable) {
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        s"$ReliableConf=true needs sparkContext.setCheckpointDir(<fault-tolerant path>)")
-      df.checkpoint(eager = true)
-    } else df.localCheckpoint(eager = true)
-  }
+  def pin(df: DataFrame): DataFrame = checkpoint(df, eager = true)
 
   /** LAZY pin for strictly-sequential iterative chains (BPE): marks
     * the frame for local checkpointing but lets the NEXT action
@@ -70,16 +50,17 @@ object Materialize {
     * Unlike Dataset.persist, no CacheManager entry is created, so a
     * plan-identical frame in a DIFFERENT query can never silently read
     * this one's blocks (the bench rule: every query computes from its
-    * inputs). Honors the same reliable/disable switches as [[pin]]. */
-  def pinLazy(df: DataFrame): DataFrame = {
+    * inputs). Honors the same reliable switch as [[pin]]. */
+  def pinLazy(df: DataFrame): DataFrame = checkpoint(df, eager = false)
+
+  /** A local checkpoint, or a reliable one under [[ReliableConf]]. */
+  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
-    if (disabled(df)) return df
-    val wantReliable = spark.conf.getOption(ReliableConf).exists(_.toBoolean)
-    if (wantReliable) {
+    if (spark.conf.getOption(ReliableConf).exists(_.toBoolean)) {
       require(spark.sparkContext.getCheckpointDir.isDefined,
         s"$ReliableConf=true needs sparkContext.setCheckpointDir(<fault-tolerant path>)")
-      df.checkpoint(eager = false)
-    } else df.localCheckpoint(eager = false)
+      df.checkpoint(eager)
+    } else df.localCheckpoint(eager)
   }
 
   /** Data-adaptive partition count for pinned exchanges (guide §2.2:
@@ -106,11 +87,6 @@ object Materialize {
   def adaptivePinPartitions(df: DataFrame, expansion: Double = 4.0): Int = {
     val spark = df.sparkSession
     val cap = math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    // A/B instrumentation, like graft.checkpoint.disable: `false`
-    // restores the pre-r20 fixed spark.sql.shuffle.partitions count on
-    // unchanged query code, so the adaptive sizing is measurable
-    if (spark.conf.getOption("graft.pin.adaptive").exists(_ == "false"))
-      return cap
     var bytes = BigInt(0)
     var unknown = false
     df.queryExecution.analyzed.collectLeaves().foreach {
@@ -157,7 +133,6 @@ object Materialize {
     * producing exchange wrote. */
   def pinPartitionedBy(df: DataFrame, numPartitions: Int, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "pinPartitionedBy needs at least one key column")
-    if (disabled(df)) return df.repartition(numPartitions, keys.map(df.col): _*)
     val cp = pin(df.repartition(numPartitions, keys.map(df.col): _*))
     val (attrs, rdd) = org.apache.spark.sql.graftbridge.PartitionedRddBridge.checkpointedRdd(cp)
     val resolver = df.sparkSession.sessionState.analyzer.resolver

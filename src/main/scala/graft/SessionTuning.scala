@@ -3,12 +3,32 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-level performance conf shared by every entry point (Bench,
-  * Verify, the test session) — r19 optimization round, each line
-  * carries its measured justification. Everything here is
+  * Verify, the test session, the probe tool) — r19 optimization round,
+  * each line carries its measured justification. Everything here is
   * environment-overridable and changes HOW work executes, never what
   * any query computes.
   */
 object SessionTuning {
+
+  /** The one local session factory: `local[cpus]` with one shuffle
+    * partition per core, the typed-aggregate fallback threshold, UTC,
+    * no UI, the [[apply]] tuning, and WARN logging. The caller's `conf`
+    * pairs are applied last, so a site overrides any of these (the test
+    * session keeps 8 shuffle partitions on `local[4]`) and adds its own
+    * catalog or extensions conf. */
+  def local(cpus: Int, conf: (String, String)*): SparkSession = {
+    val base = apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      // typed-aggregate (minhash/simhash) groups per partition routinely
+      // exceed the 128-key default before spilling to sort-based agg
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+    val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Apply the shared tuning to a session builder.
     *

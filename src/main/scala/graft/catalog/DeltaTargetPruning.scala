@@ -115,14 +115,7 @@ case class DeltaTargetPruning(spark: SparkSession)
       case _ => false
     }
 
-  private def dbg(msg: => String): Unit = {
-    if (sys.env.contains("GRAFT_DEBUG_DPP")) {
-      // scalastyle:off println
-      println(s"[DeltaTargetPruning] $msg") // probe visibility (ProbeDpp2)
-      // scalastyle:on println
-    }
-    logDebug(msg)
-  }
+  private def dbg(msg: => String): Unit = logDebug(msg)
 
   private def pruneSide(
       side: LogicalPlan, build: LogicalPlan, cond: Expression): LogicalPlan = {

@@ -140,11 +140,7 @@ object TextOps {
     // bytes-adaptive sizing is kept for the aggregate-sized pins
     // (q38/q46/q64/q65/q71) where the same A/B measured it
     // neutral-to-better.
-    // graft.dedup.pinParts overrides for A/B probing (ProbeBpeFanout's
-    // pattern); the default IS the cluster budget per the A/B above
-    val pinParts = ex0.sparkSession.conf.getOption("graft.dedup.pinParts")
-      .map(_.toInt)
-      .getOrElse(ex0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val pinParts = ex0.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val ex = graft.Materialize.pinPartitionedBy(ex0, pinParts, Seq("h"))
     val freq = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // per-doc prefix = the p = n − ⌈t·n⌉ + 1 globally-rarest shingles,
@@ -2400,50 +2396,40 @@ s$r AS MATERIALIZED (SELECT doc_id, text, trim(replace(replace(' ' || replace(s,
     * rows and the fully-encoded corpus frame (doc_id, text, s). */
   private def bpeLearnApply(s: SparkSession, d: String, rounds: Int)
       : (Seq[org.apache.spark.sql.Row], DataFrame) = {
-    // Pin cadence (rounds between corpus materializations) — conf so
-    // the trade is A/B-measurable on unchanged query code (r19):
-    // cadence 3 re-derives up to 2 substitution layers inside every
-    // pair-count job (≈16 extra corpus passes over 10 rounds); cadence
-    // 1 materializes every round — 10 substitution passes total, the
-    // minimum a non-incremental trainer can do. Measured (sf0.1,
-    // interleaved cadences, min over runs): q76 4.51s@3 → 4.10s@1,
-    // q79 4.58s@3 → 4.07s@1; at 100 TB the pass count is the whole
-    // story (passes are O(corpus), actions are O(1)). The pin itself
-    // is LAZY (pinLazy): the rounds are strictly sequential, so the
-    // round's ONE pair-count job materializes the substituted corpus
-    // as a side effect of its own scan — substitution+count fuse into
-    // a single pass and the separate checkpoint action disappears.
-    val pinEvery = s.conf.getOption("graft.bpe.pinEvery").map(_.toInt).getOrElse(1)
-    // conf misuse fails loudly at read time, not with an
-    // ArithmeticException inside round `pinEvery` (r19 ADVICE)
-    require(pinEvery >= 1, s"graft.bpe.pinEvery must be >= 1, got $pinEvery")
+    // Pin cadence: the corpus is materialized every round. Cadence 3
+    // re-derives up to 2 substitution layers inside every pair-count
+    // job (≈16 extra corpus passes over 10 rounds); cadence 1 is 10
+    // substitution passes total, the minimum a non-incremental trainer
+    // can do. Measured (r19, sf0.1, interleaved cadences, min over
+    // runs): q76 4.51s@3 → 4.10s@1, q79 4.58s@3 → 4.07s@1; at 100 TB
+    // the pass count is the whole story (passes are O(corpus), actions
+    // are O(1)). The pin itself is LAZY (pinLazy): the rounds are
+    // strictly sequential, so the round's ONE pair-count job
+    // materializes the substituted corpus as a side effect of its own
+    // scan — substitution+count fuse into a single pass and the
+    // separate checkpoint action disappears.
     var cur = documents(s, d).select(col("doc_id"), col("text"), col("text").as("s"))
     // Fan the corpus out to the compute budget ONCE, before the loop
     // (guide §2.5 "input skew: one huge unsplittable file ...
     // repartition immediately after the read"): the bench fixtures are
     // single-row-group parquet, so the scan is ONE task and all ten
     // rounds of substitution+pair-count string work ran on one core
-    // (r20 ProbeJobStats: 22 single-task jobs, parallelism 0.6). The
+    // (r20 job stats: 22 single-task jobs, parallelism 0.6). The
     // checkpointed corpus inherits this layout, so every later round
     // keeps it. Deterministic (hash on doc_id, no round-robin), and
     // skipped entirely when the scan is already at least
     // budget-wide — at 100 TB this line never shuffles anything.
-    val fanout = s.conf.getOption("graft.bpe.fanout").map(_.toInt)
-      .getOrElse(s.sparkContext.defaultParallelism)
-    if (cur.rdd.getNumPartitions < fanout)
-      cur = cur.repartition(fanout, col("doc_id"))
+    cur = graft.Materialize.fanOutCompute(cur, "doc_id")
     val learned = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    // AQE OFF for the learn loop only (restored below): each round is
-    // one tiny fixed-shape shuffle (map-side-combined pair counts,
-    // vocab²-bounded, no skew for runtime handling to fix), and AQE
-    // turns it into TWO scheduled jobs per round (stage
+    // AQE OFF for the learn loop only (scoped, restored after): each
+    // round is one tiny fixed-shape shuffle (map-side-combined pair
+    // counts, vocab²-bounded, no skew for runtime handling to fix), and
+    // AQE turns it into TWO scheduled jobs per round (stage
     // materialization + final) — a pure per-round barrier. Measured
-    // (r20 ProbeBpeFanout, interleaved, min of 3): fanout=32 AQE-on
-    // 1.424 s vs AQE-off 1.240 s; the fan-out scan itself measured
+    // (r20, interleaved, min of 3): fanout=32 AQE-on 1.424 s vs
+    // AQE-off 1.240 s; the fan-out scan itself measured
     // 32 ≥ 16 ≥ 8 ≫ 1 (3.26 s), so the core-budget width stands.
-    val aqeBefore = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    graft.catalog.SessionConf.withConf(s, "spark.sql.adaptive.enabled", "false") {
     for (step <- 1 to rounds) {
       val toks = cur.select(split(col("s"), " ").as("t")).filter(size(col("t")) >= 2)
       val pairs = toks.select(
@@ -2463,21 +2449,21 @@ s$r AS MATERIALIZED (SELECT doc_id, text, trim(replace(replace(' ' || replace(s,
           trim(replace(replace(
             concat(lit(" "), replace(col("s"), lit(" "), lit("  ")), lit(" ")),
             lit(target), lit(repl)), lit("  "), lit(" "))).as("s"))
-        // Checkpoint the corpus string every 3 rounds: without the cut,
+        // Checkpoint the corpus string every round: without the cut,
         // round r's pair count re-derives ALL r-1 substitutions from
         // the raw scan (Σ = 55 passes over 10 rounds — the lineage is
-        // linear so ReuseExchange can't help across jobs). The pin
-        // bounds recompute depth at ≤3 passes per round.
-        // Measured (sf0.1, ProbeBpe A/B via graft.checkpoint.disable,
-        // min of 3): q76 5.72s → 4.23s, q79 6.49s → 4.59s — the
-        // residual is the string work itself, paid once per round
-        // instead of once per remaining round. At 100 TB this is what
-        // keeps a trainer O(rounds · corpus), not O(rounds² · corpus).
-        if (step % pinEvery == 0 && step < rounds)
+        // linear so ReuseExchange can't help across jobs).
+        // Measured (sf0.1, A/B via graft.checkpoint.disable with the
+        // pin every 3 rounds, min of 3): q76 5.72s → 4.23s, q79 6.49s
+        // → 4.59s — the residual is the string work itself, paid once
+        // per round instead of once per remaining round. At 100 TB
+        // this is what keeps a trainer O(rounds · corpus), not
+        // O(rounds² · corpus).
+        if (step < rounds)
           cur = graft.Materialize.pinLazy(cur)
       }
     }
-    } finally s.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    }
     // the returned frame executes LATER, under the caller's restored
     // AQE setting — only the loop's per-round collects ran without it
     (learned.toSeq, cur)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -11,19 +12,34 @@ class MaterializeSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
   test("default pin localCheckpoints; reliable mode demands and uses a checkpoint dir") {
-    Materialize.pin(spark.range(100).toDF("id")).count() shouldBe 100
+    // the eager pin and the lazy one the BPE loop uses share one
+    // checkpoint path
+    val pins = Seq[(String, DataFrame => DataFrame)](
+      "pin" -> Materialize.pin, "pinLazy" -> Materialize.pinLazy)
+    pins.foreach { case (name, p) =>
+      withClue(name) { p(spark.range(100).toDF("id")).count() shouldBe 100 }
+    }
 
     spark.conf.set(Materialize.ReliableConf, "true")
     try {
-      if (spark.sparkContext.getCheckpointDir.isEmpty) {
+      if (spark.sparkContext.getCheckpointDir.isEmpty) pins.foreach { case (name, p) =>
         val e = intercept[IllegalArgumentException] {
-          Materialize.pin(spark.range(10).toDF("id"))
+          p(spark.range(10).toDF("id"))
         }
-        e.getMessage should include("setCheckpointDir")
+        withClue(name) { e.getMessage should include("setCheckpointDir") }
       }
       spark.sparkContext.setCheckpointDir(
         java.nio.file.Files.createTempDirectory("graft-reliable-ckpt-").toString)
-      Materialize.pin(spark.range(50).toDF("id")).count() shouldBe 50
+      val ckptDir = java.nio.file.Paths.get(
+        new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+      pins.foreach { case (name, p) =>
+        val before = catalog.Fs.walk(ckptDir).size
+        withClue(name) {
+          p(spark.range(50).toDF("id")).count() shouldBe 50
+          // the reliable checkpoint wrote its blocks to the dir
+          catalog.Fs.walk(ckptDir).size should be > before
+        }
+      }
       // a pinned hot path runs end-to-end in reliable mode with
       // unchanged results
       val reliable = graft.queries.TextOps.q38.run(spark, "/root/testdata/sf0.001").collect()

@@ -11,16 +11,11 @@ object TestSpark {
   lazy val warehouse: String =
     Files.createTempDirectory("graft-warehouse-").toString
 
-  lazy val spark: SparkSession = graft.SessionTuning(SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.catalog.lakehouse", "graft.catalog.LakehouseCatalog")
-    .config("spark.sql.catalog.lakehouse.warehouse", warehouse)
+  lazy val spark: SparkSession = SessionTuning.local(4,
+    "spark.app.name" -> "graft-test",
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.catalog.lakehouse" -> "graft.catalog.LakehouseCatalog",
+    "spark.sql.catalog.lakehouse.warehouse" -> warehouse,
     // static conf — must be present when the context is built
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions"))
-    .getOrCreate()
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions")
 }
