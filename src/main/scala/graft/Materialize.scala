@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Eager materialization pin for iterative and DML hot paths (q38's
   * prefix sums, connected components, merge-on-read UPDATE's match
@@ -37,30 +38,33 @@ object Materialize {
 
   val ReliableConf = "graft.checkpoint.reliable"
 
-  def pin(df: DataFrame): DataFrame = checkpoint(df, eager = true)
+  def pin(df: DataFrame): DataFrame =
+    if (reliable(df.sparkSession)) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 
-  /** LAZY pin for strictly-sequential iterative chains (BPE): marks
-    * the frame for local checkpointing but lets the NEXT action
-    * materialize it as a side effect of its own pass — one job per
-    * iteration instead of two, and the producer's transformation fuses
-    * into the consumer's pass (substitute+count in one scan). Only
-    * safe when consumers run in SEQUENTIAL jobs: two branches of a
-    * single job would race the materialization and can compute the
-    * subtree twice — diamond-shaped consumers keep the EAGER [[pin]].
-    * Unlike Dataset.persist, no CacheManager entry is created, so a
-    * plan-identical frame in a DIFFERENT query can never silently read
-    * this one's blocks (the bench rule: every query computes from its
-    * inputs). Honors the same reliable switch as [[pin]]. */
-  def pinLazy(df: DataFrame): DataFrame = checkpoint(df, eager = false)
+  /** LAZY pin for strictly-sequential iterative RDD chains (the BPE
+    * rounds): marks `rdd` for checkpointing and lets the NEXT job that
+    * computes it materialize it as a side effect of its own pass — one
+    * job per iteration instead of two, and the producer's map fuses
+    * into the consumer's scan. Only safe when consumers run in
+    * SEQUENTIAL jobs: two branches of one job would race the
+    * materialization. No CacheManager entry is created, so no other
+    * query can read these blocks. Same reliable switch as [[pin]]; a
+    * reliable checkpoint writes the RDD after that job, recomputing it
+    * from its (pinned) parent, as `Dataset.checkpoint(eager = false)`
+    * does. */
+  def pinRdd[T](spark: SparkSession, rdd: RDD[T]): RDD[T] = {
+    if (reliable(spark)) rdd.checkpoint() else rdd.localCheckpoint()
+    rdd
+  }
 
-  /** A local checkpoint, or a reliable one under [[ReliableConf]]. */
-  private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    if (spark.conf.getOption(ReliableConf).exists(_.toBoolean)) {
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        s"$ReliableConf=true needs sparkContext.setCheckpointDir(<fault-tolerant path>)")
-      df.checkpoint(eager)
-    } else df.localCheckpoint(eager)
+  /** Whether pins checkpoint reliably ([[ReliableConf]]); fails fast
+    * when no checkpoint dir is set. */
+  private def reliable(spark: SparkSession): Boolean = {
+    val on = spark.conf.getOption(ReliableConf).exists(_.toBoolean)
+    if (on) require(spark.sparkContext.getCheckpointDir.isDefined,
+      s"$ReliableConf=true needs sparkContext.setCheckpointDir(<fault-tolerant path>)")
+    on
   }
 
   /** Data-adaptive partition count for pinned exchanges (guide §2.2:

@@ -276,11 +276,19 @@ case class VecNormSq(child: Expression)
 /** Registers graft's native functions in a session's function registry
   * so they are callable from SQL and `expr(...)` — the non-extension
   * equivalent of `SparkSessionExtensions.injectFunction`, usable on an
-  * already-built session. Idempotent.
+  * already-built session. Idempotent: a session whose registry already
+  * holds every name (from an earlier call, or from [[GraftExtensions]])
+  * is left untouched.
   */
 object GraftFunctions {
+  val Names: Seq[String] = Seq("vec_dot", "vec_norm_sq", "vec_dot_d", "sq_dist_d",
+    "simhash_agg", "minhash_agg", "minhash_bands", "prefix_min_agg", "space_saving",
+    "bloom_agg", "bloom_contains", "ngram_gen")
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
+    if (Names.forall(n => reg.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))) return
     reg.createOrReplaceTempFunction("vec_dot",
       { args: Seq[Expression] => VecDot(args(0), args(1)) }, "built-in")
     reg.createOrReplaceTempFunction("vec_norm_sq",

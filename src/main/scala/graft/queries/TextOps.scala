@@ -2375,104 +2375,28 @@ s$r AS MATERIALIZED (SELECT doc_id, text, trim(replace(replace(' ' || replace(s,
     * a batch, and inherently iterative: round r's pair counts depend on
     * round r−1's merges.
     *
-    * Scale shape per round: ONE map-side-combined pair count (pinned
-    * token-array projection so the adjacent-pair lambda reads a cheap
-    * attribute, then explode + groupBy(pair)) and a ONE-ROW collect of
-    * the argmax under the deterministic (freq DESC, pair ASC) tiebreak
-    * — the only driver materialization, bounded by construction. The
-    * corpus-wide merge is pure string expressions inside codegen, no
-    * UDF: doubling the token separators first makes a single replace()
-    * call merge every non-overlapping occurrence greedy-left — exactly
+    * Scale shape ([[Bpe.learnApply]]): the corpus is read once and
+    * fanned out on doc_id; ONE `treeAggregate` of per-partition
+    * histograms builds the full pair-count map on the driver. Each
+    * round then takes the argmax (freq DESC, pair ASC) on the driver
+    * and runs ONE single-stage job that merges the winning pair
+    * corpus-wide, pins the new corpus, and returns the pair-count delta
+    * of the documents whose text changed (−1 per old pair, +1 per new
+    * one), again merged by `treeAggregate`. No shuffle runs after the
+    * first pass and no round plans a query. The driver holds one count
+    * per distinct pair; per round the cost is one scan of the pinned
+    * corpus plus the affected documents' pairs. At cluster partition
+    * counts `treeAggregate` adds a reduction level by itself. The merge
+    * doubles the token separators so that one left-to-right replace
+    * merges every non-overlapping occurrence greedy-left — exactly
     * BPE's merge semantics (`a a a` merges once, not twice) — then
-    * collapsing the doubles restores the layout. Merged symbols join
-    * with '§' (verified absent from the corpus). The 10-round lineage
-    * re-derives prior substitutions per pass (total work 55 substitution
-    * passes); a production trainer would checkpoint the corpus string
-    * every few rounds — the round structure is unchanged.
+    * collapses the doubles. Merged symbols join with '§' (verified
+    * absent from the corpus).
     */
-  /** The shared BPE learn+apply loop (see q76's scaladoc for the scale
-    * shape): `rounds` iterations of pair-count → one-row argmax collect
-    * → corpus-wide codegen'd substitution. Returns the learned merge
-    * rows and the fully-encoded corpus frame (doc_id, text, s). */
-  private def bpeLearnApply(s: SparkSession, d: String, rounds: Int)
-      : (Seq[org.apache.spark.sql.Row], DataFrame) = {
-    // Pin cadence: the corpus is materialized every round. Cadence 3
-    // re-derives up to 2 substitution layers inside every pair-count
-    // job (≈16 extra corpus passes over 10 rounds); cadence 1 is 10
-    // substitution passes total, the minimum a non-incremental trainer
-    // can do. Measured (r19, sf0.1, interleaved cadences, min over
-    // runs): q76 4.51s@3 → 4.10s@1, q79 4.58s@3 → 4.07s@1; at 100 TB
-    // the pass count is the whole story (passes are O(corpus), actions
-    // are O(1)). The pin itself is LAZY (pinLazy): the rounds are
-    // strictly sequential, so the round's ONE pair-count job
-    // materializes the substituted corpus as a side effect of its own
-    // scan — substitution+count fuse into a single pass and the
-    // separate checkpoint action disappears.
-    var cur = documents(s, d).select(col("doc_id"), col("text"), col("text").as("s"))
-    // Fan the corpus out to the compute budget ONCE, before the loop
-    // (guide §2.5 "input skew: one huge unsplittable file ...
-    // repartition immediately after the read"): the bench fixtures are
-    // single-row-group parquet, so the scan is ONE task and all ten
-    // rounds of substitution+pair-count string work ran on one core
-    // (r20 job stats: 22 single-task jobs, parallelism 0.6). The
-    // checkpointed corpus inherits this layout, so every later round
-    // keeps it. Deterministic (hash on doc_id, no round-robin), and
-    // skipped entirely when the scan is already at least
-    // budget-wide — at 100 TB this line never shuffles anything.
-    cur = graft.Materialize.fanOutCompute(cur, "doc_id")
-    val learned = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    // AQE OFF for the learn loop only (scoped, restored after): each
-    // round is one tiny fixed-shape shuffle (map-side-combined pair
-    // counts, vocab²-bounded, no skew for runtime handling to fix), and
-    // AQE turns it into TWO scheduled jobs per round (stage
-    // materialization + final) — a pure per-round barrier. Measured
-    // (r20, interleaved, min of 3): fanout=32 AQE-on 1.424 s vs
-    // AQE-off 1.240 s; the fan-out scan itself measured
-    // 32 ≥ 16 ≥ 8 ≫ 1 (3.26 s), so the core-budget width stands.
-    graft.catalog.SessionConf.withConf(s, "spark.sql.adaptive.enabled", "false") {
-    for (step <- 1 to rounds) {
-      val toks = cur.select(split(col("s"), " ").as("t")).filter(size(col("t")) >= 2)
-      val pairs = toks.select(
-        explode(transform(sequence(lit(1), size(col("t")) - 1),
-          i => concat(element_at(col("t"), i), lit(" "),
-            element_at(col("t"), i + 1)))).as("p"))
-      // bounded collect: exactly one row — the round's winning pair
-      val top = pairs.groupBy(col("p")).agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("p").asc).limit(1).collect()
-      if (top.nonEmpty) {
-        val p = top(0).getString(0)
-        val Array(lhs, rhs) = p.split(" ", 2)
-        learned += org.apache.spark.sql.Row(step, lhs, rhs, top(0).getLong(1))
-        val target = " " + p.replace(" ", "  ") + " "
-        val repl = " " + p.replace(" ", "§") + " "
-        cur = cur.select(col("doc_id"), col("text"),
-          trim(replace(replace(
-            concat(lit(" "), replace(col("s"), lit(" "), lit("  ")), lit(" ")),
-            lit(target), lit(repl)), lit("  "), lit(" "))).as("s"))
-        // Checkpoint the corpus string every round: without the cut,
-        // round r's pair count re-derives ALL r-1 substitutions from
-        // the raw scan (Σ = 55 passes over 10 rounds — the lineage is
-        // linear so ReuseExchange can't help across jobs).
-        // Measured (sf0.1, A/B via graft.checkpoint.disable with the
-        // pin every 3 rounds, min of 3): q76 5.72s → 4.23s, q79 6.49s
-        // → 4.59s — the residual is the string work itself, paid once
-        // per round instead of once per remaining round. At 100 TB
-        // this is what keeps a trainer O(rounds · corpus), not
-        // O(rounds² · corpus).
-        if (step < rounds)
-          cur = graft.Materialize.pinLazy(cur)
-      }
-    }
-    }
-    // the returned frame executes LATER, under the caller's restored
-    // AQE setting — only the loop's per-round collects ran without it
-    (learned.toSeq, cur)
-  }
-
   val q76 = Q(
     "q76_bpe_merges",
     (s, d) => {
-      val (learned, _) = bpeLearnApply(s, d, 10)
+      val (learned, _) = Bpe.learnApply(s, documents(s, d), 10)
       val sch = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("step",
           org.apache.spark.sql.types.IntegerType, nullable = false),
@@ -2482,10 +2406,10 @@ s$r AS MATERIALIZED (SELECT doc_id, text, trim(replace(replace(' ' || replace(s,
           org.apache.spark.sql.types.StringType, nullable = true),
         org.apache.spark.sql.types.StructField("freq",
           org.apache.spark.sql.types.LongType, nullable = false)))
+      // rows are built in step order, so the local relation needs no sort
       s.createDataFrame(
         new java.util.ArrayList(scala.jdk.CollectionConverters
           .SeqHasAsJava(learned).asJava), sch)
-        .orderBy(col("step"))
     },
     Some(bpeOracle))
 
@@ -2495,10 +2419,11 @@ s$r AS MATERIALIZED (SELECT doc_id, text, trim(replace(replace(' ' || replace(s,
     * encoding, the compression ratio, and the encoded text's identity
     * (merged symbols joined with '§'). This is the number a tokenizer
     * change is judged by — corpus tokens saved — computed corpus-wide.
-    * Scale shape is q76's: per round one map-side-combined pair count
-    * plus a ONE-ROW argmax collect, substitutions are pure codegen'd
-    * string expressions; the final per-doc accounting is row-local
-    * (two splits + md5), no joins, no windows. */
+    * Scale shape is q76's: one pair count over the corpus, then per
+    * round a driver-side argmax and one shuffle-free job returning the
+    * affected documents' pair-count delta; the driver holds one count
+    * per distinct pair. The final per-doc accounting is row-local (two
+    * splits + md5), no joins, no windows. */
   private val bpeEncodeOracle: String = {
     val rounds = 10
     val sb = bpeChain(rounds, rounds)
@@ -2516,7 +2441,7 @@ FROM s$rounds ORDER BY doc_id""")
   val q79 = Q(
     "q79_bpe_encode",
     (s, d) => {
-      val (_, enc) = bpeLearnApply(s, d, 10)
+      val (_, enc) = Bpe.learnApply(s, documents(s, d), 10)
       enc.select(col("doc_id"),
         size(split(col("text"), " ")).cast(LongType).as("n_before"),
         size(split(col("s"), " ")).cast(LongType).as("n_after"),

@@ -60,4 +60,18 @@ class ExtensionsSpec extends AnyFunSuite with Matchers {
     spark.sql("SELECT size(prefix_min_agg(df, h, n, 0.8)) FROM ext_pm")
       .collect()(0).getInt(0) should be >= 1
   }
+
+  test("register leaves a session that already has every function untouched") {
+    // the extension installed all of them; per-query register calls
+    // must not replace (and log a warning for) each one again
+    val spark = TestSpark.spark.newSession()
+    val reg = spark.sessionState.functionRegistry
+    def builders = functions.GraftFunctions.Names.map(n =>
+      reg.lookupFunctionBuilder(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    val installed = builders
+    installed.foreach(_ shouldBe defined)
+    functions.GraftFunctions.register(spark)
+    functions.GraftFunctions.register(spark)
+    builders.zip(installed).foreach { case (now, before) => (now.get eq before.get) shouldBe true }
+  }
 }

@@ -12,12 +12,13 @@ class MaterializeSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
 
   test("default pin localCheckpoints; reliable mode demands and uses a checkpoint dir") {
-    // the eager pin and the lazy one the BPE loop uses share one
-    // checkpoint path
-    val pins = Seq[(String, DataFrame => DataFrame)](
-      "pin" -> Materialize.pin, "pinLazy" -> Materialize.pinLazy)
+    // the eager frame pin and the lazy RDD pin the BPE loop uses share
+    // one reliable/local branch; each input returns its pinned row count
+    val pins = Seq[(String, DataFrame => Long)](
+      "pin" -> (df => Materialize.pin(df).count()),
+      "pinRdd" -> (df => Materialize.pinRdd(spark, df.rdd).count()))
     pins.foreach { case (name, p) =>
-      withClue(name) { p(spark.range(100).toDF("id")).count() shouldBe 100 }
+      withClue(name) { p(spark.range(100).toDF("id")) shouldBe 100 }
     }
 
     spark.conf.set(Materialize.ReliableConf, "true")
@@ -35,7 +36,7 @@ class MaterializeSpec extends AnyFunSuite with Matchers {
       pins.foreach { case (name, p) =>
         val before = catalog.Fs.walk(ckptDir).size
         withClue(name) {
-          p(spark.range(50).toDF("id")).count() shouldBe 50
+          p(spark.range(50).toDF("id")) shouldBe 50
           // the reliable checkpoint wrote its blocks to the dir
           catalog.Fs.walk(ckptDir).size should be > before
         }

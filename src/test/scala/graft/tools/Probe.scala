@@ -16,7 +16,7 @@ import graft.queries.Q
   * {{{
   * sbt "Test/runMain graft.tools.Probe plan q01_scan"
   * sbt "Test/runMain graft.tools.Probe jobs q76_bpe_merges"
-  * sbt "Test/runMain graft.tools.Probe ab spark.sql.adaptive.enabled true,false q76"
+  * sbt "Test/runMain graft.tools.Probe ab spark.sql.adaptive.enabled true,false q92"
   * }}}
   *
   *  - `plan`: a census line (rows, seconds, scans, join kinds,
@@ -25,9 +25,10 @@ import graft.queries.Q
   *    review checks) and the final adaptive plan (whether stage reuse
   *    actually deduped repeated subtrees).
   *  - `jobs`: one warm-up and one measured run per query under a
-  *    listener: wall, jobs, stages, tasks, summed task time and its
-  *    ratio to wall. Wall far above task time / parallelism means the
-  *    query is bound by job scheduling and planning, not compute.
+  *    listener: wall, jobs, stages, tasks, shuffle bytes written,
+  *    summed task time and its ratio to wall. Wall far above task
+  *    time / parallelism means the query is bound by job scheduling
+  *    and planning, not compute.
   *    `SPARK_GRAFT_SAMPLE=1` also histograms the deepest engine frame
   *    of every running executor thread every 25 ms and prints it at
   *    exit.
@@ -98,12 +99,16 @@ object Probe {
   private def jobs(spark: SparkSession, sfDir: String, qs: Seq[Q]): Unit = {
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskNanos = new AtomicLong
+    val shuffleBytes = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
-        Option(t.taskMetrics).foreach(m => taskNanos.addAndGet(m.executorRunTime * 1000000L))
+        Option(t.taskMetrics).foreach { m =>
+          taskNanos.addAndGet(m.executorRunTime * 1000000L)
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        }
       }
     })
     // in-process frame sampler: finds the hot method without external
@@ -143,19 +148,20 @@ object Probe {
       "lineitem", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").count()
     }
-    println(f"${"query"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"taskT_s"}%8s ${"par"}%6s")
+    println(f"${"query"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"shufW_B"}%10s ${"taskT_s"}%8s ${"par"}%6s")
     var rows = List.empty[String]
     qs.foreach { q =>
       try {
         q.run(spark, sfDir).count(); releasePins(spark) // warm-up
         // settle listener events from the warm-up before zeroing
         Thread.sleep(150)
-        jobs.set(0); stages.set(0); tasks.set(0); taskNanos.set(0)
+        jobs.set(0); stages.set(0); tasks.set(0); taskNanos.set(0); shuffleBytes.set(0)
         val wall = seconds { q.run(spark, sfDir).count() }
         releasePins(spark)
         Thread.sleep(150)
         val tt = taskNanos.get / 1e9
-        val line = f"${q.name}%-28s $wall%8.3f ${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d $tt%8.3f ${tt / wall}%6.2f"
+        val line = f"${q.name}%-28s $wall%8.3f ${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d " +
+          f"${shuffleBytes.get}%10d $tt%8.3f ${tt / wall}%6.2f"
         println(line); rows ::= line
       } catch {
         case e: Throwable => println(s"${q.name} FAILED ${e.getClass.getSimpleName}")
