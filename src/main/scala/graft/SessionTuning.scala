@@ -55,9 +55,21 @@ object SessionTuning {
     *    environment always wins (Spark reads it before
     *    `spark.local.dir`), and a host without a writable /dev/shm
     *    keeps the default.
+    *
+    * 3. `spark.sql.optimizer.excludedRules=InferFiltersFromGenerate`:
+    *    the rule turns explode(f(x)) into a pushed-down
+    *    `size(f(x))>0 AND isnotnull(f(x))` filter, duplicating the full
+    *    generator expression BELOW any repartition — for our shingle
+    *    pipelines that re-evaluated O(tokens²) work per row on the
+    *    single-task scan side and dominated the whole query. The
+    *    inferred filter only skips empty arrays, which the generator
+    *    drops anyway. Set once here, at session build, so table loads
+    *    never write the session conf (a caller's own value survives).
     */
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val b1 = b.config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     val shm = new java.io.File("/dev/shm")
     // capacity gate (r19 ADVICE): tmpfs is RAM — a larger-than-expected
     // shuffle (a bigger SF than the bench fixtures) filling /dev/shm

@@ -58,14 +58,6 @@ object Tables {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // InferFiltersFromGenerate turns explode(f(x)) into a pushed-down
-    // `size(f(x))>0 AND isnotnull(f(x))` filter, duplicating the full
-    // generator expression BELOW any repartition — for our shingle
-    // pipelines that re-evaluated O(tokens²) work per row on the
-    // single-task scan side and dominated the whole query. The inferred
-    // filter only skips empty arrays, which the generator drops anyway.
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     val path = s"$dir/$name.parquet"
     val f = new java.io.File(path)
     // only single-file fixtures are memoizable this way (a directory's

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: registers graft's native functions at
   * session build time —
@@ -46,79 +46,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule { session =>
       graft.catalog.ConstraintOptimization(session)
     }
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => VecDot(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_norm_sq"),
-      new ExpressionInfo(classOf[VecNormSq].getName, "vec_norm_sq"),
-      (args: Seq[Expression]) => VecNormSq(args(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot_d"),
-      new ExpressionInfo(classOf[VecDotFD].getName, "vec_dot_d"),
-      (args: Seq[Expression]) => VecDotFD(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("sq_dist_d"),
-      new ExpressionInfo(classOf[SqDistFD].getName, "sq_dist_d"),
-      (args: Seq[Expression]) => SqDistFD(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_agg"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "simhash_agg"),
-      (args: Seq[Expression]) => SimHashAgg(args(0))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_agg"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_agg"),
-      (args: Seq[Expression]) => {
-        val k = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(128)
-        MinHashAgg(args(0), k)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_bands"),
-      (args: Seq[Expression]) => {
-        val k = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(128)
-        val r = args.lift(2).map(_.eval(null).toString.toInt).getOrElse(4)
-        MinHashAgg(args(0), k, bandRows = r)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("space_saving"),
-      new ExpressionInfo(classOf[SpaceSavingAgg].getName, "space_saving"),
-      (args: Seq[Expression]) => {
-        val m = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(4096)
-        SpaceSavingAgg(args(0), m)
-      }))
-    // parity with GraftFunctions.register: the extension path must
-    // resolve every function the per-session path does, or SQL that
-    // works in one deployment fails with UNRESOLVED_ROUTINE in the other
-    ext.injectFunction((
-      new FunctionIdentifier("prefix_min_agg"),
-      new ExpressionInfo(classOf[PrefixMinAgg].getName, "prefix_min_agg"),
-      (args: Seq[Expression]) =>
-        PrefixMinAgg(args(0), args(1), args(2), args(3).eval(null).toString.toDouble)))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      (args: Seq[Expression]) => {
-        val est = args.lift(1).map(_.eval(null).toString.toLong).getOrElse(1000000L)
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          args(0), est)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_contains"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_gen"),
-      new ExpressionInfo(classOf[NGramHashGen].getName, "ngram_gen"),
-      (args: Seq[Expression]) => {
-        val n = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(3)
-        NGramHashGen(args(0), n)
-      }))
+    GraftFunctions.Table.foreach { case (name, cls, builder) =>
+      ext.injectFunction(
+        (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
   }
 }

@@ -273,73 +273,56 @@ case class VecNormSq(child: Expression)
     copy(child = newChild)
 }
 
-/** Registers graft's native functions in a session's function registry
-  * so they are callable from SQL and `expr(...)` — the non-extension
-  * equivalent of `SparkSessionExtensions.injectFunction`, usable on an
-  * already-built session. Idempotent: a session whose registry already
-  * holds every name (from an earlier call, or from [[GraftExtensions]])
-  * is left untouched.
+/** graft's native functions, one table read by both install paths:
+  * [[GraftExtensions]] injects every entry at session build time, and
+  * [[register]] installs them on an already-built session (the
+  * non-extension equivalent of `SparkSessionExtensions.injectFunction`).
+  * Each entry is (SQL name, expression class, builder).
   */
 object GraftFunctions {
-  val Names: Seq[String] = Seq("vec_dot", "vec_norm_sq", "vec_dot_d", "sq_dist_d",
-    "simhash_agg", "minhash_agg", "minhash_bands", "prefix_min_agg", "space_saving",
-    "bloom_agg", "bloom_contains", "ngram_gen")
+  import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain => BloomContains}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate => BloomAgg}
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (Names.forall(n => reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))) return
-    reg.createOrReplaceTempFunction("vec_dot",
-      { args: Seq[Expression] => VecDot(args(0), args(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("vec_norm_sq",
-      { args: Seq[Expression] => VecNormSq(args(0)) }, "built-in")
-    reg.createOrReplaceTempFunction("vec_dot_d",
-      { args: Seq[Expression] => VecDotFD(args(0), args(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("sq_dist_d",
-      { args: Seq[Expression] => SqDistFD(args(0), args(1)) }, "built-in")
-    reg.createOrReplaceTempFunction("simhash_agg",
-      { args: Seq[Expression] => SimHashAgg(args(0)) }, "built-in")
-    reg.createOrReplaceTempFunction("minhash_agg",
-      { args: Seq[Expression] =>
-        val k = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(128)
-        MinHashAgg(args(0), k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      { args: Seq[Expression] =>
-        val k = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(128)
-        val r = args.lift(2).map(_.eval(null).toString.toInt).getOrElse(4)
-        MinHashAgg(args(0), k, bandRows = r)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("prefix_min_agg",
-      { args: Seq[Expression] =>
-        PrefixMinAgg(args(0), args(1), args(2), args(3).eval(null).toString.toDouble)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("space_saving",
-      { args: Seq[Expression] =>
-        val m = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(4096)
-        SpaceSavingAgg(args(0), m)
-      }, "built-in")
+  private def intArg(args: Seq[Expression], i: Int, default: Int): Int =
+    args.lift(i).map(_.eval(null).toString.toInt).getOrElse(default)
+
+  val Table: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VecDot], args => VecDot(args(0), args(1))),
+    ("vec_norm_sq", classOf[VecNormSq], args => VecNormSq(args(0))),
+    ("vec_dot_d", classOf[VecDotFD], args => VecDotFD(args(0), args(1))),
+    ("sq_dist_d", classOf[SqDistFD], args => SqDistFD(args(0), args(1))),
+    ("simhash_agg", classOf[SimHashAgg], args => SimHashAgg(args(0))),
+    ("minhash_agg", classOf[MinHashAgg], args => MinHashAgg(args(0), intArg(args, 1, 128))),
+    ("minhash_bands", classOf[MinHashAgg], args =>
+      MinHashAgg(args(0), intArg(args, 1, 128), bandRows = intArg(args, 2, 4))),
+    ("prefix_min_agg", classOf[PrefixMinAgg], args =>
+      PrefixMinAgg(args(0), args(1), args(2), args(3).eval(null).toString.toDouble)),
+    ("space_saving", classOf[SpaceSavingAgg], args =>
+      SpaceSavingAgg(args(0), intArg(args, 1, 4096))),
     // Spark's own runtime-filter bloom pair (public catalyst classes),
     // surfaced as callable functions: bloom_agg(longCol[, estItems])
     // builds the serialized filter, bloom_contains(bloomBinary, longCol)
     // probes it. The probe side requires a FOLDABLE bloom (literal) —
     // same contract as InjectRuntimeFilter's materialized subquery.
-    reg.createOrReplaceTempFunction("bloom_agg",
-      { args: Seq[Expression] =>
-        val est = args.lift(1).map(_.eval(null).toString.toLong).getOrElse(1000000L)
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          args(0), est)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("bloom_contains",
-      { args: Seq[Expression] =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(args(0), args(1))
-      }, "built-in")
+    ("bloom_agg", classOf[BloomAgg], args =>
+      new BloomAgg(args(0),
+        args.lift(1).map(_.eval(null).toString.toLong).getOrElse(1000000L))),
+    ("bloom_contains", classOf[BloomContains], args => BloomContains(args(0), args(1))),
     // UDTF surface: LATERAL VIEW ngram_gen(token_hashes, n) — streaming
     // distinct shingle hashes without materializing the shingle array
-    reg.createOrReplaceTempFunction("ngram_gen",
-      { args: Seq[Expression] =>
-        val n = args.lift(1).map(_.eval(null).toString.toInt).getOrElse(3)
-        NGramHashGen(args(0), n)
-      }, "built-in")
+    ("ngram_gen", classOf[NGramHashGen], args => NGramHashGen(args(0), intArg(args, 1, 3))))
+
+  val Names: Seq[String] = Table.map(_._1)
+
+  /** Idempotent: a session whose registry already holds every name
+    * (from an earlier call, or from [[GraftExtensions]]) is left
+    * untouched. */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    if (Names.forall(n => reg.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))) return
+    Table.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

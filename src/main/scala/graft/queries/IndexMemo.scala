@@ -4,40 +4,21 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-corpus lazily-built private index catalog shared by the query
   * suites (keyword postings in [[TextOps]], IVF-PQ in [[VectorOps]]):
-  * one warehouse per JVM plus a JVM-global build memo keyed by corpus
-  * dir, so real usage amortizes the build across every query and
+  * a [[ScratchCatalog]] warehouse plus a JVM-global build memo keyed by
+  * corpus dir, so real usage amortizes the build across every query and
   * repeated bench samples measure the PROBE — the per-query cost at
-  * 100 TB — not the one-time build.
-  *
-  * Table names are SQL-safe per corpus dir. Sanitizing alone is NOT
-  * collision-free (`/tmp/x-1` and `/tmp/x_1` both sanitize to
-  * `tmp_x_1`, and the JVM-global memo would then serve one corpus's
-  * index for the other — silently wrong rows), so a digest of the RAW
-  * path plus its length disambiguates. */
+  * 100 TB — not the one-time build. Table names are
+  * [[ScratchCatalog.nameFor]]'s collision-free names. */
 private[queries] final class IndexMemo(catalog: String, tablePrefix: String) {
   private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  // one warehouse per JVM, shared by every session that registers the
-  // catalog — the build memo is JVM-global, so a second session must
-  // resolve the same physical tables
-  private lazy val warehouse: String =
-    java.nio.file.Files.createTempDirectory(s"graft-$catalog-").toString
 
-  def tableFor(d: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${tablePrefix}_${d.replaceAll("[^A-Za-z0-9]", "_")}_${d.length}_$digest"
-  }
+  def tableFor(d: String): String = ScratchCatalog.nameFor(tablePrefix, d)
 
-  /** Run `build(tableName)` once per corpus dir per JVM. Catalog
-    * registration is PER-SESSION while the memo is JVM-global, so the
-    * conf is (re)checked on every call — a second session in the same
-    * JVM must still see the catalog. */
+  /** Run `build(tableName)` once per corpus dir per JVM, with the
+    * catalog registered on `s`. */
   def ensure(s: SparkSession, d: String)(build: String => Unit): Unit =
     built.synchronized {
-      if (s.conf.getOption(s"spark.sql.catalog.$catalog").isEmpty) {
-        s.conf.set(s"spark.sql.catalog.$catalog", "graft.catalog.LakehouseCatalog")
-        s.conf.set(s"spark.sql.catalog.$catalog.warehouse", warehouse)
-      }
+      ScratchCatalog.register(s, catalog)
       if (!built.contains(d)) {
         build(tableFor(d))
         built.add(d)

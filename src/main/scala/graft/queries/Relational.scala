@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, StructField, StructType}
 import graft.Tables._
+import graft.queries.ScratchCatalog.{Fixture, Fixtures, cachedFixture, nameFor, withRelyLock}
 
 /** One declared query: the Spark implementation plus (when the semantics
   * are ANSI-SQL-expressible) the equivalent DuckDB oracle SQL the driver
@@ -1009,7 +1010,7 @@ object Relational {
     "q52_csv_roundtrip",
     (s, d) => {
       val src = orders(s, d)
-      val out = s"/tmp/graft_rt/csv_${new java.io.File(d).getName}"
+      val out = ScratchCatalog.outputDir("csv", d)
       src.write.mode("overwrite").option("header", "true").csv(out)
       s.read.schema(src.schema).option("header", "true").csv(out)
         .groupBy(col("o_orderstatus"))
@@ -1029,7 +1030,7 @@ object Relational {
     "q52b_json_roundtrip",
     (s, d) => {
       val src = customer(s, d)
-      val out = s"/tmp/graft_rt/json_${new java.io.File(d).getName}"
+      val out = ScratchCatalog.outputDir("json", d)
       src.write.mode("overwrite").json(out)
       s.read.schema(src.schema).json(out)
         .groupBy(col("c_mktsegment"))
@@ -1150,7 +1151,7 @@ object Relational {
     (s, d) => {
       val src = lineitem(s, d).select(
         col("l_returnflag"), col("l_linestatus"), col("l_quantity"), col("l_shipdate"))
-      val out = s"/tmp/graft_rt/orc_${new java.io.File(d).getName}"
+      val out = ScratchCatalog.outputDir("orc", d)
       src.write.mode("overwrite").orc(out)
       s.read.schema(src.schema).orc(out)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -1173,7 +1174,7 @@ object Relational {
   val q54 = Q(
     "q54_partitioned_pruning",
     (s, d) => {
-      val out = s"/tmp/graft_rt/part_${new java.io.File(d).getName}"
+      val out = ScratchCatalog.outputDir("part", d)
       documents(s, d).write.mode("overwrite").partitionBy("lang").parquet(out)
       s.read.parquet(out)
         .filter(col("lang").isin("en", "de"))
@@ -1203,11 +1204,11 @@ object Relational {
     * The session may be bare (Verify/Bench build no extensions): the
     * catalog is registered at runtime and the rule injected through
     * `spark.experimental.extraOptimizations`, both idempotently. Tables
-    * are created once per (warehouse, sf) and rebuilt if the source
-    * row count drifts (regenerated fixtures). */
+    * are created once per JVM and corpus (ScratchCatalog.cachedFixture)
+    * and rebuilt if the source content drifts (regenerated fixtures). */
   /** Content fingerprint of a catalog-query's parquet source — the
-    * staleness key for the cached lakehouse fixtures q111–q113 build
-    * under /tmp/graft_rt. A row COUNT alone would serve stale tables
+    * staleness key for the cached lakehouse fixtures q111–q129 build in
+    * the scratch catalog. A row COUNT alone would serve stale tables
     * if the driver ever regenerated fixtures with identical counts but
     * different content; xxhash64-sum over every column catches that.
     * Spark-side only (never compared to the oracle), so hash stability
@@ -1281,73 +1282,44 @@ object Relational {
     s"${r.get(0)}:${r.get(1)}"
   }
 
-  /** Mutual exclusion for the shared `/tmp/graft_rt/rely_wh` fixture
-    * warehouse: two same-SF sessions racing a `freshly` check's
-    * DROP/CREATE would corrupt the cached fixtures. JVM monitor first
-    * (overlapping FileLocks within one JVM throw), then an OS-level
-    * FileLock for the cross-process case — the same two-tier pattern
-    * the expire floor uses. Single-driver today; this makes the cache
-    * safe if the driver ever parallelizes gates. */
-  private val relyLockMonitor = new Object
-  private def withRelyLock[A](f: => A): A = relyLockMonitor.synchronized {
-    val dir = java.nio.file.Paths.get("/tmp/graft_rt")
-    java.nio.file.Files.createDirectories(dir)
-    val ch = java.nio.channels.FileChannel.open(dir.resolve("rely_wh.lock"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    try { val l = ch.lock(); try f finally l.release() } finally ch.close()
-  }
+  private def relyNs(d: String): String = nameFor("rely", d)
 
   val q111 = Q(
     "q111_rely_join_elimination",
     (s, d) => {
-      val cat = "grely"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.LakehouseCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", "/tmp/graft_rt/rely_wh")
       if (!s.sessionState.optimizer.extendedOperatorOptimizationRules
             .exists(_.isInstanceOf[graft.catalog.ConstraintOptimization]) &&
           !s.experimental.extraOptimizations
             .exists(_.isInstanceOf[graft.catalog.ConstraintOptimization]))
         s.experimental.extraOptimizations =
           s.experimental.extraOptimizations :+ graft.catalog.ConstraintOptimization(s)
-      val ns = s"rely_${new java.io.File(d).getName.replace('.', '_')}"
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.$ns")
+      val ns = Seq(relyNs(d))
       val srcCust = customer(s, d).select("c_custkey", "c_name")
       val srcOrd = orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-      def freshly(tbl: String, mark: String): Boolean =
-        !s.catalog.tableExists(s"$cat.$ns.$tbl") || {
-          val stale = !graft.catalog.TableMetadata.load(
-            java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, tbl))
-            .properties.get("graft.src.mark").contains(mark)
-          if (stale) s.sql(s"DROP TABLE $cat.$ns.$tbl")
-          stale
-        }
       val custMark = srcMark(srcCust)
       val ordMark = srcMark(srcOrd)
-      withRelyLock {
-        if (freshly("customer", custMark)) {
-          s.sql(s"CREATE TABLE $cat.$ns.customer (c_custkey BIGINT NOT NULL, " +
-            "c_name STRING, CONSTRAINT cust_pk PRIMARY KEY (c_custkey) NOT ENFORCED RELY) " +
-            s"TBLPROPERTIES ('graft.src.mark'='$custMark')")
-          srcCust.createOrReplaceTempView("rely_cust_src")
-          s.sql(s"INSERT INTO $cat.$ns.customer SELECT * FROM rely_cust_src")
-        }
-        if (freshly("orders", ordMark)) {
-          s.sql(s"CREATE TABLE $cat.$ns.orders (o_orderkey BIGINT, " +
-            "o_custkey BIGINT NOT NULL, o_totalprice DOUBLE, o_orderpriority STRING, " +
-            s"CONSTRAINT ord_fk FOREIGN KEY (o_custkey) " +
-            s"REFERENCES $cat.$ns.customer (c_custkey) NOT ENFORCED RELY) " +
-            s"TBLPROPERTIES ('graft.src.mark'='$ordMark')")
-          srcOrd.createOrReplaceTempView("rely_ord_src")
-          s.sql(s"INSERT INTO $cat.$ns.orders SELECT * FROM rely_ord_src")
-        }
+      val cust = cachedFixture(s, ns, "customer", custMark,
+        t => s"CREATE TABLE $t (c_custkey BIGINT NOT NULL, " +
+          "c_name STRING, CONSTRAINT cust_pk PRIMARY KEY (c_custkey) NOT ENFORCED RELY) " +
+          s"TBLPROPERTIES ('graft.src.mark'='$custMark')") { t =>
+        srcCust.createOrReplaceTempView("rely_cust_src")
+        s.sql(s"INSERT INTO $t SELECT * FROM rely_cust_src")
+      }
+      val ord = cachedFixture(s, ns, "orders", ordMark,
+        t => s"CREATE TABLE $t (o_orderkey BIGINT, " +
+          "o_custkey BIGINT NOT NULL, o_totalprice DOUBLE, o_orderpriority STRING, " +
+          s"CONSTRAINT ord_fk FOREIGN KEY (o_custkey) " +
+          s"REFERENCES ${cust.table} (c_custkey) NOT ENFORCED RELY) " +
+          s"TBLPROPERTIES ('graft.src.mark'='$ordMark')") { t =>
+        srcOrd.createOrReplaceTempView("rely_ord_src")
+        s.sql(s"INSERT INTO $t SELECT * FROM rely_ord_src")
       }
       s.sql(
         s"""SELECT o.o_orderpriority, COUNT(*) AS cnt,
            |       CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-           |FROM $cat.$ns.orders o
-           |JOIN $cat.$ns.customer c ON o.o_custkey = c.c_custkey
+           |FROM ${ord.table} o
+           |JOIN ${cust.table} c ON o.o_custkey = c.c_custkey
            |GROUP BY o.o_orderpriority
            |ORDER BY o.o_orderpriority""".stripMargin)
     },
@@ -1371,10 +1343,9 @@ object Relational {
     "q114_rely_distinct_removal",
     (s, d) => {
       q111.run(s, d).count() // builds (or freshness-checks) the tables
-      val ns = s"rely_${new java.io.File(d).getName.replace('.', '_')}"
       s.sql(
         s"""SELECT DISTINCT c_custkey, c_name
-           |FROM grely.$ns.customer
+           |FROM $Fixtures.${relyNs(d)}.customer
            |ORDER BY c_custkey""".stripMargin)
     },
     Some("""SELECT DISTINCT c_custkey, c_name
@@ -1394,36 +1365,23 @@ object Relational {
     * applied as a row-local filter instead of an anti-join per dirty
     * file group.
     *
-    * DML is applied exactly once per (warehouse, sf): MERGE price
+    * DML is applied exactly once per JVM and corpus: MERGE price
     * bumps are not idempotent, so the table recreates only when the
-    * source row count drifts (regenerated fixtures). */
+    * source content drifts (regenerated fixtures). */
   val q112 = Q(
     "q112_mor_dv_read",
     (s, d) => {
-      val cat = "grely"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.LakehouseCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", "/tmp/graft_rt/rely_wh")
-      val ns = s"mordv_${new java.io.File(d).getName.replace('.', '_')}"
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.$ns")
       val src = orders(s, d).select("o_orderkey", "o_totalprice", "o_orderpriority")
-      val t = s"$cat.$ns.orders"
-      val dir = java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, "orders")
-      // freshness by recorded source count — a table READ here would
+      // freshness by recorded source mark — a table READ here would
       // need the MoR merged view, which is exactly what this query is
       // in the middle of building
       val mark = srcMark(src)
-      withRelyLock {
-      val fresh = !s.catalog.tableExists(t) || {
-        val stale = !graft.catalog.TableMetadata.load(dir)
-          .properties.get("graft.src.mark").contains(mark)
-        if (stale) s.sql(s"DROP TABLE $t")
-        stale
-      }
-      if (fresh) {
-        s.sql(s"CREATE TABLE $t (o_orderkey BIGINT, o_totalprice DOUBLE, " +
+      val ns = nameFor("mordv", d)
+      val fx = cachedFixture(s, Seq(ns), "orders", mark,
+        t => s"CREATE TABLE $t (o_orderkey BIGINT, o_totalprice DOUBLE, " +
           "o_orderpriority STRING) TBLPROPERTIES (" +
           "'graft.merge.mode'='merge-on-read', 'graft.delete.mode'='merge-on-read', " +
-          s"'graft.src.mark'='$mark')")
+          s"'graft.src.mark'='$mark')") { t =>
         src.createOrReplaceTempView("mordv_src")
         s.sql(s"INSERT INTO $t SELECT * FROM mordv_src")
         // ONE positional MERGE (its target read sees a clean table, so
@@ -1437,9 +1395,9 @@ object Relational {
                  |  + (CASE WHEN t.o_orderkey % 11 = 0 THEN 2 ELSE 0 END)
                  |""".stripMargin)
         // attach the deletion-vector sidecar to the positional entry
-        s.sql(s"CALL $cat.system.vectorize_deletes('$ns', 'orders')")
+        s.sql(s"CALL $Fixtures.system.vectorize_deletes('$ns', 'orders')")
       }
-      }
+      val dir = fx.dir
       // merged read through the engine API — the SAME path the
       // MorReads extension rule plans for `spark.table`, but callable
       // on a bare session (Verify/Bench build no extensions); the DV
@@ -1474,34 +1432,19 @@ object Relational {
   val q113 = Q(
     "q113_metadata_agg_pruned",
     (s, d) => {
-      val cat = "grely"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.LakehouseCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", "/tmp/graft_rt/rely_wh")
-      val ns = s"magg_${new java.io.File(d).getName.replace('.', '_')}"
-      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.$ns")
       val src = customer(s, d).select("c_custkey", "c_nationkey", "c_acctbal")
-      val t = s"$cat.$ns.customer"
       val mark = srcMark(src)
-      withRelyLock {
-      val fresh = !s.catalog.tableExists(t) || {
-        val stale = !graft.catalog.TableMetadata.load(
-          java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, "customer"))
-          .properties.get("graft.src.mark").contains(mark)
-        if (stale) s.sql(s"DROP TABLE $t")
-        stale
-      }
-      if (fresh) {
-        s.sql(s"CREATE TABLE $t (c_custkey BIGINT, c_nationkey INT, " +
+      val t = cachedFixture(s, Seq(nameFor("magg", d)), "customer", mark,
+        t => s"CREATE TABLE $t (c_custkey BIGINT, c_nationkey INT, " +
           "c_acctbal DOUBLE) PARTITIONED BY (c_nationkey) " +
-          s"TBLPROPERTIES ('graft.src.mark'='$mark')")
+          s"TBLPROPERTIES ('graft.src.mark'='$mark')") { t =>
         src.createOrReplaceTempView("magg_src")
         // one commit per nation: single-value files (exact pushdown)
         // AND single-value manifest chunks (cold-driver chunk skipping)
         (0 until 25).foreach { n =>
           s.sql(s"INSERT INTO $t SELECT * FROM magg_src WHERE c_nationkey = $n")
         }
-      }
-      }
+      }.table
       s.sql(
         s"""SELECT COUNT(*) AS cnt, MIN(c_custkey) AS min_k, MAX(c_custkey) AS max_k
            |FROM $t WHERE c_nationkey = 7""".stripMargin)
@@ -1519,67 +1462,52 @@ object Relational {
     * arithmetically over the raw parquet. One query covers the round's
     * flagship surface: mirror maintenance, export delete rewrite,
     * import sequence rank-remap, and the MoR read of imported delete
-    * state. Fixtures cache per (warehouse, sf) under the rely lock,
+    * state. Fixtures cache per JVM and corpus under the rely lock,
     * keyed by source content fingerprint. */
   /** Ensure q115's cached fixture pair (MoR-dirty mirrored supplier +
-    * its re-import) exists and is fresh; returns (srcDir, impDir).
+    * its re-import) exists and is fresh; returns (source, import).
     * Split out of q115 (r19) so the gates that only need the FIXTURE
     * (q123's python re-read, q128's REST re-read) stop executing
     * q115's final aggregation once per bench sample — warm, this is
     * metadata checks only (the srcMark memo removes the per-sample
     * hash job too). */
-  private def ensureIceRtFixture(s: SparkSession, d: String)
-      : (java.nio.file.Path, java.nio.file.Path) = {
-    val cat = "grely"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.LakehouseCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", "/tmp/graft_rt/rely_wh")
-    val ns = s"ice_${new java.io.File(d).getName.replace('.', '_')}"
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.$ns")
+  private def ensureIceRtFixture(s: SparkSession, d: String): (Fixture, Fixture) = {
+    val ns = Seq(nameFor("ice", d))
     val src = supplier(s, d).select("s_suppkey", "s_name", "s_acctbal")
     val mark = srcMark(src)
-    val t = s"$cat.$ns.supplier"
-    val ti = s"$cat.$ns.supplier_imp"
-    val srcDir = java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, "supplier")
-    val impDir = java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, "supplier_imp")
     withRelyLock {
-        def freshOf(tbl: String, dirOf: java.nio.file.Path): Boolean =
-          !s.catalog.tableExists(s"$cat.$ns.$tbl") || {
-            val stale = !graft.catalog.TableMetadata.load(dirOf)
-              .properties.get("graft.src.mark").contains(mark)
-            if (stale) s.sql(s"DROP TABLE $cat.$ns.$tbl")
-            stale
-          }
-        if (freshOf("supplier", srcDir)) {
-          // the import must track a rebuilt source even when the source
-          // build itself is cached: rebuild both together
-          if (s.catalog.tableExists(ti)) s.sql(s"DROP TABLE $ti")
-          s.sql(s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING, " +
-            "s_acctbal DOUBLE) TBLPROPERTIES (" +
-            "'graft.delete.mode'='merge-on-read', " +
-            "'graft.iceberg.mirror'='true', " +
-            s"'graft.src.mark'='$mark')")
-          src.createOrReplaceTempView("ice_rt115_src")
-          s.sql(s"INSERT INTO $t SELECT * FROM ice_rt115_src")
-          // MoR delete → the mirror rewrites the v2 delete file as part
-          // of THIS commit's publish (write-through, no CALL export)
-          s.sql(s"DELETE FROM $t WHERE s_suppkey % 10 = 3")
-        }
-        if (freshOf("supplier_imp", impDir)) {
-          val md = srcDir.resolve("metadata")
-          val hint = java.nio.file.Files.readString(
-            md.resolve("version-hint.text")).trim.toInt
-          s.sql(s"CALL $cat.system.import_iceberg('$ns', 'supplier_imp', " +
-            s"'${md.resolve(s"v$hint.metadata.json")}')")
-          s.sql(s"ALTER TABLE $ti SET TBLPROPERTIES ('graft.src.mark'='$mark')")
-        }
+      val sup = cachedFixture(s, ns, "supplier", mark,
+        t => s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING, " +
+          "s_acctbal DOUBLE) TBLPROPERTIES (" +
+          "'graft.delete.mode'='merge-on-read', " +
+          "'graft.iceberg.mirror'='true', " +
+          s"'graft.src.mark'='$mark')") { t =>
+        src.createOrReplaceTempView("ice_rt115_src")
+        s.sql(s"INSERT INTO $t SELECT * FROM ice_rt115_src")
+        // MoR delete → the mirror rewrites the v2 delete file as part
+        // of THIS commit's publish (write-through, no CALL export)
+        s.sql(s"DELETE FROM $t WHERE s_suppkey % 10 = 3")
       }
-    (srcDir, impDir)
+      // the import must track a rebuilt source even when its own mark
+      // still matches: rebuild both together
+      if (sup.built) s.sql(s"DROP TABLE IF EXISTS ${sup.table}_imp")
+      val imp = cachedFixture(s, ns, "supplier_imp", mark, _ => {
+        val md = sup.dir.resolve("metadata")
+        val hint = java.nio.file.Files.readString(
+          md.resolve("version-hint.text")).trim.toInt
+        s"CALL $Fixtures.system.import_iceberg('${sup.ns}', 'supplier_imp', " +
+          s"'${md.resolve(s"v$hint.metadata.json")}')"
+      }) { t =>
+        s.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.src.mark'='$mark')")
+      }
+      (sup, imp)
+    }
   }
 
   val q115 = Q(
     "q115_iceberg_roundtrip",
     (s, d) => {
-      val (_, impDir) = ensureIceRtFixture(s, d)
+      val impDir = ensureIceRtFixture(s, d)._2.dir
       // merged read through the engine API (bare-session path, as q112)
       val meta = graft.catalog.TableMetadata.load(impDir)
       val merged = graft.catalog.MergeOnRead.read(s, impDir, meta, meta.files)
@@ -1602,15 +1530,15 @@ object Relational {
   private def timeTravelFixture(s: SparkSession, d: String): String = {
     val src = supplier(s, d).select("s_suppkey", "s_name", "s_acctbal")
     val mark = srcMark(src)
-    cachedFixture(s, d, "tt", "supplier_tt", mark,
+    cachedFixture(s, Seq(nameFor("tt", d)), "supplier_tt", mark,
       t => s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING, " +
         s"s_acctbal DOUBLE) TBLPROPERTIES ('graft.src.mark'='$mark')") { t => // v1
       val Array(_, ns, tbl) = t.split('.')
       src.createOrReplaceTempView("tt_src")
       s.sql(s"INSERT INTO $t SELECT * FROM tt_src WHERE s_suppkey % 2 = 0") // v2
-      s.sql(s"CALL grely.system.tag('$ns', '$tbl', 'base', 2)") // v3
+      s.sql(s"CALL $Fixtures.system.tag('$ns', '$tbl', 'base', 2)") // v3
       s.sql(s"INSERT INTO $t SELECT * FROM tt_src WHERE s_suppkey % 2 = 1") // v4
-    }
+    }.table
   }
 
   /** TIME TRAVEL oracle-checked end-to-end in the driver gate: reading
@@ -1653,31 +1581,6 @@ object Relational {
            |FROM supplier WHERE s_suppkey % 2 = 1
            |ORDER BY s_suppkey""".stripMargin))
 
-  /** One cached lakehouse fixture table under the rely lock: create
-    * with `ddl`, run `build` once per (warehouse, sf, source content),
-    * return the table name. The repeated pattern behind q115–q120. */
-  private def cachedFixture(
-      s: SparkSession, d: String, nsPrefix: String, tbl: String,
-      mark: String, ddl: String => String)(build: String => Unit): String = {
-    val cat = "grely"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.LakehouseCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", "/tmp/graft_rt/rely_wh")
-    val ns = s"${nsPrefix}_${new java.io.File(d).getName.replace('.', '_')}"
-    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.$ns")
-    val t = s"$cat.$ns.$tbl"
-    withRelyLock {
-      val fresh = !s.catalog.tableExists(t) || {
-        val stale = !graft.catalog.TableMetadata.load(
-          java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, tbl))
-          .properties.get("graft.src.mark").contains(mark)
-        if (stale) s.sql(s"DROP TABLE $t")
-        stale
-      }
-      if (fresh) { s.sql(ddl(t)); build(t) }
-    }
-    t
-  }
-
   /** BRANCH (write-audit-publish) read, oracle-checked: ingest lands on
     * a branch main readers never see; the audit read via
     * `VERSION AS OF '<branch>'` must serve main's rows PLUS the
@@ -1689,17 +1592,17 @@ object Relational {
     (s, d) => {
       val src = supplier(s, d).select("s_suppkey", "s_name", "s_acctbal")
       val mark = srcMark(src)
-      val t = cachedFixture(s, d, "br", "supplier_br", mark,
+      val t = cachedFixture(s, Seq(nameFor("br", d)), "supplier_br", mark,
         t => s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING, " +
           s"s_acctbal DOUBLE) TBLPROPERTIES ('graft.src.mark'='$mark')") { t =>
         src.createOrReplaceTempView("br_src")
         s.sql(s"INSERT INTO $t SELECT * FROM br_src WHERE s_suppkey % 2 = 0")
         val Array(_, ns, tbl) = t.split('.')
-        s.sql(s"CALL grely.system.branch('$ns', '$tbl', 'audit')")
+        s.sql(s"CALL $Fixtures.system.branch('$ns', '$tbl', 'audit')")
         s.sql("SELECT * FROM br_src WHERE s_suppkey % 2 = 1")
           .createOrReplaceTempView("br_delta")
-        s.sql(s"CALL grely.system.append_to_branch('$ns', '$tbl', 'audit', 'br_delta')")
-      }
+        s.sql(s"CALL $Fixtures.system.append_to_branch('$ns', '$tbl', 'audit', 'br_delta')")
+      }.table
       s.sql(
         s"""SELECT COUNT(*) AS cnt,
            |       CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
@@ -1719,7 +1622,7 @@ object Relational {
     (s, d) => {
       val src = supplier(s, d).select("s_suppkey", "s_name", "s_acctbal")
       val mark = srcMark(src)
-      val t = cachedFixture(s, d, "se", "supplier_se", mark,
+      val t = cachedFixture(s, Seq(nameFor("se", d)), "supplier_se", mark,
         t => s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING) " +
           s"TBLPROPERTIES ('graft.src.mark'='$mark')") { t =>
         src.createOrReplaceTempView("se_src")
@@ -1728,7 +1631,7 @@ object Relational {
         s.sql(s"ALTER TABLE $t ADD COLUMN s_acctbal DOUBLE DEFAULT 1.5")
         s.sql(s"INSERT INTO $t SELECT s_suppkey, s_name, s_acctbal FROM se_src " +
           "WHERE s_suppkey % 2 = 1")
-      }
+      }.table
       s.sql(
         s"""SELECT s_suppkey % 3 AS grp, COUNT(*) AS cnt,
            |       CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
@@ -1749,7 +1652,7 @@ object Relational {
     (s, d) => {
       val src = supplier(s, d).select("s_suppkey", "s_acctbal")
       val mark = srcMark(src)
-      val t = cachedFixture(s, d, "ow", "supplier_ow", mark,
+      val t = cachedFixture(s, Seq(nameFor("ow", d)), "supplier_ow", mark,
         t => s"CREATE TABLE $t (k BIGINT, bal DOUBLE, par STRING) " +
           "PARTITIONED BY (par) " +
           s"TBLPROPERTIES ('graft.src.mark'='$mark')") { t =>
@@ -1758,7 +1661,7 @@ object Relational {
           "CASE WHEN s_suppkey % 2 = 0 THEN 'even' ELSE 'odd' END FROM ow_src")
         s.sql(s"INSERT OVERWRITE $t PARTITION (par = 'odd') " +
           "SELECT s_suppkey, s_acctbal + 100 FROM ow_src WHERE s_suppkey % 2 = 1")
-      }
+      }.table
       s.sql(
         s"""SELECT par, COUNT(*) AS cnt,
            |       CAST(SUM(CAST(bal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
@@ -1784,14 +1687,14 @@ object Relational {
     (s, d) => {
       val src = supplier(s, d).select("s_suppkey")
       val mark = srcMark(src)
-      val t = cachedFixture(s, d, "mv", "fact", mark,
+      val t = cachedFixture(s, Seq(nameFor("mv", d)), "fact", mark,
         t => s"CREATE TABLE $t (cat STRING, amount BIGINT) " +
           s"TBLPROPERTIES ('graft.src.mark'='$mark')") { t =>
         val Array(_, ns, _) = t.split('.')
         src.createOrReplaceTempView("mv_fixture_src")
         s.sql(s"INSERT INTO $t SELECT CAST(s_suppkey % 5 AS STRING), s_suppkey " +
           "FROM mv_fixture_src WHERE s_suppkey % 2 = 0")
-        graft.catalog.MaterializedView.create(s, "grely", Seq(ns), "supp_by_cat",
+        graft.catalog.MaterializedView.create(s, Fixtures, Seq(ns), "supp_by_cat",
           "fact", Seq("cat"), Seq(
             graft.catalog.MaterializedView.Agg("sum", "amount", "total"),
             graft.catalog.MaterializedView.Agg("count", "*", "n"),
@@ -1799,14 +1702,14 @@ object Relational {
         s.sql(s"INSERT INTO $t SELECT CAST(s_suppkey % 5 AS STRING), s_suppkey " +
           "FROM mv_fixture_src WHERE s_suppkey % 2 = 1")
         val mode = graft.catalog.MaterializedView.refresh(
-          s, "grely", Seq(ns), "supp_by_cat")
+          s, Fixtures, Seq(ns), "supp_by_cat")
         require(mode == "incremental",
           s"append-only delta must fold incrementally, got '$mode'")
-      }
+      }.table
       val ns = t.split('.')(1)
       s.sql(
         s"""SELECT cat, CAST(total AS DOUBLE) AS total, n, hi
-           |FROM grely.$ns.supp_by_cat ORDER BY cat""".stripMargin)
+           |FROM $Fixtures.$ns.supp_by_cat ORDER BY cat""".stripMargin)
     },
     Some("""SELECT CAST(s_suppkey % 5 AS VARCHAR) AS cat,
            |       CAST(SUM(s_suppkey) AS DOUBLE) AS total,
@@ -1823,7 +1726,7 @@ object Relational {
     (s, d) => {
       val src = supplier(s, d).select("s_suppkey", "s_name")
       val mark = srcMark(src)
-      val t = cachedFixture(s, d, "gc", "supplier_gc", mark,
+      val t = cachedFixture(s, Seq(nameFor("gc", d)), "supplier_gc", mark,
         t => s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING, " +
           "key_bucket BIGINT GENERATED ALWAYS AS (s_suppkey % 13), " +
           "name_u STRING GENERATED ALWAYS AS (upper(s_name))) " +
@@ -1832,7 +1735,7 @@ object Relational {
         // the writer SMUGGLES wrong values for both generated columns —
         // generation must override them
         s.sql(s"INSERT INTO $t SELECT s_suppkey, s_name, -1L, 'smuggled' FROM gc_src")
-      }
+      }.table
       s.sql(
         s"""SELECT key_bucket, COUNT(*) AS cnt, MIN(name_u) AS first_name
            |FROM $t GROUP BY key_bucket ORDER BY key_bucket""".stripMargin)
@@ -1892,8 +1795,8 @@ object Relational {
       import s.implicits._
       // ensure the mirrored fixture exists (cached) — fixture checks
       // only, not q115's full aggregation per sample (r19)
-      val (tableDir, _) = ensureIceRtFixture(s, d)
-      val ns = s"ice_${new java.io.File(d).getName.replace('.', '_')}"
+      val sup = ensureIceRtFixture(s, d)._1
+      val tableDir = sup.dir
       // ANALYZE once per fixture build (stats persist in properties):
       // the write-through mirror then publishes NDV as an Iceberg
       // `statistics` Puffin file, and --verify-bounds below re-checks
@@ -1902,7 +1805,7 @@ object Relational {
       withRelyLock {
         if (!graft.catalog.TableMetadata.load(tableDir).properties
             .contains(graft.catalog.TableStats.NumRowsProp))
-          s.sql(s"CALL grely.system.analyze('$ns', 'supplier')").collect()
+          s.sql(s"CALL $Fixtures.system.analyze('${sup.ns}', 'supplier')").collect()
       }
       // expected = graft's own merged scan through the engine API (the
       // table is MoR-dirty; bare-session path, as q115)
@@ -1934,7 +1837,7 @@ object Relational {
       import s.implicits._
       val src = supplier(s, d).select("s_suppkey", "s_acctbal")
       val mark = srcMark(src)
-      val t = cachedFixture(s, d, "pyp", "supplier_days", mark,
+      val fx = cachedFixture(s, Seq(nameFor("pyp", d)), "supplier_days", mark,
         t => s"CREATE TABLE $t (s_suppkey BIGINT, s_acctbal DOUBLE, ev_d DATE) " +
           "PARTITIONED BY (days(ev_d)) TBLPROPERTIES (" +
           s"'graft.iceberg.mirror'='true', 'graft.src.mark'='$mark')") { t =>
@@ -1942,11 +1845,9 @@ object Relational {
         s.sql(s"INSERT INTO $t SELECT s_suppkey, s_acctbal, " +
           "DATE_ADD(DATE'2024-03-01', CAST(s_suppkey % 3 AS INT)) FROM pyp_src")
       }
-      val Array(_, ns, tbl) = t.split('.')
-      val tableDir = java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, tbl)
       val (verdict, rows, opened) = pythonIcebergCheck(
-        s, tableDir.toString,
-        s.table(t).filter(col("ev_d") === lit("2024-03-02").cast("date")),
+        s, fx.dir.toString,
+        s.table(fx.table).filter(col("ev_d") === lit("2024-03-02").cast("date")),
         Some("ev_d=2024-03-02"))
       val pruned = opened.exists { case (k, n) => k >= 1 && k < n }
       Seq((verdict, pruned, rows)).toDF("verdict", "pruned", "rows_read")
@@ -1975,21 +1876,20 @@ object Relational {
       import s.implicits._
       // ensure the mirrored fixture exists (cached) — fixture checks
       // only, not q115's full aggregation per sample (r19)
-      val (tableDir, _) = ensureIceRtFixture(s, d)
-      val cat = "grely"
-      val ns = s"ice_${new java.io.File(d).getName.replace('.', '_')}"
-      val port = s.sql(s"CALL $cat.system.start_rest_catalog(0)")
+      val sup = ensureIceRtFixture(s, d)._1
+      val tableDir = sup.dir
+      val port = s.sql(s"CALL $Fixtures.system.start_rest_catalog(0)")
         .collect()(0).getLong(0)
       try {
         val meta = graft.catalog.TableMetadata.load(tableDir)
         val merged = graft.catalog.MergeOnRead.read(s, tableDir, meta, meta.files)
           .select("s_suppkey", "s_name", "s_acctbal")
         val (verdict, rows, _) = pythonIcebergCheck(s,
-          s"http://127.0.0.1:$port/v1/namespaces/$ns/tables/supplier",
+          s"http://127.0.0.1:$port/v1/namespaces/${sup.ns}/tables/supplier",
           merged, None)
         Seq((verdict, rows)).toDF("verdict", "rows_read")
       } finally {
-        s.sql(s"CALL $cat.system.stop_rest_catalog($port)").collect()
+        s.sql(s"CALL $Fixtures.system.stop_rest_catalog($port)").collect()
       }
     },
     Some("""SELECT 'MATCH' AS verdict, COUNT(*) AS rows_read
@@ -2009,46 +1909,29 @@ object Relational {
     "q129_py_rest_discovery",
     (s, d) => {
       import s.implicits._
-      val cat = "grely"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.LakehouseCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", "/tmp/graft_rt/rely_wh")
-      val ns = s"rml_${new java.io.File(d).getName.replace('.', '_')}"
       val src = supplier(s, d).select("s_suppkey", "s_name", "s_acctbal")
         .filter(col("s_suppkey") % 7 === 2)
       val mark = srcMark(src)
-      val t = s"$cat.$ns.sub.supplier_ml"
-      val tableDir =
-        java.nio.file.Paths.get("/tmp/graft_rt/rely_wh", ns, "sub", "supplier_ml")
-      withRelyLock {
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.$ns")
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.$ns.sub")
-        val fresh = !s.catalog.tableExists(t) || {
-          val stale = !graft.catalog.TableMetadata.load(tableDir)
-            .properties.get("graft.src.mark").contains(mark)
-          if (stale) s.sql(s"DROP TABLE $t")
-          stale
-        }
-        if (fresh) {
-          s.sql(s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING, " +
-            "s_acctbal DOUBLE) TBLPROPERTIES (" +
-            "'graft.iceberg.mirror'='true', " +
-            s"'graft.src.mark'='$mark')")
-          src.createOrReplaceTempView("rest_ml_src")
-          s.sql(s"INSERT INTO $t SELECT * FROM rest_ml_src")
-        }
+      val fx = cachedFixture(s, Seq(nameFor("rml", d), "sub"), "supplier_ml", mark,
+        t => s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING, " +
+          "s_acctbal DOUBLE) TBLPROPERTIES (" +
+          "'graft.iceberg.mirror'='true', " +
+          s"'graft.src.mark'='$mark')") { t =>
+        src.createOrReplaceTempView("rest_ml_src")
+        s.sql(s"INSERT INTO $t SELECT * FROM rest_ml_src")
       }
-      val port = s.sql(s"CALL $cat.system.start_rest_catalog(0)")
+      val port = s.sql(s"CALL $Fixtures.system.start_rest_catalog(0)")
         .collect()(0).getLong(0)
       try {
-        // dot-QUALIFIED discovery ref: the shared warehouse holds one
-        // rml_<sf> namespace per scale factor, and a bare table name
+        // dot-QUALIFIED discovery ref: the warehouse holds one
+        // rml_<corpus> namespace per corpus dir, and a bare table name
         // would resolve to whichever namespace sorts first — a sf0.1
         // run would diff against the sf0.01 fixture
         val (verdict, rows, _) = pythonIcebergCheck(s,
-          s"http://127.0.0.1:$port/v1#$ns.sub.supplier_ml", s.table(t), None)
+          s"http://127.0.0.1:$port/v1#${fx.ns}.supplier_ml", s.table(fx.table), None)
         Seq((verdict, rows)).toDF("verdict", "rows_read")
       } finally {
-        s.sql(s"CALL $cat.system.stop_rest_catalog($port)").collect()
+        s.sql(s"CALL $Fixtures.system.stop_rest_catalog($port)").collect()
       }
     },
     Some("""SELECT 'MATCH' AS verdict, COUNT(*) AS rows_read
@@ -2060,7 +1943,7 @@ object Relational {
       import s.implicits._
       val src = supplier(s, d).select("s_suppkey", "s_name")
       val mark = srcMark(src)
-      val t = cachedFixture(s, d, "bkt", "supplier_bkt", mark,
+      val t = cachedFixture(s, Seq(nameFor("bkt", d)), "supplier_bkt", mark,
         t => s"CREATE TABLE $t (s_suppkey BIGINT, s_name STRING) " +
           "PARTITIONED BY (bucket(8, s_suppkey)) TBLPROPERTIES (" +
           s"'graft.bucket.hash'='iceberg', 'graft.src.mark'='$mark')") { t =>
@@ -2068,7 +1951,7 @@ object Relational {
         // two commits -> multiple bucket-addressable files per bucket
         s.sql(s"INSERT INTO $t SELECT * FROM bkt_src WHERE s_suppkey % 2 = 0")
         s.sql(s"INSERT INTO $t SELECT * FROM bkt_src WHERE s_suppkey % 2 = 1")
-      }
+      }.table
       val hit = s.table(t).where(col("s_suppkey") === 7L)
         .select(col("s_suppkey"), col("s_name")).collect()
       val (surv, total) = graft.catalog.LakehouseTable.lastScanFileCounts.get()

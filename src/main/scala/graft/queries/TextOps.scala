@@ -199,9 +199,12 @@ object TextOps {
     // edges (r20, guide §5 job-count): head(cutoff+1) returns every
     // edge iff the set fits under the cutoff, and its bounded overflow
     // row proves it doesn't — the old count()-then-collect() pair was
-    // two sequential jobs over the same pinned frame
-    val firstEdges = cached.head(smallCutoff.toInt + 1)
-    if (firstEdges.length <= smallCutoff) {
+    // two sequential jobs over the same pinned frame. The fetch bound
+    // is clamped so that cap + 1 stays a positive Int: an unclamped
+    // Long.MaxValue cutoff wrapped to head(0) and returned no components
+    val cap = math.min(smallCutoff, Int.MaxValue - 1L)
+    val firstEdges = cached.head(cap.toInt + 1)
+    if (firstEdges.length <= cap) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val parent = scala.collection.mutable.Map[Long, Long]()

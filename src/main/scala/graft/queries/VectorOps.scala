@@ -183,13 +183,17 @@ object VectorOps {
 
   /** Installs `lsh_sigs(v)` → all 12 table signatures in one codegen'd
     * pass (graft.functions.LshSignatures) — replaces a 72-node
-    * vec_dot/when tree with one expression over a flat plane matrix. */
-  private def registerLsh(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction("lsh_sigs",
+    * vec_dot/when tree with one expression over a flat plane matrix.
+    * A session that already has it is left untouched. */
+  private def registerLsh(s: SparkSession): Unit = {
+    val reg = s.sessionState.functionRegistry
+    if (reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_sigs"))) return
+    reg.createOrReplaceTempFunction("lsh_sigs",
       { args: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         graft.functions.LshSignatures(args(0), lshTables, lshBits, lshDim,
           hyperplanes.flatten.flatten)
       }, "built-in")
+  }
 
   /** ANN top-k via LSH buckets: candidates = vectors sharing ≥1 of the
     * 12 table buckets with the query; exact cosine re-rank on candidates.

@@ -73,5 +73,18 @@ class ExtensionsSpec extends AnyFunSuite with Matchers {
     functions.GraftFunctions.register(spark)
     functions.GraftFunctions.register(spark)
     builders.zip(installed).foreach { case (now, before) => (now.get eq before.get) shouldBe true }
+    // q29c's own lsh_sigs: a later run keeps the builder the session
+    // holds. Its builder is a non-capturing lambda (one shared instance),
+    // so the held one is swapped for a distinct delegating instance that
+    // a re-registration would replace
+    val lsh = org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_sigs")
+    queries.VectorOps.q29c.run(spark, "/root/testdata/sf0.001")
+    val first = reg.lookupFunctionBuilder(lsh).get
+    val held: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+      org.apache.spark.sql.catalyst.expressions.Expression = args => first(args)
+    reg.dropFunction(lsh)
+    reg.createOrReplaceTempFunction("lsh_sigs", held, "built-in")
+    queries.VectorOps.q29c.run(spark, "/root/testdata/sf0.001")
+    (reg.lookupFunctionBuilder(lsh).get eq held) shouldBe true
   }
 }

@@ -269,6 +269,11 @@ class PropertySpec extends AnyFunSuite with Matchers {
         val viaDistributed = graft.queries.TextOps.connectedComponents(pairs, smallCutoff = 0L)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         viaDistributed shouldBe viaDriver
+        // an unbounded cutoff takes the driver path over every edge
+        val viaUnbounded =
+          graft.queries.TextOps.connectedComponents(pairs, smallCutoff = Long.MaxValue)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        viaUnbounded shouldBe viaDriver
       }
     }
   }

@@ -80,4 +80,31 @@ class SessionConfSpec extends AnyFunSuite with Matchers {
     // conf stays at its default (false)
     spark.conf.get(key) shouldBe "false"
   }
+
+  test("table loads and fixture queries leave the session conf alone") {
+    import graft.queries.{Relational, ScratchCatalog}
+    val sf = "/root/testdata/sf0.001"
+    def runAll(): Unit = {
+      graft.Tables.customer(spark, sf)
+      Relational.q113.run(spark, sf).collect()
+      Relational.q111.run(spark, sf).collect()
+    }
+    runAll() // registers the scratch catalog and builds the fixtures
+    val key = "spark.sql.optimizer.excludedRules"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "org.apache.spark.sql.catalyst.optimizer.CollapseRepartition")
+      val before = spark.conf.getAll
+      runAll()
+      spark.conf.getAll shouldBe before
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    // a warm fixture is served as is: no rebuild, no new commit
+    val dir = ScratchCatalog.fixtureDir(Seq(ScratchCatalog.nameFor("magg", sf)), "customer")
+    val built = graft.catalog.TableMetadata.load(dir)
+    Relational.q113.run(spark, sf).collect()
+    val again = graft.catalog.TableMetadata.load(dir)
+    (again.version, again.snapshots.last) shouldBe ((built.version, built.snapshots.last))
+    dir.startsWith(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))) shouldBe true
+  }
 }

@@ -60,7 +60,7 @@ class SketchFormatSpec extends AnyFunSuite with Matchers {
 
   test("csv round-trip preserves schema and values") {
     val src = Tables.orders(spark, sf)
-    val out = "/tmp/graft_rt/spec_csv"
+    val out = java.nio.file.Files.createTempDirectory("graft-spec-csv-").toString
     src.write.mode("overwrite").option("header", "true").csv(out)
     val back = spark.read.schema(src.schema).option("header", "true").csv(out)
     back.schema shouldBe src.schema
@@ -72,7 +72,7 @@ class SketchFormatSpec extends AnyFunSuite with Matchers {
   }
 
   test("partitioned write prunes partitions on filtered read") {
-    val out = "/tmp/graft_rt/spec_part"
+    val out = java.nio.file.Files.createTempDirectory("graft-spec-part-").toString
     Tables.documents(spark, sf).write.mode("overwrite").partitionBy("lang").parquet(out)
     val q = spark.read.parquet(out).filter($"lang" === "en")
     val scan = q.queryExecution.executedPlan.collectLeaves().head
