@@ -10,15 +10,18 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionTuning {
 
-  /** The one local session factory: `local[cpus]` with one shuffle
-    * partition per core, the typed-aggregate fallback threshold, UTC,
-    * no UI, the [[apply]] tuning, and WARN logging. The caller's `conf`
-    * pairs are applied last, so a site overrides any of these (the test
-    * session keeps 8 shuffle partitions on `local[4]`) and adds its own
-    * catalog or extensions conf. */
+  /** The one local session factory: `local[cpus]` with graft's
+    * functions and rules installed ([[graft.functions.GraftExtensions]],
+    * the engine's one install path), one shuffle partition per core,
+    * the typed-aggregate fallback threshold, UTC, no UI, the [[apply]]
+    * tuning, and WARN logging. The caller's `conf` pairs are applied
+    * last, so a site overrides any of these (the test session keeps 8
+    * shuffle partitions on `local[4]`) and adds its own catalog conf. */
   def local(cpus: Int, conf: (String, String)*): SparkSession = {
     val base = apply(SparkSession.builder()
       .master(s"local[$cpus]")
+      // static conf: read once, when the first session is built
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       // typed-aggregate (minhash/simhash) groups per partition routinely
       // exceed the 128-key default before spilling to sort-based agg

@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
-import org.apache.spark.sql.functions.{call_function, col, input_file_name, lit, xxhash64}
+import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
@@ -137,13 +139,15 @@ object BloomIndex {
       columns: Seq[String],
       expectedPerFile: Long): Int = {
     if (files.isEmpty || columns.isEmpty) return 0
-    graft.functions.GraftFunctions.register(spark) // bloom_agg, if not already
     var written = 0
     val df = spark.read.schema(schema)
       .parquet(files.map(f => dir.resolve(f).toString): _*)
       .withColumn("__graft_file", input_file_name())
-    val aggs = columns.map(c =>
-      call_function("bloom_agg", xxhash64(col(c)), lit(expectedPerFile)).as(c))
+    // Spark's aggregate built directly: the catalog writes no function
+    // into the caller's registry and needs no session extension
+    val aggs = columns.map(c => ColumnBridge.column(new BloomFilterAggregate(
+      ColumnBridge.expression(xxhash64(col(c))), expectedPerFile)
+      .toAggregateExpression()).as(c))
     val rows = df.groupBy(col("__graft_file")).agg(aggs.head, aggs.tail: _*).collect()
     val relByName = files.map(f => f.substring(f.lastIndexOf('/') + 1) -> f).toMap
     Files.createDirectories(bloomsDir(dir))

@@ -85,12 +85,12 @@ class ChangesTable(
             spark, identName, tableDir, changesSchema,
             tableDir.resolve("metadata").resolve("changelog").resolve("batch"), options)
           val files = stage.stageWindow(fromV, toV, reapSiblings = true)
+          val readerFactory = new FirstScanFactory
           new org.apache.spark.sql.connector.read.Batch {
             override def planInputPartitions(): Array[InputPartition] =
               if (files.isEmpty) Array.empty
-              else stage.scanOver(files).toBatch.planInputPartitions()
-            override def createReaderFactory(): PartitionReaderFactory =
-              stage.scanOver(Seq.empty).toBatch.createReaderFactory()
+              else readerFactory.plan(stage.scanOver(files))
+            override def createReaderFactory(): PartitionReaderFactory = readerFactory.get
           }
         }
       }
@@ -264,6 +264,7 @@ class ChangelogMicroBatchStream(
     tableDir.resolve("metadata").resolve("changelog")
       .resolve(java.lang.Integer.toHexString(checkpointLocation.hashCode)),
     options)
+  private val readerFactory = new FirstScanFactory
 
   @volatile private var availableNowCap: Option[Int] = None
 
@@ -319,10 +320,8 @@ class ChangelogMicroBatchStream(
     // stage-window retry loop
     staging.requireNoSchemaSpan(fromV, toV)
     val files = staging.stageWindow(fromV, toV)
-    if (files.isEmpty) Array.empty
-    else staging.scanOver(files).toBatch.planInputPartitions()
+    if (files.isEmpty) Array.empty else readerFactory.plan(staging.scanOver(files))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    staging.scanOver(Seq.empty).toBatch.createReaderFactory()
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory.get
 }

@@ -3,7 +3,8 @@ package graft.catalog
 import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
@@ -161,15 +162,39 @@ class LakehouseMicroBatchStream(
     b.build()
   }
 
+  private val readerFactory = new FirstScanFactory
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val added = addedFiles(
       start.asInstanceOf[VersionOffset].version, end.asInstanceOf[VersionOffset].version)
-    if (added.isEmpty) Array.empty
-    else scanOver(added).toBatch.planInputPartitions()
+    if (added.isEmpty) Array.empty else readerFactory.plan(scanOver(added))
   }
 
-  /** The parquet reader factory is configured by schema/options, not by
-    * a file list — one factory serves every micro-batch's partitions. */
-  override def createReaderFactory(): PartitionReaderFactory =
-    scanOver(Seq.empty).toBatch.createReaderFactory()
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory.get
+}
+
+/** A source's one parquet reader factory, taken from the first scan that
+  * has files: the factory is configured by schema and options, not by a
+  * file list, so it serves every later batch, and no scan is ever built
+  * over an empty path list. Spark plans a batch's partitions before it
+  * asks for the factory, so a batch with files finds it set; a batch
+  * without files gets one that is never asked for a reader. */
+private[catalog] final class FirstScanFactory {
+  @volatile private var factory: PartitionReaderFactory = _
+
+  /** The partitions of `scan`, keeping its factory if none is held yet. */
+  def plan(scan: org.apache.spark.sql.connector.read.Scan): Array[InputPartition] = {
+    val batch = scan.toBatch
+    if (factory == null) factory = batch.createReaderFactory()
+    batch.planInputPartitions()
+  }
+
+  def get: PartitionReaderFactory = Option(factory).getOrElse(FirstScanFactory.NoFiles)
+}
+
+private object FirstScanFactory {
+  object NoFiles extends PartitionReaderFactory {
+    override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+      throw new IllegalStateException("reader requested for a batch that planned no files")
+  }
 }

@@ -4,18 +4,17 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session-extension entry point: registers graft's native functions at
-  * session build time —
+/** Session-extension entry point: installs graft's native functions
+  * and its parser, analyzer and optimizer rules at session build time —
   *
   * {{{
   * SparkSession.builder()
   *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   * }}}
   *
-  * This is the install-once path (every session in the deployment gets
-  * the functions, same mechanism Iceberg uses for its extension SQL);
-  * [[GraftFunctions.register]] remains the per-session path for
-  * already-built sessions.
+  * This is the one install path, the mechanism Iceberg uses for its
+  * extension SQL: `graft.SessionTuning.local` sets it on every session
+  * it builds, and no query or catalog call installs anything later.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -230,6 +229,28 @@ case class LshSignatures(
     copy(child = newChild)
 }
 
+object LshSignatures {
+  // (1 - arccos(s)/π)^bits is the per-table collision probability at
+  // cosine s. The synthetic corpus tops out near s≈0.5, so 12-bit
+  // buckets collide almost never (~0.2%/table); 6 bits × 12 tables
+  // gives ~40% candidate recall while candidates stay ~2^-6·tables ≈
+  // 19% of corpus per query. For a true near-dup workload (s ≥ 0.9)
+  // more bits and fewer tables is the right trade.
+  val Tables = 12
+  val Bits = 6
+  val Dim = 64
+
+  /** Seeded Gaussian hyperplanes, flattened (table, bit, dim). */
+  lazy val Planes: Array[Float] = {
+    val rnd = new scala.util.Random(42)
+    Array.fill(Tables * Bits * Dim)(rnd.nextGaussian().toFloat)
+  }
+
+  /** `lsh_sigs(v)`: every table signature under the seeded planes. */
+  def apply(child: Expression): LshSignatures =
+    LshSignatures(child, Tables, Bits, Dim, Planes)
+}
+
 /** Σ xᵢ² as a sequential fold — `vec_norm = sqrt(vec_norm_sq)` done by
   * the caller so sqrt stays a single shared IEEE op. */
 case class VecNormSq(child: Expression)
@@ -273,11 +294,10 @@ case class VecNormSq(child: Expression)
     copy(child = newChild)
 }
 
-/** graft's native functions, one table read by both install paths:
+/** graft's native functions. There is one install path:
   * [[GraftExtensions]] injects every entry at session build time, and
-  * [[register]] installs them on an already-built session (the
-  * non-extension equivalent of `SparkSessionExtensions.injectFunction`).
-  * Each entry is (SQL name, expression class, builder).
+  * `graft.SessionTuning.local` builds every session with it. Each entry
+  * is (SQL name, expression class, builder).
   */
 object GraftFunctions {
   import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain => BloomContains}
@@ -310,19 +330,7 @@ object GraftFunctions {
     ("bloom_contains", classOf[BloomContains], args => BloomContains(args(0), args(1))),
     // UDTF surface: LATERAL VIEW ngram_gen(token_hashes, n) — streaming
     // distinct shingle hashes without materializing the shingle array
-    ("ngram_gen", classOf[NGramHashGen], args => NGramHashGen(args(0), intArg(args, 1, 3))))
-
-  val Names: Seq[String] = Table.map(_._1)
-
-  /** Idempotent: a session whose registry already holds every name
-    * (from an earlier call, or from [[GraftExtensions]]) is left
-    * untouched. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (Names.forall(n => reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))) return
-    Table.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
+    ("ngram_gen", classOf[NGramHashGen], args => NGramHashGen(args(0), intArg(args, 1, 3))),
+    // lsh_sigs(v): q29c's 12 seeded LSH table signatures in one pass
+    ("lsh_sigs", classOf[LshSignatures], args => LshSignatures(args(0))))
 }

@@ -49,8 +49,7 @@ object VectorIndex {
 
   /** Nearest-centroid cell id for a float-vector column: codegen'd
     * argmin over the broadcast centroid array — array_min on
-    * struct(dist, cell) is the deterministic (dist, then cell) argmin.
-    * Requires [[graft.functions.GraftFunctions.register]]. */
+    * struct(dist, cell) is the deterministic (dist, then cell) argmin. */
   def cellOf(v: Column, cents: Array[Array[Double]]): Column = {
     val k = cents.length
     val centArr = typedLit(cents.map(_.toSeq).toSeq)
@@ -121,7 +120,6 @@ object VectorIndex {
       k: Int = 16,
       sampleN: Int = 2048,
       iters: Int = 3): Array[Array[Double]] = {
-    graft.functions.GraftFunctions.register(spark)
     val sample = embeddings.orderBy(col("vec_id")).limit(sampleN)
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray)
@@ -262,7 +260,6 @@ object VectorIndex {
       kCodes: Int = 16,
       sampleN: Int = 2048,
       iters: Int = 3): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    graft.functions.GraftFunctions.register(spark)
     val srcLt = lakeTable(spark, catalog, namespace, sourceTable)
     val srcVersion = graft.catalog.TableMetadata.load(srcLt.tableDir).version
     val index = fq(catalog, namespace, indexName)
@@ -304,7 +301,6 @@ object VectorIndex {
       namespace: Seq[String],
       indexName: String,
       driftFactor: Double = 4.0): String = {
-    graft.functions.GraftFunctions.register(spark)
     // loadOrAdopt: a crash in rebuild's DROP→RENAME window leaves only
     // the completed __rebuild staging — adopt it instead of failing
     val idxLt = IndexSwap.loadOrAdopt(spark, catalog, namespace, indexName, VersionProp)
@@ -427,7 +423,6 @@ object VectorIndex {
       topK: Int = 5,
       shortlistR: Int = 40): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     // loadOrAdopt (not a bare load): ADC search must survive a crash in
     // rebuild's DROP→RENAME window like every other index reader
     val idxLt = IndexSwap.loadOrAdopt(spark, catalog, namespace, indexName, VersionProp)
@@ -485,7 +480,6 @@ object VectorIndex {
       q: Array[Float],
       topK: Int,
       nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cells = probeCells(q, cents, nprobe)
     val qv = typedLit(q.toSeq)
     spark.table(table)

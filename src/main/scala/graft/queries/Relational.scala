@@ -1201,11 +1201,9 @@ object Relational {
     * best a broadcast probe) deleted from every view-generated query
     * that doesn't touch the dimension's columns.
     *
-    * The session may be bare (Verify/Bench build no extensions): the
-    * catalog is registered at runtime and the rule injected through
-    * `spark.experimental.extraOptimizations`, both idempotently. Tables
-    * are created once per JVM and corpus (ScratchCatalog.cachedFixture)
-    * and rebuilt if the source content drifts (regenerated fixtures). */
+    * Tables are created once per JVM and corpus
+    * (ScratchCatalog.cachedFixture) and rebuilt if the source content
+    * drifts (regenerated fixtures). */
   /** Content fingerprint of a catalog-query's parquet source — the
     * staleness key for the cached lakehouse fixtures q111–q129 build in
     * the scratch catalog. A row COUNT alone would serve stale tables
@@ -1287,12 +1285,6 @@ object Relational {
   val q111 = Q(
     "q111_rely_join_elimination",
     (s, d) => {
-      if (!s.sessionState.optimizer.extendedOperatorOptimizationRules
-            .exists(_.isInstanceOf[graft.catalog.ConstraintOptimization]) &&
-          !s.experimental.extraOptimizations
-            .exists(_.isInstanceOf[graft.catalog.ConstraintOptimization]))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.catalog.ConstraintOptimization(s)
       val ns = Seq(relyNs(d))
       val srcCust = customer(s, d).select("c_custkey", "c_name")
       val srcOrd = orders(s, d)
@@ -1384,8 +1376,7 @@ object Relational {
           s"'graft.src.mark'='$mark')") { t =>
         src.createOrReplaceTempView("mordv_src")
         s.sql(s"INSERT INTO $t SELECT * FROM mordv_src")
-        // ONE positional MERGE (its target read sees a clean table, so
-        // this runs on bare sessions too) carrying both price bumps
+        // ONE positional MERGE carrying both price bumps
         s.sql(s"""MERGE INTO $t t
                  |USING (SELECT o_orderkey FROM mordv_src
                  |       WHERE o_orderkey % 7 = 0 OR o_orderkey % 11 = 0) u
@@ -1397,18 +1388,12 @@ object Relational {
         // attach the deletion-vector sidecar to the positional entry
         s.sql(s"CALL $Fixtures.system.vectorize_deletes('$ns', 'orders')")
       }
-      val dir = fx.dir
-      // merged read through the engine API — the SAME path the
-      // MorReads extension rule plans for `spark.table`, but callable
-      // on a bare session (Verify/Bench build no extensions); the DV
-      // probe applies inside it (PlanSpec pins the join-free plan)
-      val meta = graft.catalog.TableMetadata.load(dir)
-      val merged = graft.catalog.MergeOnRead.read(s, dir, meta, meta.files)
-      merged.createOrReplaceTempView("mordv_merged")
+      // MorReads plans the merged read; the DV probe applies inside it
+      // (PlanSpec pins the join-free plan)
       s.sql(
         s"""SELECT o_orderpriority, COUNT(*) AS cnt,
            |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-           |FROM mordv_merged GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
+           |FROM ${fx.table} GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
     },
     Some("""SELECT o_orderpriority, COUNT(*) AS cnt,
            |       CAST(SUM(CAST(
@@ -1507,15 +1492,11 @@ object Relational {
   val q115 = Q(
     "q115_iceberg_roundtrip",
     (s, d) => {
-      val impDir = ensureIceRtFixture(s, d)._2.dir
-      // merged read through the engine API (bare-session path, as q112)
-      val meta = graft.catalog.TableMetadata.load(impDir)
-      val merged = graft.catalog.MergeOnRead.read(s, impDir, meta, meta.files)
-      merged.createOrReplaceTempView("ice_rt115_imp")
+      val imp = ensureIceRtFixture(s, d)._2
       s.sql(
         s"""SELECT s_suppkey % 7 AS grp, COUNT(*) AS cnt,
            |       CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-           |FROM ice_rt115_imp GROUP BY s_suppkey % 7 ORDER BY grp""".stripMargin)
+           |FROM ${imp.table} GROUP BY s_suppkey % 7 ORDER BY grp""".stripMargin)
     },
     Some("""SELECT s_suppkey % 7 AS grp, COUNT(*) AS cnt,
            |       CAST(SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
@@ -1807,11 +1788,8 @@ object Relational {
             .contains(graft.catalog.TableStats.NumRowsProp))
           s.sql(s"CALL $Fixtures.system.analyze('${sup.ns}', 'supplier')").collect()
       }
-      // expected = graft's own merged scan through the engine API (the
-      // table is MoR-dirty; bare-session path, as q115)
-      val meta = graft.catalog.TableMetadata.load(tableDir)
-      val merged = graft.catalog.MergeOnRead.read(s, tableDir, meta, meta.files)
-        .select("s_suppkey", "s_name", "s_acctbal")
+      // expected = graft's own merged read of the MoR-dirty table
+      val merged = s.table(sup.table).select("s_suppkey", "s_name", "s_acctbal")
       // --verify-bounds: the gate also recomputes every exported file's
       // min/max/null-count claims (a wrong bound exits nonzero → the
       // verdict breaks the oracle match)
@@ -1877,13 +1855,10 @@ object Relational {
       // ensure the mirrored fixture exists (cached) — fixture checks
       // only, not q115's full aggregation per sample (r19)
       val sup = ensureIceRtFixture(s, d)._1
-      val tableDir = sup.dir
       val port = s.sql(s"CALL $Fixtures.system.start_rest_catalog(0)")
         .collect()(0).getLong(0)
       try {
-        val meta = graft.catalog.TableMetadata.load(tableDir)
-        val merged = graft.catalog.MergeOnRead.read(s, tableDir, meta, meta.files)
-          .select("s_suppkey", "s_name", "s_acctbal")
+        val merged = s.table(sup.table).select("s_suppkey", "s_name", "s_acctbal")
         val (verdict, rows, _) = pythonIcebergCheck(s,
           s"http://127.0.0.1:$port/v1/namespaces/${sup.ns}/tables/supplier",
           merged, None)

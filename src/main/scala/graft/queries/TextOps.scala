@@ -121,7 +121,6 @@ object TextOps {
     * then get the exact verify, so the result equals the naive join's.
     */
   def jaccardPrefixJoin(ex0: DataFrame, t: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(ex0.sparkSession)
     // The exploded index feeds SIX consumers (freq, both self-join
     // sides via prefix, verify's a and b). ReuseExchange cannot dedupe
     // them — the shingle lambdas' variables defeat plan
@@ -316,7 +315,6 @@ object TextOps {
   val q28c = Q(
     "q28c_minhash_lsh",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // pinned: sig + both band-join sides + verify's a/b all read the
       // index, and ReuseExchange cannot dedupe the shingle lambdas
       val ex = graft.Materialize.pin(explodedShingles(s, d))
@@ -380,7 +378,6 @@ object TextOps {
   val q28d = Q(
     "q28d_simhash",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val tok = tokenized(s, d)
         .select(col("doc_id"), explode(col("toks")).as("token"))
         .select(col("doc_id"), simTokenHash(col("token")).as("h"))
@@ -417,7 +414,6 @@ object TextOps {
   val q28e = Q(
     "q28e_simhash_brute",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val tok = tokenized(s, d)
         .select(col("doc_id"), explode(col("toks")).as("token"))
         .select(col("doc_id"), simTokenHash(col("token")).as("h"))
@@ -1022,7 +1018,6 @@ object TextOps {
   val q48 = Q(
     "q48_heavy_hitters",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val tok = tokenized(s, d).select(explode(col("toks")).as("token"))
       val cands = tok
         .agg(call_function("space_saving", col("token"), lit(4096)).as("cand"))
@@ -1105,7 +1100,6 @@ object TextOps {
   val q45b = Q(
     "q45b_decontaminate_bloom",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val grams = tokenized(s, d)
         .filter(size(col("toks")) >= 5)
         .select(col("doc_id"), transform(col("toks"), t => xxhash64(t)).as("th"))

@@ -27,7 +27,6 @@ object VectorOps {
 
   /** (vec_id, embedding, norm) — norm computed once per vector. */
   private def withNorm(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = embeddings(s, d)
     e
       // fan out of the (possibly single-task) scan: the similarity joins
@@ -162,47 +161,15 @@ object VectorOps {
             |  FROM ev a JOIN ev b ON a.vec_id < b.vec_id)
             |WHERE sim >= 0.4 ORDER BY id1, id2""".stripMargin))
 
-  /** Random-hyperplane LSH signatures (12 tables × 6 bits, seeded
-    * deterministically — see the tuning note below): the scale path for
-    * near-neighbor candidate generation. Output: per-vector bucket
-    * signatures. */
-  // Bucket-width tuning: P(query collides with a sim-s neighbour in one
-  // table) = (1 - arccos(s)/π)^bits. The synthetic corpus tops out near
-  // s≈0.5, so 12-bit buckets collide almost never (~0.2%/table); 6 bits
-  // × 12 tables gives ~40% candidate recall while candidates stay
-  // ~2^-6·tables ≈ 19% of corpus per query. For a true near-dup
-  // workload (s ≥ 0.9) more bits and fewer tables is the right trade.
-  private val lshTables = 12
-  private val lshBits = 6
-  private val lshDim = 64
-
-  private lazy val hyperplanes: Array[Array[Array[Float]]] = {
-    val rnd = new scala.util.Random(42)
-    Array.fill(lshTables, lshBits, lshDim)(rnd.nextGaussian().toFloat)
-  }
-
-  /** Installs `lsh_sigs(v)` → all 12 table signatures in one codegen'd
-    * pass (graft.functions.LshSignatures) — replaces a 72-node
-    * vec_dot/when tree with one expression over a flat plane matrix.
-    * A session that already has it is left untouched. */
-  private def registerLsh(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    if (reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_sigs"))) return
-    reg.createOrReplaceTempFunction("lsh_sigs",
-      { args: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        graft.functions.LshSignatures(args(0), lshTables, lshBits, lshDim,
-          hyperplanes.flatten.flatten)
-      }, "built-in")
-  }
-
   /** ANN top-k via LSH buckets: candidates = vectors sharing ≥1 of the
     * 12 table buckets with the query; exact cosine re-rank on candidates.
+    * The buckets are `lsh_sigs`, seeded random-hyperplane signatures
+    * (12 tables × 6 bits, tuned in [[graft.functions.LshSignatures]]).
     * Same output shape as q29 (recall measured against it in tests).
     */
   val q29c = Q(
     "q29c_ann_lsh",
     (s, d) => {
-      registerLsh(s)
       val e = withNorm(s, d)
       val sigs = e.select(col("vec_id"), col("embedding"), col("nrm"),
         posexplode(call_function("lsh_sigs", col("embedding"))))
@@ -514,7 +481,6 @@ object VectorOps {
   val q70 = Q(
     "q70_embedding_health",
     (s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val nrm = sqrt(call_function("vec_norm_sq", col("embedding")))
       embeddings(s, d)
         .select(col("label"), size(col("embedding")).as("dim"), nrm.as("nrm"))

@@ -24,7 +24,7 @@ class AddFilesSpec extends AnyFunSuite with Matchers {
       .asInstanceOf[graft.catalog.LakehouseTable].tableDir
 
   private def writeExternal(rows: Seq[(Int, String)], parts: Int = 2): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft-addfiles-src-")
+    val dir = TestDirs.create("graft-addfiles-src-")
     rows.toDF("k", "v").repartition(parts, $"k").write.mode("overwrite")
       .parquet(dir.resolve("data").toString)
     dir.resolve("data")

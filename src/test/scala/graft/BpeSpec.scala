@@ -29,7 +29,7 @@ class BpeSpec extends AnyFunSuite with Matchers {
   private val smile = "😀"
 
   private def corpusDir(texts: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("bpe-spec-").toString
+    val dir = TestDirs.create("bpe-spec-").toString
     val rows = texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t) }
     spark.createDataFrame(rows.asJava,
       new StructType().add("doc_id", LongType).add("text", "string"))

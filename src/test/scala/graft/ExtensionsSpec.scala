@@ -4,9 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** The extensions path (`spark.sql.extensions=graft.functions.
-  * GraftExtensions`, set on the shared test session at build time —
-  * it's a static conf) must make the native functions SQL-callable
-  * with no per-session registration call. */
+  * GraftExtensions`, set by the session factory at build time — it's a
+  * static conf) must make the native functions SQL-callable with no
+  * per-session registration call. */
 class ExtensionsSpec extends AnyFunSuite with Matchers {
 
   test("spark.sql.extensions installs vec_dot/vec_norm_sq for plain SQL") {
@@ -33,12 +33,16 @@ class ExtensionsSpec extends AnyFunSuite with Matchers {
       .collect()(0).getDouble(0) shouldBe 11.0
   }
 
-  test("extension path registers EVERY function the per-session path does") {
-    // parity gate: SQL that works under GraftFunctions.register must
-    // not fail with UNRESOLVED_ROUTINE under spark.sql.extensions.
-    // A FRESH session: the shared one may carry per-session temp
-    // registrations from other suites, which would mask a gap here
+  test("a factory session resolves every GraftFunctions.Table name, lsh_sigs included") {
+    // a FRESH session has a fresh function registry: only what the
+    // extension injected at build time is there, and nothing a query
+    // run elsewhere in the suite might have added
     val spark = TestSpark.spark.newSession()
+    val reg = spark.sessionState.functionRegistry
+    val names = functions.GraftFunctions.Table.map(_._1)
+    names should contain("lsh_sigs")
+    names.filterNot(n => reg.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n))) shouldBe empty
     import spark.implicits._
     spark.sql("SELECT space_saving(t, 4) FROM VALUES ('a'), ('a'), ('b') AS v(t)")
       .collect()(0).getSeq[String](0).head shouldBe "a"
@@ -59,32 +63,10 @@ class ExtensionsSpec extends AnyFunSuite with Matchers {
       .createOrReplaceTempView("ext_pm")
     spark.sql("SELECT size(prefix_min_agg(df, h, n, 0.8)) FROM ext_pm")
       .collect()(0).getInt(0) should be >= 1
-  }
-
-  test("register leaves a session that already has every function untouched") {
-    // the extension installed all of them; per-query register calls
-    // must not replace (and log a warning for) each one again
-    val spark = TestSpark.spark.newSession()
-    val reg = spark.sessionState.functionRegistry
-    def builders = functions.GraftFunctions.Names.map(n =>
-      reg.lookupFunctionBuilder(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
-    val installed = builders
-    installed.foreach(_ shouldBe defined)
-    functions.GraftFunctions.register(spark)
-    functions.GraftFunctions.register(spark)
-    builders.zip(installed).foreach { case (now, before) => (now.get eq before.get) shouldBe true }
-    // q29c's own lsh_sigs: a later run keeps the builder the session
-    // holds. Its builder is a non-capturing lambda (one shared instance),
-    // so the held one is swapped for a distinct delegating instance that
-    // a re-registration would replace
-    val lsh = org.apache.spark.sql.catalyst.FunctionIdentifier("lsh_sigs")
-    queries.VectorOps.q29c.run(spark, "/root/testdata/sf0.001")
-    val first = reg.lookupFunctionBuilder(lsh).get
-    val held: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = args => first(args)
-    reg.dropFunction(lsh)
-    reg.createOrReplaceTempFunction("lsh_sigs", held, "built-in")
-    queries.VectorOps.q29c.run(spark, "/root/testdata/sf0.001")
-    (reg.lookupFunctionBuilder(lsh).get eq held) shouldBe true
+    // lsh_sigs: one signature per table, each within its bit width
+    val sigs = spark.sql("SELECT lsh_sigs(array_repeat(CAST(1.0 AS FLOAT), 64))")
+      .collect()(0).getSeq[Long](0)
+    sigs should have size functions.LshSignatures.Tables.toLong
+    sigs.foreach(sig => sig should (be >= 0L and be < (1L << functions.LshSignatures.Bits)))
   }
 }

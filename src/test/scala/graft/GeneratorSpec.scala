@@ -20,7 +20,6 @@ class GeneratorSpec extends AnyFunSuite with Matchers {
   }
 
   test("ngram_gen equals the explode(array_distinct(transform)) formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     // include repeats so dedup is exercised
     val rows = (0 until 50).map { id =>
@@ -39,7 +38,6 @@ class GeneratorSpec extends AnyFunSuite with Matchers {
   }
 
   test("ngram_gen emits nothing for rows shorter than n and works from SQL") {
-    graft.functions.GraftFunctions.register(spark)
     Seq((1L, Seq(10L, 20L)), (2L, Seq(1L, 2L, 3L, 4L)))
       .toDF("id", "th").createOrReplaceTempView("gen_src")
     val out = spark.sql(

@@ -26,7 +26,6 @@ class HashAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("simhash_agg matches per-bit majority, including negative odd hashes") {
-    graft.functions.GraftFunctions.register(spark)
     // includes negative odd hashes: the columnar `srl(h,0) % 2 === 1`
     // formulation got bit 0 wrong for those (SQL % keeps the sign)
     val hs = Seq(5L, -7L, -3L, 123456789L, Long.MinValue + 1, Long.MaxValue)
@@ -46,7 +45,6 @@ class HashAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("minhash_agg equals the 128-column min(xxhash64(lit(i), h)) form") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((1L, 42L), (1L, -99L), (1L, 7L), (2L, 0L), (2L, Long.MinValue))
       .toDF("doc_id", "h")
     val cols = (0 until 128).map(i => min(xxhash64(lit(i), $"h")).as(s"m$i"))
@@ -60,7 +58,6 @@ class HashAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("minhash_bands equals xxhash64 chain over the minima") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((1L, 42L), (1L, -99L), (1L, 7L)).toDF("doc_id", "h")
     val viaCols = df.groupBy($"doc_id")
       .agg(call_function("minhash_agg", $"h", lit(8)).as("sig"))
@@ -74,7 +71,6 @@ class HashAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("prefix_min_agg selects the same prefix set as the row_number window") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val t = 0.8
     // synthetic inverted index: 40 docs × up to 30 distinct shingle
@@ -101,7 +97,6 @@ class HashAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("space_saving keeps every item above the frequency bound under eviction") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // adversarial stream: 3 hot items (300/200/100×) drowned in 2000
     // singletons, capacity 64 — evictions happen constantly, yet
@@ -130,7 +125,6 @@ class HashAggSpec extends AnyFunSuite with Matchers {
   }
 
   test("minhash_agg merges across partitions (shuffle-serialized buffers)") {
-    graft.functions.GraftFunctions.register(spark)
     val df = spark.range(0, 1000, 1, 8) // 8 partitions, one shared group
       .select(lit(1L).as("g"), xxhash64(col("id")).as("h"))
     val sig = df.groupBy($"g")

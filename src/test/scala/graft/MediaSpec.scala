@@ -33,7 +33,6 @@ class MediaSpec extends AnyFunSuite with Matchers {
     val media = (1L to 10L).map(i => (i, payload(8, 8, i.toByte))).toDF("id", "payload")
     val emb = MediaOps.withEmbedding(MediaOps.decodeFeatures(media, StubCodec, 2, 2))
     emb.schema.fieldNames.toSeq shouldBe Seq("vec_id", "embedding")
-    graft.functions.GraftFunctions.register(spark)
     val sims = emb.as("a").crossJoin(emb.as("b"))
       .selectExpr("a.vec_id", "b.vec_id",
         "vec_dot(a.embedding, b.embedding) / sqrt(vec_norm_sq(a.embedding) * vec_norm_sq(b.embedding)) AS sim")

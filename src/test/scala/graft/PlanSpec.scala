@@ -112,7 +112,6 @@ class PlanSpec extends AnyFunSuite with Matchers {
     // the prefix subplan materializes inside the h-keyed pin, so its
     // shape is asserted on the exposed subframe; the outer plan is
     // still checked window- and cartesian-free
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, count, lit}
     val ex = graft.queries.TextOps.explodedShingles(spark, sf)
     val freq = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))

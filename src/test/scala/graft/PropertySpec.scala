@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.functions.{GraftFunctions, Scored, TopKAggregator}
+import graft.functions.{Scored, TopKAggregator}
 
 /** Property-based checks (SURVEY.md §5): algebraic laws the operators
   * must satisfy on arbitrary inputs, not just the fixture data.
@@ -290,7 +290,6 @@ class PropertySpec extends AnyFunSuite with Matchers {
   }
 
   test("vec_dot codegen == higher-order-function fold, bit for bit") {
-    GraftFunctions.register(spark)
     val vecGen = Gen.listOfN(8, Gen.chooseNum(-10.0f, 10.0f))
     forAll(vecGen, vecGen) { (xs, ys) =>
       val df = Seq((xs.toArray, ys.toArray)).toDF("a", "b")

@@ -12,7 +12,7 @@ import graft.catalog.RestRegistry
 class RestRegistryCoherenceSpec extends AnyFunSuite with Matchers {
 
   private def freshWh(): java.nio.file.Path = {
-    val wh = Files.createTempDirectory("graft-reg-coh-")
+    val wh = TestDirs.create("graft-reg-coh-")
     def mkNs(levels: String*): Unit = {
       val d = levels.foldLeft(wh)(_.resolve(_))
       Files.createDirectories(d)

@@ -82,22 +82,31 @@ class SessionConfSpec extends AnyFunSuite with Matchers {
   }
 
   test("table loads and fixture queries leave the session conf alone") {
-    import graft.queries.{Relational, ScratchCatalog}
+    import graft.queries.{Relational, ScratchCatalog, VectorOps}
+    // a fresh session: its function registry holds only what the
+    // extension injected at build time
+    val spark = TestSpark.spark.newSession()
     val sf = "/root/testdata/sf0.001"
     def runAll(): Unit = {
       graft.Tables.customer(spark, sf)
       Relational.q113.run(spark, sf).collect()
       Relational.q111.run(spark, sf).collect()
+      VectorOps.q29c.run(spark, sf).collect()
     }
+    def functionNames = spark.sessionState.functionRegistry.listFunction().toSet
+    val functionsBefore = functionNames
+    val rulesBefore = spark.experimental.extraOptimizations
     runAll() // registers the scratch catalog and builds the fixtures
     val key = "spark.sql.optimizer.excludedRules"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "org.apache.spark.sql.catalyst.optimizer.CollapseRepartition")
-      val before = spark.conf.getAll
-      runAll()
-      spark.conf.getAll shouldBe before
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    spark.conf.set(key, "org.apache.spark.sql.catalyst.optimizer.CollapseRepartition")
+    val before = spark.conf.getAll
+    runAll()
+    spark.conf.getAll shouldBe before
+    // no query installs a function or an optimizer rule
+    val functionsAfter = functionNames
+    (functionsAfter diff functionsBefore, functionsBefore diff functionsAfter) shouldBe
+      ((Set.empty, Set.empty))
+    spark.experimental.extraOptimizations shouldBe rulesBefore
 
     // a warm fixture is served as is: no rebuild, no new commit
     val dir = ScratchCatalog.fixtureDir(Seq(ScratchCatalog.nameFor("magg", sf)), "customer")

@@ -13,7 +13,6 @@ class SketchFormatSpec extends AnyFunSuite with Matchers {
   private val sf = "/root/testdata/sf0.001"
 
   test("bloom_agg/bloom_contains: no false negatives, bounded false positives") {
-    graft.functions.GraftFunctions.register(spark)
     val inserted = spark.range(0, 10000).select(xxhash64($"id").as("h"))
     val bloom = inserted.agg(call_function("bloom_agg", $"h", lit(100000L)).as("bf"))
       .head().getAs[Array[Byte]](0)
