@@ -7,8 +7,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -84,14 +82,7 @@ class ChangesTable(
           val stage = new ChangelogStaging(
             spark, identName, tableDir, changesSchema,
             tableDir.resolve("metadata").resolve("changelog").resolve("batch"), options)
-          val files = stage.stageWindow(fromV, toV, reapSiblings = true)
-          val readerFactory = new FirstScanFactory
-          new org.apache.spark.sql.connector.read.Batch {
-            override def planInputPartitions(): Array[InputPartition] =
-              if (files.isEmpty) Array.empty
-              else readerFactory.plan(stage.scanOver(files))
-            override def createReaderFactory(): PartitionReaderFactory = readerFactory.get
-          }
+          stage.scanOver(stage.stageWindow(fromV, toV, reapSiblings = true)).toBatch
         }
       }
     }
@@ -232,12 +223,8 @@ private[catalog] class ChangelogStaging(
       }
   }
 
-  def scanOver(files: Seq[Path]): Scan = {
-    val b = ParquetTable(identName, spark, options, files.map(_.toString),
-      Some(changesSchema), classOf[ParquetFileFormat]).newScanBuilder(options)
-    b.pruneColumns(changesSchema)
-    b.build()
-  }
+  def scanOver(files: Seq[Path]): Scan = ScanFiles.parquet(
+    spark, identName, options, files.map(_.toString), changesSchema, changesSchema)
 }
 
 private[catalog] object ChangelogStaging {
@@ -320,7 +307,7 @@ class ChangelogMicroBatchStream(
     // stage-window retry loop
     staging.requireNoSchemaSpan(fromV, toV)
     val files = staging.stageWindow(fromV, toV)
-    if (files.isEmpty) Array.empty else readerFactory.plan(staging.scanOver(files))
+    readerFactory.plan(staging.scanOver(files))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory.get

@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, EqualTo, Expression, IsNotNull, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, Sort, SubqueryAlias}
@@ -48,8 +47,9 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * Both rewrites fire only on RELY declarations — NOT ENFORCED alone
   * is documentation, RELY is the user signing the correctness contract
   * (wrong data under RELY yields wrong results; that is the standard
-  * everywhere this optimization ships). Kill switch:
-  * `spark.graft.cbo.constraintOptimization=false`.
+  * everywhere this optimization ships). Kill switch: Spark's own
+  * `spark.sql.optimizer.excludedRules`, with
+  * `graft.catalog.ConstraintOptimization` appended to its value.
   *
   * Attribute tracing is conservative: the base relation must be
   * reachable through Project/Filter/Sort/SubqueryAlias chains only
@@ -57,14 +57,9 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * map to relation attributes by case-insensitive name with exprId
   * identity carrying them up the chain.
   */
-case class ConstraintOptimization(spark: SparkSession)
-    extends Rule[LogicalPlan] with PredicateHelper {
+object ConstraintOptimization extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def enabled: Boolean =
-    spark.conf.get("spark.graft.cbo.constraintOptimization", "true").toBoolean
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case p @ Project(_, j: Join) =>
         eliminateJoin(j, p.references).map(Project(p.projectList, _)).getOrElse(p)
@@ -77,7 +72,6 @@ case class ConstraintOptimization(spark: SparkSession)
         eliminateJoin(j, j.left.outputSet).getOrElse(j)
       case a: Aggregate => removeDistinct(a)
     }
-  }
 
   /** The LakehouseTable relation at the bottom of a chain of operators
     * that preserve both row multiplicity *downward reasoning* needs

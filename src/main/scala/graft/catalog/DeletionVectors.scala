@@ -37,7 +37,6 @@ import org.apache.spark.unsafe.types.UTF8String
 object DeletionVectors {
 
   val Magic = 0x47445631 // "GDV1"
-  val EnabledConf = "spark.graft.dv.enabled"
   val MaxPositionsConf = "spark.graft.dv.maxPositions"
   val DefaultMaxPositions = 1000000L
 

@@ -3,11 +3,8 @@ package graft.catalog
 import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -155,46 +152,36 @@ class LakehouseMicroBatchStream(
     window.flatMap(_.files).distinct.filterNot(before.contains)
   }
 
-  private def scanOver(files: Seq[String]): org.apache.spark.sql.connector.read.Scan = {
-    val b = ParquetTable(identName, spark, options, files.map(abs),
-      Some(schema), classOf[ParquetFileFormat]).newScanBuilder(options)
-    b.pruneColumns(readSchema)
-    b.build()
-  }
-
   private val readerFactory = new FirstScanFactory
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val added = addedFiles(
       start.asInstanceOf[VersionOffset].version, end.asInstanceOf[VersionOffset].version)
-    if (added.isEmpty) Array.empty else readerFactory.plan(scanOver(added))
+    readerFactory.plan(ScanFiles.parquet(
+      spark, identName, options, added.map(abs), schema, readSchema))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory.get
 }
 
 /** A source's one parquet reader factory, taken from the first scan that
-  * has files: the factory is configured by schema and options, not by a
-  * file list, so it serves every later batch, and no scan is ever built
-  * over an empty path list. Spark plans a batch's partitions before it
-  * asks for the factory, so a batch with files finds it set; a batch
-  * without files gets one that is never asked for a reader. */
+  * plans partitions: the factory is configured by schema and options,
+  * not by a file list, so it serves every later batch. Spark asks a
+  * stream for a reader factory on every micro-batch; taking each
+  * batch's own would build one (and broadcast the Hadoop conf) per
+  * batch. Spark plans a batch's partitions before it asks for the
+  * factory, so a batch with files finds it set; a batch without files
+  * gets [[ScanFiles.NoFiles]], which is never asked for a reader. */
 private[catalog] final class FirstScanFactory {
   @volatile private var factory: PartitionReaderFactory = _
 
   /** The partitions of `scan`, keeping its factory if none is held yet. */
   def plan(scan: org.apache.spark.sql.connector.read.Scan): Array[InputPartition] = {
     val batch = scan.toBatch
-    if (factory == null) factory = batch.createReaderFactory()
-    batch.planInputPartitions()
+    val parts = batch.planInputPartitions()
+    if (factory == null && parts.nonEmpty) factory = batch.createReaderFactory()
+    parts
   }
 
-  def get: PartitionReaderFactory = Option(factory).getOrElse(FirstScanFactory.NoFiles)
-}
-
-private object FirstScanFactory {
-  object NoFiles extends PartitionReaderFactory {
-    override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-      throw new IllegalStateException("reader requested for a batch that planned no files")
-  }
+  def get: PartitionReaderFactory = Option(factory).getOrElse(ScanFiles.NoFiles)
 }

@@ -8,8 +8,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{col, input_file_name, lit, not, coalesce, substring_index}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.InsertableRelation
@@ -216,15 +214,10 @@ class LakehouseTable(
         // pushable — `COUNT(*) WHERE p = x` on a 100 TB table becomes
         // a driver-side metadata fold, zero tasks. Everything else
         // stays residual as before (skipping remains an optimization,
-        // never a correctness decision). Conf-gated off with the same
-        // flag family as aggregate pushdown.
-        val exactOk =
-          !spark.conf.getOption("spark.graft.exactFilterPushdown").contains("false")
+        // never a correctness decision).
         smetaCached = null // filters changed: re-resolve against them
-        acceptedExact =
-          if (!exactOk) Set.empty
-          else filters.filter(f =>
-            FileSkipping.exactlyDecidable(smeta.files, smeta.fileStats, smeta.schema, f)).toSet
+        acceptedExact = filters.filter(f =>
+          FileSkipping.exactlyDecidable(smeta.files, smeta.fileStats, smeta.schema, f)).toSet
         filters.filterNot(acceptedExact) // residual: Spark re-applies post-scan
       }
       override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
@@ -244,7 +237,6 @@ class LakehouseTable(
       private def tryAnswer(
           agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation) =
         if (!pushed.forall(acceptedExact) ||
-          spark.conf.getOption("spark.graft.aggregatePushdown").contains("false") ||
           // pending merge-on-read deletes: recorded counts/ranges count
           // rows the merging read will subtract
           MergeOnRead.anyApplicable(smeta, smeta.files)) None
@@ -282,18 +274,7 @@ class LakehouseTable(
             }
           case None => ()
         }
-        // three metadata-only pruning layers before any footer is
-        // opened: min/max ranges (layout-dependent), per-file bloom
-        // probes for point predicates on indexed columns
-        // (layout-independent), and bucket pruning for point predicates
-        // on the bucket column (the skipping a hash layout admits —
-        // hash-scattered ranges defeat min/max there)
-        val rangeSurvivors =
-          FileSkipping.prune(smeta.files, smeta.fileStats, smeta.schema, pushed.toSeq)
-        val bloomSurvivors = BloomIndex.prune(
-          tableDir, smeta.properties, smeta.schema, rangeSurvivors, pushed.toSeq)
-        val filterSurvivors = Bucketing.pruneByBucket(
-          bloomSurvivors, smeta.properties, smeta.schema, pushed.toSeq)
+        val filterSurvivors = ScanFiles.prune(tableDir, smeta, smeta.files, pushed.toSeq)
         // LIMIT truncation: cumulative recorded row counts cover the
         // limit → later files can never be needed. Spark only pushes a
         // limit this far when no residual filter remains — i.e. a
@@ -317,40 +298,10 @@ class LakehouseTable(
         }
         val limitTruncated = survivors.size != filterSurvivors.size
         LakehouseTable.lastScanFileCounts.set((survivors.size, totalFileCount))
-        val inner = ParquetTable(identName, spark, options, survivors.map(abs),
-          Some(smeta.schema), classOf[ParquetFileFormat])
-          .newScanBuilder(options)
-        inner.pushDataFilters(pushed)
-        inner.pruneColumns(required)
-        val delegate = inner.build()
-        // Bucket-aware planning for storage-partitioned joins: when the
-        // table is bucketed, v2 bucketing is enabled, and EVERY live
-        // file is bucket-addressable (written by a bucketed commit —
-        // rewrites break the mapping and silently disable this), the
-        // scan groups files into one input partition per bucket and
-        // reports KeyGroupedPartitioning so a join of two co-bucketed
-        // tables runs with no shuffle on either side.
-        val bucketPlan: Option[(String, Int, Map[Int, Seq[String]])] =
-          Bucketing.specOf(smeta.properties)
-            .filter(_ => spark.conf.getOption(
-              "spark.sql.sources.v2.bucketing.enabled").contains("true"))
-            // the partitioning report's key expressions resolve against
-            // the scan OUTPUT: once column pruning has dropped the
-            // bucket column, a KeyGroupedPartitioning over it is
-            // unresolvable (Spark's runtime-pruning rules throw) — and
-            // useless, since no surviving operator keys on it. Same
-            // guard Iceberg applies (groupBy refs must survive in
-            // readSchema).
-            .filter { case (bcol, _) =>
-              required.fieldNames.exists(_.equalsIgnoreCase(bcol)) }
-            .flatMap { case (bcol, n) =>
-              val ids = survivors.map(f => Bucketing.bucketIdOf(f))
-              if (ids.forall(i => i.isDefined && i.get < n))
-                Some((bcol, n,
-                  survivors.zip(ids.map(_.get)).groupBy(_._2)
-                    .view.mapValues(_.map(_._1)).toMap))
-              else None
-            }
+        def delegateOver(files: Seq[String]) = ScanFiles.parquet(
+          spark, identName, options, files.map(abs), smeta.schema, required, pushed)
+        val delegate = delegateOver(survivors)
+        val bucketPlan = ScanFiles.bucketPlan(spark, smeta, required, survivors)
         // Wrap only to add the streaming entry point and bucket
         // partitioning; every other batch-path method forwards to the
         // delegate parquet scan untouched — including its size
@@ -362,78 +313,32 @@ class LakehouseTable(
           with org.apache.spark.sql.connector.read.SupportsReportPartitioning
           with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 
-          // Runtime file skipping (the DSv2 face of dynamic partition
-          // pruning): a selective broadcast-side join on a partition or
-          // bloom-indexed column hands its matched values here AFTER
-          // the build side runs, and whole fact files drop before a
-          // single task reads them — on a 1000-executor join of a
-          // day's dim slice against a 100 TB fact table, the difference
-          // between scanning the table and scanning the day. Disabled
-          // on bucketed scans (the bucket→file mapping is the
-          // partitioning contract there).
+          // Runtime file skipping: a selective broadcast-side join on a
+          // partition or bloom-indexed column hands its matched values
+          // here AFTER the build side runs, and whole fact files drop
+          // before a single task reads them — on a 1000-executor join
+          // of a day's dim slice against a 100 TB fact table, the
+          // difference between scanning the table and scanning the
+          // day. Disabled on bucketed scans (the bucket→file mapping is
+          // the partitioning contract there).
           private var runtimeSurvivors: Seq[String] = survivors
 
           override def filterAttributes():
               Array[org.apache.spark.sql.connector.expressions.NamedReference] =
             if (bucketPlan.isDefined || limitTruncated) Array.empty
-            else (smeta.partitionColumns ++
-                BloomIndex.probeableColumns(smeta.properties, smeta.schema)).distinct
-              // Spark resolves these against the scan OUTPUT
-              // (PartitionPruning.getFilterableTableScan → resolveRefs
-              // throws on a miss): a partition/bloom column pruned from
-              // the projection cannot take runtime filters — e.g. a
-              // bucket-partitioned postings index scanned as (tok, docs)
-              // under a runtime-filtered join.
-              .filter(c => required.fieldNames.exists(_.equalsIgnoreCase(c)))
-              .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-              .toArray
+            else ScanFiles.runtimeFilterColumns(smeta, required)
 
           override def filter(
-              predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-            val v1 = predicates.flatMap(RuntimePredicates.toV1).toSeq
-            if (v1.nonEmpty) {
-              runtimeSurvivors = Bucketing.pruneByBucket(
-                BloomIndex.prune(tableDir, smeta.properties, smeta.schema,
-                  FileSkipping.prune(runtimeSurvivors, smeta.fileStats, smeta.schema, v1), v1),
-                smeta.properties, smeta.schema, v1)
-              LakehouseTable.lastRuntimeFilteredCounts = (runtimeSurvivors.size, totalFileCount)
-            }
-          }
+              predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
+            runtimeSurvivors = ScanFiles.runtimePrune(
+              tableDir, smeta, runtimeSurvivors, predicates, totalFileCount)
 
           override def outputPartitioning():
               org.apache.spark.sql.connector.read.partitioning.Partitioning =
-            bucketPlan match {
-              case Some((bcol, n, _)) =>
-                // the transform name selects the FunctionCatalog
-                // definition Spark resolves the key expression against —
-                // it must name the hash that actually laid the files
-                // out, and distinct names keep a spark-hash × iceberg-
-                // hash join from being wrongly planned as co-located
-                val t =
-                  if (Bucketing.icebergHash(smeta.properties))
-                    // count in the NAME, not an argument — a literal
-                    // child would fail KeyGroupedPartitioning.satisfies
-                    // (every leaf must be a cluster key) and silently
-                    // re-shuffle the join; see [[IcebergBucketFunction]]
-                    org.apache.spark.sql.connector.expressions.Expressions.apply(
-                      s"${IcebergBucketFunction.Prefix}$n",
-                      org.apache.spark.sql.connector.expressions.Expressions.column(bcol))
-                  else
-                    org.apache.spark.sql.connector.expressions.Expressions.bucket(n, bcol)
-                new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-                  Array(t), n)
-              case None =>
-                new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
-            }
+            bucketPlan.map(_.partitioning).getOrElse(
+              new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0))
           override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-            val base = delegate match {
-              case s: org.apache.spark.sql.connector.read.SupportsReportStatistics =>
-                s.estimateStatistics()
-              case _ => new org.apache.spark.sql.connector.read.Statistics {
-                override def sizeInBytes() = java.util.OptionalLong.empty()
-                override def numRows() = java.util.OptionalLong.empty()
-              }
-            }
+            val base = delegate.estimateStatistics()
             // layer ANALYZE results (TableStats) over the delegate's
             // size estimate: row count when the format can't know it,
             // and per-column ndv/null stats for CBO join reordering
@@ -499,36 +404,20 @@ class LakehouseTable(
           override def readSchema(): StructType = delegate.readSchema()
           override def description(): String = delegate.description()
           override def toBatch: org.apache.spark.sql.connector.read.Batch = {
-            // LAST-RESORT guard, not the normal path: the MorReads
-            // resolution rule (GraftExtensions) rewrites dirty-table
-            // relations into merged plans whose sub-scans carry the
-            // plain-read marker. Reaching here dirty and unmarked means
-            // the session has no extensions installed — fail loudly
-            // instead of silently resurrecting deleted rows.
-            if (!options.containsKey(MergeOnRead.PlainReadOption) &&
-              MergeOnRead.anyApplicable(smeta, smeta.files))
-              throw new IllegalStateException(
-                s"$identName has merge-on-read deletes pending: batch reads need " +
-                  "spark.sql.extensions=graft.functions.GraftExtensions (the MorReads " +
-                  "rule), or run Maintenance.compact / MergeOnRead.materializeDeletes first")
+            ScanFiles.requireMerged(identName, smeta, options)
             bucketPlan match {
               case None if runtimeSurvivors.size != survivors.size =>
                 // runtime filters narrowed the file list after the
                 // delegate was built: rebuild it over the survivors
-                val inner2 = ParquetTable(identName, spark, options,
-                  runtimeSurvivors.map(abs), Some(smeta.schema), classOf[ParquetFileFormat])
-                  .newScanBuilder(options)
-                inner2.pushDataFilters(pushed)
-                inner2.pruneColumns(required)
-                inner2.build().toBatch
+                delegateOver(runtimeSurvivors).toBatch
               case None => delegate.toBatch
-              case Some((_, n, byBucket)) =>
+              case Some(plan) =>
                 new org.apache.spark.sql.connector.read.Batch {
                   private val inner = delegate.toBatch
                   override def planInputPartitions():
                       Array[org.apache.spark.sql.connector.read.InputPartition] =
-                    (0 until n).map { i =>
-                      val pfs = byBucket.getOrElse(i, Seq.empty).map { f =>
+                    (0 until plan.count).map { i =>
+                      val pfs = plan.byBucket.getOrElse(i, Seq.empty).map { f =>
                         val p = tableDir.resolve(f)
                         org.apache.spark.sql.execution.datasources.PartitionedFile(
                           org.apache.spark.sql.catalyst.InternalRow.empty,

@@ -196,8 +196,7 @@ object MergeOnRead {
         val paths = es.map(e => abs(e.path))
         if (es.head.isPositional) {
           val vecs = es.map(_.vector).filter(_.nonEmpty).distinct
-          val dvOn = !spark.conf.getOption(DeletionVectors.EnabledConf).contains("false")
-          if (dvOn && vecs.nonEmpty && es.forall(_.vector.nonEmpty)) {
+          if (vecs.nonEmpty && es.forall(_.vector.nonEmpty)) {
             // deletion-vector path: a row-local codegen'd probe — the
             // anti-join's shuffle/broadcast stage disappears from the
             // merged read entirely
@@ -677,8 +676,7 @@ object MergeOnRead {
       .map(_.toLong).getOrElse(DeletionVectors.DefaultMaxPositions)
     def wants(d: DeleteFile): Boolean =
       d.isPositional && d.vector.isEmpty && d.rows <= cap
-    if (!current.deleteFiles.exists(wants(_)) ||
-      spark.conf.getOption(DeletionVectors.EnabledConf).contains("false")) return 0
+    if (!current.deleteFiles.exists(wants(_))) return 0
     val next = current.version + 1
     var n = 0
     val updated = current.deleteFiles.map { d =>
@@ -741,8 +739,7 @@ object MergeOnRead {
       val dvCap = spark.conf.getOption(DeletionVectors.MaxPositionsConf)
         .map(_.toLong).getOrElse(DeletionVectors.DefaultMaxPositions)
       val vectorRel =
-        if (!isPos || n > dvCap ||
-          spark.conf.getOption(DeletionVectors.EnabledConf).contains("false")) ""
+        if (!isPos || n > dvCap) ""
         else {
           val positions = tuples.collect()
             .groupBy(_.getString(0))

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -57,95 +56,51 @@ private[catalog] class PositionalRowIdScan(
     org.apache.spark.sql.types.LongType)
   private val delegateRequired = StructType(dataRequired.fields :+ rowIdxField)
 
+  // same observability hook as the main scan: a partition-selective
+  // MoR MERGE shows its static file skipping here — from an ON
+  // conjunct (`t.day = '2024-01-02'`) or a source-subquery literal
+  // the DeltaTargetPruning filter swap walks below the cardinality
+  // check. Runtime values prune via filter() instead (the
+  // DynamicPruningSubquery DeltaTargetPruning inserts — Spark's own
+  // DPP is structurally blind on row-level writes, see that rule).
   @volatile private var survivors: Seq[String] = {
-    val ranged = FileSkipping.prune(meta.files, meta.fileStats, meta.schema, pushed.toSeq)
-    val s = Bucketing.pruneByBucket(
-      BloomIndex.prune(tableDir, meta.properties, meta.schema, ranged, pushed.toSeq),
-      meta.properties, meta.schema, pushed.toSeq)
-    // same observability hook as the main scan: a partition-selective
-    // MoR MERGE shows its static file skipping here — from an ON
-    // conjunct (`t.day = '2024-01-02'`) or a source-subquery literal
-    // the DeltaTargetPruning filter swap walks below the cardinality
-    // check. Runtime values prune via filter() instead (the
-    // DynamicPruningSubquery DeltaTargetPruning inserts — Spark's own
-    // DPP is structurally blind on row-level writes, see that rule).
+    val s = ScanFiles.prune(tableDir, meta, meta.files, pushed.toSeq)
     LakehouseTable.lastPositionalScanFileCounts = (s.size, meta.files.size)
     s
   }
 
-  /** Bucket-aware planning, same contract (and same guards) as the
-    * main scan: bucketed table + v2 bucketing enabled + bucket column
-    * surviving in the output + EVERY survivor file bucket-addressable
-    * → the scan groups its per-file partitions into one input
-    * partition per bucket and reports KeyGroupedPartitioning, so the
-    * target side of a co-bucketed MoR `MERGE INTO t USING s ON t.k =
-    * s.k` plans a storage-partitioned join — ZERO shuffle on either
-    * side of the 100 TB daily-upsert shape (the COW path's bucketed
-    * scan already had this; the delta path shuffled both sides until
-    * now). Files later appended by delta commits are not bucket-named,
-    * which flips `bucketIdOf` to None and degrades this scan — not its
+  /** Bucket-aware planning, the main scan's contract: the target side
+    * of a co-bucketed MoR `MERGE INTO t USING s ON t.k = s.k` plans a
+    * storage-partitioned join — zero shuffle on either side of the
+    * 100 TB daily-upsert shape. Files later appended by delta commits
+    * are not bucket-named, which degrades this scan — not its
     * correctness — until compaction restores the layout. */
-  private val bucketPlan: Option[(String, Int)] =
-    Bucketing.specOf(meta.properties)
-      .filter(_ => spark.conf.getOption(
-        "spark.sql.sources.v2.bucketing.enabled").contains("true"))
-      // key expressions resolve against the scan OUTPUT (the Iceberg
-      // required-schema-survival guard, same as the main scan)
-      .filter { case (bcol, _) =>
-        required.fieldNames.exists(_.equalsIgnoreCase(bcol)) }
-      .filter { case (_, n) =>
-        survivors.nonEmpty &&
-          survivors.forall(f => Bucketing.bucketIdOf(f).exists(_ < n)) }
+  private val bucketPlan = ScanFiles.bucketPlan(spark, meta, required, survivors)
 
   override def outputPartitioning():
       org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    bucketPlan match {
-      case Some((bcol, n)) =>
-        new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-          Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(n, bcol)), n)
-      case None =>
-        new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
-    }
+    bucketPlan.map(_.partitioning).getOrElse(
+      new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0))
 
-  /** Runtime file skipping, same contract as the main table scan: a
-    * MERGE's ON keys over partition/bloom columns hand their matched
-    * values here after the source side runs, and whole target files
-    * drop before any task reads them — the difference between a daily
-    * MoR MERGE scanning one partition and scanning the table. Disabled
-    * on bucketed scans (the bucket→file mapping is the partitioning
-    * contract there, main-scan rule). */
+  /** Runtime file skipping, the main scan's contract: a MERGE's ON
+    * keys over partition/bloom columns hand their matched values here
+    * after the source side runs, and whole target files drop before
+    * any task reads them. Disabled on bucketed scans. */
   override def filterAttributes():
       Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     if (bucketPlan.isDefined) Array.empty
-    else (meta.partitionColumns ++
-        BloomIndex.probeableColumns(meta.properties, meta.schema)).distinct
-      .filter(c => dataRequired.fieldNames.exists(_.equalsIgnoreCase(c)))
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
+    else ScanFiles.runtimeFilterColumns(meta, dataRequired)
 
   override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    val v1 = predicates.flatMap(RuntimePredicates.toV1).toSeq
-    if (v1.nonEmpty) {
-      survivors = Bucketing.pruneByBucket(
-        BloomIndex.prune(tableDir, meta.properties, meta.schema,
-          FileSkipping.prune(survivors, meta.fileStats, meta.schema, v1), v1),
-        meta.properties, meta.schema, v1)
-      LakehouseTable.lastRuntimeFilteredCounts = (survivors.size, meta.files.size)
-    }
-  }
+      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
+    survivors = ScanFiles.runtimePrune(tableDir, meta, survivors, predicates, meta.files.size)
 
   override def readSchema(): StructType = required
   override def description(): String = s"lakehouse-positional-rowid-scan $identName"
 
-  private def mkDelegate(files: Seq[String]): Scan = {
-    val inner = ParquetTable(identName, spark, options, files.map(abs),
-      Some(StructType(meta.schema.fields :+ rowIdxField)), classOf[ParquetFileFormat])
-      .newScanBuilder(options)
-    inner.pushDataFilters(pushed)
-    inner.pruneColumns(delegateRequired)
-    inner.build()
-  }
+  private def mkDelegate(files: Seq[String]): Scan =
+    ScanFiles.parquet(spark, identName, options, files.map(abs),
+      StructType(meta.schema.fields :+ rowIdxField), delegateRequired, pushed)
 
   /** required-order output plan: data columns by delegate index, the
     * row-id struct marked -1; computed against the delegate's ACTUAL
@@ -184,18 +139,7 @@ private[catalog] class PositionalRowIdScan(
   }
 
   override def toBatch: Batch = {
-    // same LAST-RESORT guard as the main scan (LakehouseTable.toBatch):
-    // the MorReads rule rewrites dirty-table relations into merged
-    // plans whose sub-scans carry the plain-read marker. Reaching here
-    // dirty and unmarked means the session has no extensions installed
-    // — a SELECT of the row-id column or a delta DML target read would
-    // silently scan raw and resurrect deleted rows; fail loudly.
-    if (!options.containsKey(MergeOnRead.PlainReadOption) &&
-      MergeOnRead.anyApplicable(meta, meta.files))
-      throw new IllegalStateException(
-        s"$identName has merge-on-read deletes pending: batch reads need " +
-          "spark.sql.extensions=graft.functions.GraftExtensions (the MorReads " +
-          "rule), or run Maintenance.compact / MergeOnRead.materializeDeletes first")
+    ScanFiles.requireMerged(identName, meta, options)
     new Batch {
     // built per planInputPartitions so runtime filtering applied after
     // physical planning still narrows the file list (main-scan pattern)
@@ -236,7 +180,7 @@ private[catalog] class PositionalRowIdScan(
               "cannot derive row identity for positional deletes")
       }
       bucketPlan match {
-        case Some((_, n)) =>
+        case Some(plan) =>
           // one input partition PER BUCKET, keyed for the storage-
           // partitioned join; all splits of a bucket's files read
           // sequentially in one task (the SPJ granularity tradeoff the
@@ -246,7 +190,7 @@ private[catalog] class PositionalRowIdScan(
           val byBucket = perFile.groupBy(p =>
             Bucketing.bucketIdOf(p.relPath).getOrElse(throw new IllegalStateException(
               s"bucketPlan held but ${p.relPath} is not bucket-addressable")))
-          (0 until n).map { i =>
+          (0 until plan.count).map { i =>
             PosRowIdBucketPartition(
               byBucket.getOrElse(i, Array.empty), Bucketing.partitionKey(i), i)
               : InputPartition

@@ -120,13 +120,8 @@ class LakehouseRowLevelOperation(
 
     private var survivors: Seq[String] = initialSurvivors
 
-    private def buildDelegate(): Scan = {
-      val inner = ParquetTable(identName, spark, options, survivors.map(abs),
-        Some(base.schema), classOf[ParquetFileFormat])
-        .newScanBuilder(options)
-      inner.pruneColumns(required)
-      inner.build()
-    }
+    private def buildDelegate(): Scan =
+      ScanFiles.parquet(spark, identName, options, survivors.map(abs), base.schema, required)
 
     override def readSchema(): StructType = required
     override def description(): String = s"lakehouse-cow-scan-$cmd"

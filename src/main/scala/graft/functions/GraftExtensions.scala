@@ -42,9 +42,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // RELY'd PK/UNIQUE/FK exploitation: join elimination + distinct
     // removal (see ConstraintOptimization)
-    ext.injectOptimizerRule { session =>
-      graft.catalog.ConstraintOptimization(session)
-    }
+    ext.injectOptimizerRule(_ => graft.catalog.ConstraintOptimization)
     GraftFunctions.Table.foreach { case (name, cls, builder) =>
       ext.injectFunction(
         (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))

@@ -119,13 +119,12 @@ class AggPushdownSpec extends AnyFunSuite with Matchers {
     assert(!isMetadataOnly(partial))
     partial.collect()(0).getLong(0) shouldBe 200L
 
-    // conf gate: same answers through a real scan
-    spark.conf.set("spark.graft.exactFilterPushdown", "false")
-    try {
-      val off = spark.sql("SELECT count(*) FROM lakehouse.aggpd.part WHERE p = 1")
-      assert(!isMetadataOnly(off))
-      off.collect()(0).getLong(0) shouldBe 100L
-    } finally spark.conf.unset("spark.graft.exactFilterPushdown")
+    // oracle: the metadata-only count equals a count over the table's
+    // live files read as plain parquet
+    val dir = java.nio.file.Paths.get(TestSpark.warehouse, "aggpd", "part")
+    val live = TableMetadata.load(dir).files.map(f => dir.resolve(f).toString)
+    spark.read.parquet(live: _*).where($"p" === 1).count() shouldBe
+      q.collect()(0).getLong(0)
     spark.sql("DROP TABLE lakehouse.aggpd.part")
   }
 

@@ -21,17 +21,29 @@ class ConstraintOptimizationSpec extends AnyFunSuite with Matchers {
   private def aggs(df: DataFrame): Seq[Aggregate] =
     df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }
 
+  /** Runs `f` with the rule listed in Spark's own kill switch,
+    * `spark.sql.optimizer.excludedRules`, restoring the value after. */
+  private def withRuleExcluded[T](f: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key,
+      (saved.filter(_.nonEmpty).toSeq :+ "graft.catalog.ConstraintOptimization").mkString(","))
+    try f finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Rows of `sql` with the rule ON, compared against the rule OFF. */
   private def sameResultNoJoin(sql: String): Unit = {
     val on = spark.sql(sql)
     joins(on) shouldBe empty
     val rows = on.collect().map(_.toString).sorted
-    spark.conf.set("spark.graft.cbo.constraintOptimization", "false")
-    try {
+    withRuleExcluded {
       val off = spark.sql(sql)
       joins(off) should not be empty
       rows shouldBe off.collect().map(_.toString).sorted
-    } finally spark.conf.set("spark.graft.cbo.constraintOptimization", "true")
+    }
   }
 
   private def setup(): Unit = {
@@ -161,11 +173,10 @@ class ConstraintOptimizationSpec extends AnyFunSuite with Matchers {
 
   test("DISTINCT removal honors the kill switch") {
     setup()
-    spark.conf.set("spark.graft.cbo.constraintOptimization", "false")
-    try {
+    withRuleExcluded {
       val df = spark.sql("SELECT DISTINCT id, name FROM lakehouse.cbo.dim")
       aggs(df) should not be empty
-    } finally spark.conf.set("spark.graft.cbo.constraintOptimization", "true")
+    }
   }
 
   test("NOT fired: time-traveled / branch snapshots never qualify") {

@@ -9,7 +9,8 @@ import graft.catalog.{DeletionVectors, MergeOnRead, TableMetadata}
   * ([[graft.catalog.DeletionVectors]]): the merged read of a dirty
   * file applies a codegen'd per-row probe instead of an anti-join.
   * Pins: (1) no join in the merged read's plan once a vector exists,
-  * (2) row-set parity with the entry-based (anti-join) path, (3) blob
+  * (2) row-set parity with the entry-based (anti-join) read of a twin
+  * table consolidated without a vector, (3) blob
   * round-trip + vacuum retention. */
 class DeletionVectorSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
@@ -30,24 +31,30 @@ class DeletionVectorSpec extends AnyFunSuite with Matchers {
     DeletionVectors.read(dir, "deletes/dv1-test.bin")("data/c2/b.parquet").toSeq shouldBe Seq(7L)
   }
 
-  test("consolidated positional deletes read join-free via the vector, identical rows") {
+  /** A merge-on-read table with two positional MERGE entries, ready to
+    * consolidate. */
+  private def twoEntryTable(name: String): java.nio.file.Path = {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS lakehouse.dv_ns")
-    spark.sql("DROP TABLE IF EXISTS lakehouse.dv_ns.t")
-    spark.sql("CREATE TABLE lakehouse.dv_ns.t (k INT, v STRING) " +
+    spark.sql(s"DROP TABLE IF EXISTS lakehouse.dv_ns.$name")
+    spark.sql(s"CREATE TABLE lakehouse.dv_ns.$name (k INT, v STRING) " +
       "TBLPROPERTIES ('graft.merge.mode'='merge-on-read')")
     (0 until 200).map(i => (i, s"v$i")).toDF("k", "v")
       .createOrReplaceTempView("dv_src")
-    spark.sql("INSERT INTO lakehouse.dv_ns.t SELECT * FROM dv_src")
+    spark.sql(s"INSERT INTO lakehouse.dv_ns.$name SELECT * FROM dv_src")
     // two positional MERGEs → two positional entries → consolidatable
     Seq((5, "u5"), (6, "u6")).toDF("k", "v").createOrReplaceTempView("dv_chg1")
-    spark.sql("""MERGE INTO lakehouse.dv_ns.t t USING dv_chg1 s ON t.k = s.k
+    spark.sql(s"""MERGE INTO lakehouse.dv_ns.$name t USING dv_chg1 s ON t.k = s.k
                 |WHEN MATCHED THEN UPDATE SET t.v = s.v""".stripMargin)
     Seq((7, "u7"), (8, "u8")).toDF("k", "v").createOrReplaceTempView("dv_chg2")
-    spark.sql("""MERGE INTO lakehouse.dv_ns.t t USING dv_chg2 s ON t.k = s.k
+    spark.sql(s"""MERGE INTO lakehouse.dv_ns.$name t USING dv_chg2 s ON t.k = s.k
                 |WHEN MATCHED THEN UPDATE SET t.v = s.v""".stripMargin)
-    val dir = java.nio.file.Paths.get(TestSpark.warehouse, "dv_ns", "t")
+    val dir = java.nio.file.Paths.get(TestSpark.warehouse, "dv_ns", name)
     TableMetadata.load(dir).deleteFiles.count(_.isPositional) shouldBe 2
+    dir
+  }
 
+  test("consolidated positional deletes read join-free via the vector, identical rows") {
+    val dir = twoEntryTable("t")
     spark.sql("CALL lakehouse.system.consolidate_deletes('dv_ns', 't')")
     val meta = TableMetadata.load(dir)
     val pos = meta.deleteFiles.filter(_.isPositional)
@@ -65,16 +72,21 @@ class DeletionVectorSpec extends AnyFunSuite with Matchers {
     physical should not include "Join"
     physical should include("pos_deleted") // the probe is IN the plan
 
-    // parity: the entry-based anti-join path returns the same rows
+    // parity: a twin table consolidated under a one-position cap keeps
+    // the entry-based anti-join read, and returns the same rows
     val viaVector = df.orderBy($"k").as[(Int, String)].collect().toSeq
-    spark.conf.set(DeletionVectors.EnabledConf, "false")
+    val twinDir = twoEntryTable("twin")
+    spark.conf.set(DeletionVectors.MaxPositionsConf, "1")
     try {
-      val fallback = spark.table("lakehouse.dv_ns.t")
-      fallback.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      } should not be empty // the anti-join path is genuinely different
-      fallback.orderBy($"k").as[(Int, String)].collect().toSeq shouldBe viaVector
-    } finally spark.conf.set(DeletionVectors.EnabledConf, "true")
+      spark.sql("CALL lakehouse.system.consolidate_deletes('dv_ns', 'twin')")
+    } finally spark.conf.unset(DeletionVectors.MaxPositionsConf)
+    TableMetadata.load(twinDir).deleteFiles.filter(_.isPositional).map(_.vector) shouldBe Seq("")
+    val twin = spark.table("lakehouse.dv_ns.twin")
+    twin.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    } should not be empty // the anti-join path is genuinely different
+    twin.orderBy($"k").as[(Int, String)].collect().toSeq shouldBe viaVector
+    spark.sql("DROP TABLE lakehouse.dv_ns.twin")
     viaVector.size shouldBe 200
     viaVector.filter(r => r._1 >= 5 && r._1 <= 8).map(_._2) shouldBe
       Seq("u5", "u6", "u7", "u8")

@@ -495,6 +495,62 @@ class MergeSqlSpec extends AnyFunSuite with Matchers {
     spark.sql("DROP TABLE lakehouse.merge_ns.bs")
   }
 
+  test("MoR MERGE row-id scan reports the target's declared bucket hash") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lakehouse.merge_ns")
+    def bucketed(name: String, iceberg: Boolean, mor: Boolean): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS lakehouse.merge_ns.$name")
+      val props = (if (mor) Seq("'write.merge.mode'='merge-on-read'") else Nil) ++
+        (if (iceberg) Seq("'graft.bucket.hash'='iceberg'") else Nil)
+      spark.sql(s"CREATE TABLE lakehouse.merge_ns.$name (k INT, v STRING) " +
+        "PARTITIONED BY (bucket(4, k))" +
+        (if (props.isEmpty) "" else props.mkString(" TBLPROPERTIES (", ", ", ")")))
+    }
+    Seq.tabulate(200)(i => (i, s"t$i")).toDF("k", "v").createOrReplaceTempView("hx_t")
+    Seq.tabulate(50)(i => (i * 5, s"s${i * 5}")).toDF("k", "v").createOrReplaceTempView("hx_s")
+    def mergeInto(target: String, source: String): String = {
+      spark.sql(s"INSERT INTO lakehouse.merge_ns.$target SELECT * FROM hx_t")
+      spark.sql(s"INSERT INTO lakehouse.merge_ns.$source SELECT * FROM hx_s")
+      val df = spark.sql(
+        s"""MERGE INTO lakehouse.merge_ns.$target t USING lakehouse.merge_ns.$source s
+           |ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET t.v = s.v
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      df.queryExecution.executedPlan.treeString(
+        verbose = false, addSuffix = false, maxFields = 25, printOperatorId = false)
+    }
+    def checkRows(target: String): Unit = {
+      val rows = spark.table(s"lakehouse.merge_ns.$target").as[(Int, String)].collect()
+      rows.length shouldBe 210
+      val byKey = rows.toMap
+      byKey.size shouldBe 210
+      byKey(5) shouldBe "s5"
+      byKey(7) shouldBe "t7"
+      byKey(245) shouldBe "s245"
+    }
+
+    withBucketingConfs {
+      // iceberg-hash target, spark-hash source: the layouts differ, so
+      // the join must not be planned co-located
+      bucketed("hx_ti", iceberg = true, mor = true)
+      bucketed("hx_ss", iceberg = false, mor = false)
+      mergeInto("hx_ti", "hx_ss")
+      checkRows("hx_ti")
+
+      // both on the iceberg hash: co-located, no shuffle on either side
+      bucketed("hx_ti2", iceberg = true, mor = true)
+      bucketed("hx_si", iceberg = true, mor = false)
+      val plan = mergeInto("hx_ti2", "hx_si")
+      withClue(plan) {
+        plan should include ("lakehouse-positional-rowid-scan")
+        plan should include ("Join")
+        plan should not include "Exchange"
+      }
+      checkRows("hx_ti2")
+    }
+    Seq("hx_ti", "hx_ss", "hx_ti2", "hx_si").foreach(t =>
+      spark.sql(s"DROP TABLE lakehouse.merge_ns.$t"))
+  }
+
   test("keyed MoR delta DML commits equality entries, not positional ones") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS lakehouse.merge_ns")
     spark.sql("DROP TABLE IF EXISTS lakehouse.merge_ns.kd")
