@@ -133,8 +133,7 @@ private[catalog] class ChangelogStaging(
     }
     val success = dir.resolve("_SUCCESS")
     if (!Files.exists(success)) {
-      SessionConf.writeMicrosParquet(windowDf(fromV, toV), dir.toString,
-        mode = Some("overwrite"))
+      CommitFiles.write(windowDf(fromV, toV), dir, overwrite = true)
     }
     if (!Files.isDirectory(dir)) return Seq.empty
     Fs.children(dir).iterator

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path}
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -9,8 +8,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{DataWriter, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -134,9 +131,8 @@ class LakehouseDeltaOperation(
         // KeyGroupedPartitioning and the mirror's bucket[n] claim
         // honestly degrade until compaction re-buckets them through
         // Bucketing.cluster (BucketSpec pins that repair)
-        val dataRel = s"data/c$next-$op-${UUID.randomUUID().toString.take(8)}"
-        val delPrefix = if (keyIdentity.isDefined) "d" else "p"
-        val delRel = s"deletes/$delPrefix$next-${UUID.randomUUID().toString.take(8)}"
+        val dataRel = CommitFiles.plainRel(next, op)
+        val delRel = CommitFiles.deleteRel(if (keyIdentity.isDefined) "d" else "p", next)
         new LakehouseDeltaWrite(
           spark, identName, tableDir, base, op, dataRel, delRel, keyIdentity)
       }
@@ -185,16 +181,8 @@ private class LakehouseDeltaWrite(
       // FileFormatDataWriter instead would consult the coordinator a
       // second time inside the task and self-deny (observed as an
       // endless CommitDenied retry loop).
-      def factoryFor(schema: StructType) = SessionConf.withMicros(spark) {
-        // micros timestamps → skippable stats; prepareWrite captures
-        // the conf into the job conf, so the scope ends here
-        val job = org.apache.hadoop.mapreduce.Job.getInstance(
-          spark.sessionState.newHadoopConf())
-        val f = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-        (f, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
-      }
-      val (dataF, dataConf) = factoryFor(base.schema)
-      val (keyF, keyConf) = factoryFor(delSchema)
+      val (dataF, dataConf) = CommitFiles.outputWriters(spark, base.schema)
+      val (keyF, keyConf) = CommitFiles.outputWriters(spark, delSchema)
       DeltaTaskWriterFactory(
         dataF, dataConf, base.schema, tableDir.resolve(dataRel).toString,
         keyF, keyConf, delSchema, tableDir.resolve(delRel).toString,
@@ -217,7 +205,7 @@ private class LakehouseDeltaWrite(
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      Seq(dataRel, delRel).foreach(rel => removeStaging(tableDir.resolve(rel)))
+      Seq(dataRel, delRel).foreach(rel => Fs.deleteRecursively(tableDir.resolve(rel)))
   }
 
   /** One commit: data files in (at seq = next), delete entries in (at
@@ -228,60 +216,47 @@ private class LakehouseDeltaWrite(
     * publish/rebase discipline as the other commit sites: an append
     * racer commutes, a conflicting racer fails clean. */
   private def publish(dataFiles: Seq[String], delFiles: Seq[String]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    def footersOf(rel: Seq[String], sch: StructType) = rel.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(tableDir.resolve(f).toString), sch)
-    }.toMap
     val next = base.version + 1
-    val dataFooters = footersOf(dataFiles, base.schema)
-    val delFooters = footersOf(delFiles, delSchema)
-    val entries = delFiles
-      .map { f =>
-        keyIdentity match {
-          case Some(ks) =>
-            // equality entry: applies by key-range overlap + sequence,
-            // never names data files — footer ranges keep clean files
-            // provably clean (MergeOnRead.applicable)
-            DeleteFile(f, ks, next, delFooters(f).rows, delFooters(f).cols,
-              paired = dataFiles.nonEmpty)
-          case None =>
-            DeleteFile(f, Seq(DeleteFile.PosFileCol, DeleteFile.PosPosCol), next,
-              delFooters(f).rows, delFooters(f).cols, kind = DeleteFile.Positional,
-              paired = dataFiles.nonEmpty)
-        }
+    // the collect half of the commit core: zero-row task files (empty
+    // ones carry no rows and no delete semantics) are dropped, a
+    // staging dir left with none is removed
+    val data = CommitFiles.collectFiles(
+      spark, tableDir, base.schema, base.properties, dataRel, dataFiles)
+    val dels = CommitFiles.collectFiles(spark, tableDir, delSchema, Map.empty, delRel, delFiles)
+    val entries = dels.files.map { f =>
+      keyIdentity match {
+        case Some(ks) =>
+          // equality entry: applies by key-range overlap + sequence,
+          // never names data files — footer ranges keep clean files
+          // provably clean (MergeOnRead.applicable)
+          DeleteFile(f, ks, next, dels.footers(f).rows, dels.footers(f).cols,
+            paired = data.files.nonEmpty)
+        case None =>
+          DeleteFile(f, Seq(DeleteFile.PosFileCol, DeleteFile.PosPosCol), next,
+            dels.footers(f).rows, dels.footers(f).cols, kind = DeleteFile.Positional,
+            paired = data.files.nonEmpty)
       }
-      .filter(_.rows > 0) // empty task files carry no delete semantics
-    if (entries.isEmpty) removeStaging(tableDir.resolve(delRel))
-    if (dataFiles.isEmpty) removeStaging(tableDir.resolve(dataRel))
-    if (entries.isEmpty && dataFiles.isEmpty) return // nothing matched, no commit
+    }
+    if (entries.isEmpty && data.files.isEmpty) return // nothing matched, no commit
 
-    BloomIndex.buildForFiles(spark, tableDir, base.schema, base.properties, dataFiles)
-    val allFiles = base.files ++ dataFiles
+    val allFiles = base.files ++ data.files
     // a MERGE ... INSERT's explicit BY DEFAULT identity values advance
     // the high-water mark here, exactly as on batch INSERT — otherwise
     // the next minting commit hands the same range out again; rebase
     // merges the marks monotonically under races
     val props = IdentityColumns.advance(base.properties,
-      IdentityColumns.committedExtreme(base.schema, base.properties,
-        dataFooters.view.mapValues(_.cols).toMap,
-        dataFooters.view.mapValues(_.rows).toMap))
+      IdentityColumns.committedExtreme(base.schema, base.properties, data.stats, data.rows))
     TableMetadata.commitOrRebase(tableDir, base = base, attempt = base.copy(
       version = next,
       files = allFiles,
       properties = props,
-      fileStats = base.fileStats ++ dataFooters.view.mapValues(_.cols).toMap,
-      fileRows = base.fileRows ++ dataFooters.view.mapValues(_.rows).toMap,
+      fileStats = base.fileStats ++ data.stats,
+      fileRows = base.fileRows ++ data.rows,
       deleteFiles = base.deleteFiles ++ entries,
       snapshots = base.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), op, dataFiles.size, allFiles.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(dataFiles)))
+        next, System.currentTimeMillis(), op, data.files.size, allFiles.size)),
+      appendDelta = Some(TableMetadata.AppendDelta(data.files)))
   }
-
-  private def removeStaging(dir: Path): Unit =
-    if (Files.isDirectory(dir)) {
-      Fs.deleteRecursively(dir)
-    }
 }
 
 private case class DeltaTaskWriterFactory(

@@ -1274,14 +1274,14 @@ object IcebergExport {
                 col(DeleteFile.PosFileCol)).as("file_path"),
               col(DeleteFile.PosPosCol).cast(LongType).as("pos"))
             .orderBy(col("file_path"), col("pos"))
-          writeSingleParquet(spark, rewritten, withFieldIds(
+          writeSingleParquet(rewritten, withFieldIds(
             StructType(Seq(
               StructField("file_path", StringType, nullable = false),
               StructField("pos", LongType, nullable = false))),
             Map("file_path" -> PosPathFieldId, "pos" -> PosPosFieldId)), dir, rel)
         } else {
           val keySchema = StructType(d.keyColumns.map(c => meta.schema(c)))
-          writeSingleParquet(spark, src.select(d.keyColumns.map(col): _*),
+          writeSingleParquet(src.select(d.keyColumns.map(col): _*),
             withFieldIds(keySchema, ids), dir, rel)
         }
         deleteBytesRewritten.addAndGet(Files.size(dir.resolve(rel)))
@@ -1576,25 +1576,15 @@ object IcebergExport {
 
   /** Write `df` as EXACTLY ONE parquet file at `rel` (delete files are
     * single spec objects, not directories). Coalesce(1) is safe: delete
-    * parquets are O(changed rows), never corpus-sized. */
+    * parquets are O(changed rows), never corpus-sized. Names are
+    * deterministic (cache keys): a re-export after state loss
+    * legitimately replaces the identical previous rewrite. */
   private def writeSingleParquet(
-      spark: SparkSession,
       df: org.apache.spark.sql.DataFrame,
       schema: StructType,
-      dir: Path, rel: String): Unit = {
-    val tmp = dir.resolve(rel + ".tmpdir")
+      dir: Path, rel: String): Unit =
     // carry the parquet.field.id metadata through a plain select — the
     // writer reads it off the schema when fieldId.write is enabled
-    val projected = df.select(schema.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name, f.metadata)).toSeq: _*)
-    projected.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Fs.children(tmp).find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no parquet written under $tmp"))
-    Files.createDirectories(dir.resolve(rel).getParent)
-    // names are deterministic (cache keys): a re-export after state loss
-    // legitimately replaces the identical previous rewrite
-    Files.move(part, dir.resolve(rel),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    Fs.deleteRecursively(tmp)
-  }
+    CommitFiles.writeOne(df.select(schema.fields.map(f =>
+      col(f.name).cast(f.dataType).as(f.name, f.metadata)).toSeq: _*), dir, rel)
 }

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
@@ -466,7 +465,7 @@ object IcebergImport {
     // data files: link + one footer read each (rows, stats), preserving
     // the Iceberg data sequence per file
     val conf = spark.sessionState.newHadoopConf()
-    val commitRel = s"data/c2-iceimport-${UUID.randomUUID().toString.take(8)}"
+    val commitRel = CommitFiles.plainRel(2, "iceimport")
     Files.createDirectories(dir.resolve(commitRel))
     // bucket-addressable commit dir: a file whose manifest tuple claims
     // a bucket id under the mapped layout links as `b-…/part-<id>-…`,
@@ -475,7 +474,7 @@ object IcebergImport {
     // nothing, and the mirror re-exports the tuples. Unclaimed files
     // (older specs) stay in the plain commit dir: pruning never skips
     // them and the scan degrades to unordered partitioning if any exist.
-    val bucketRel = s"data/b-iceimport-${UUID.randomUUID().toString.take(8)}"
+    val bucketRel = CommitFiles.bucketRel(2, "iceimport")
     if (dataRefs.exists(_.bucket.isDefined))
       Files.createDirectories(dir.resolve(bucketRel))
     def link(src: Path, targetRel: String): Unit = {
@@ -542,7 +541,7 @@ object IcebergImport {
     // position deletes: remap file_path URIs to the imported relative
     // paths; entries targeting files absent from this snapshot drop
     // their rows (they deleted nothing visible)
-    val delDir = s"deletes/iceimport-${UUID.randomUUID().toString.take(8)}"
+    val delDir = CommitFiles.deleteRel("iceimport", 2)
     Files.createDirectories(dir.resolve(delDir))
     import org.apache.spark.sql.functions.{col, element_at, typedlit}
     val posEntriesOpt: Seq[Option[DeleteFile]] = posRefs.zipWithIndex.map { case (r, i) =>
@@ -584,7 +583,7 @@ object IcebergImport {
             element_at(typedlit(relBySrc), col("file_path")).as(DeleteFile.PosFileCol),
             col("pos").cast(LongType).as(DeleteFile.PosPosCol))
           .filter(col(DeleteFile.PosFileCol).isNotNull)
-        writeOneParquet(spark, mapped, dir, rel)
+        CommitFiles.writeOne(mapped, dir, rel)
       } finally src.unpersist()
       val footer = FooterStats.collectFull(conf,
         new org.apache.hadoop.fs.Path(dir.resolve(rel).toString),
@@ -760,19 +759,4 @@ object IcebergImport {
   private def asLocal(uriOrPath: String): Path =
     if (uriOrPath.startsWith("file:")) Paths.get(java.net.URI.create(uriOrPath))
     else Paths.get(uriOrPath)
-
-  /** Write exactly one parquet file at `rel` (rows/stats come from the
-    * caller's footer read — no read-back). */
-  private def writeOneParquet(
-      spark: SparkSession,
-      df: org.apache.spark.sql.DataFrame,
-      dir: Path, rel: String): Unit = {
-    val tmp = dir.resolve(rel + ".tmpdir")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Fs.children(tmp).find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no parquet written under $tmp"))
-    Files.createDirectories(dir.resolve(rel).getParent)
-    Files.move(part, dir.resolve(rel))
-    Fs.deleteRecursively(tmp)
-  }
 }

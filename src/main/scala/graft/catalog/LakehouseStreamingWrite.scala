@@ -1,15 +1,10 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path}
-import java.util.UUID
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DSv2 streaming sink: `df.writeStream.toTable("lakehouse.ns.t")`.
   *
@@ -68,19 +63,10 @@ class LakehouseStreamingWrite(
           "declared GENERATED ALWAYS — declare GENERATED BY DEFAULT and supply " +
           "values, or ingest via batch INSERT")
     }
-    val stagingRel = s"data/s-${UUID.randomUUID().toString.take(12)}"
-    val stagingDir = tableDir.resolve(stagingRel)
-    // micros timestamps → skippable stats; toBatch + factory creation
-    // capture the scoped conf into the write job, nothing leaks
-    val (innerWrite, delegate) = SessionConf.withMicros(spark) {
-      val w = ParquetTable(identName, spark,
-        new CaseInsensitiveStringMap(Map("path" -> stagingDir.toString).asJava),
-        Seq(stagingDir.toString), Some(meta.schema), classOf[ParquetFileFormat])
-        .newWriteBuilder(info)
-        .build()
-        .toBatch
-      (w, w.createBatchWriterFactory(pInfo): DataWriterFactory)
-    }
+    val stagingRel = CommitFiles.plainRel(meta.version + 1, "stream")
+    val innerWrite = CommitFiles.batchWrite(
+      spark, identName, tableDir.resolve(stagingRel), meta.schema, info)
+    val delegate = innerWrite.createBatchWriterFactory(pInfo)
     pending = Some((stagingRel, innerWrite))
     // CHECK constraints guard every streamed row before it reaches the
     // epoch's staging files — same row-local predicate the delta DML
@@ -136,25 +122,20 @@ class LakehouseStreamingWrite(
       throw new IllegalStateException(s"commit of epoch $epochId with no pending write"))
     pending = None
     innerWrite.commit(messages) // finalize task files into the staging dir
-    val stagingDir = tableDir.resolve(stagingRel)
-    val newFiles =
-      if (!Files.isDirectory(stagingDir)) Seq.empty
-      else Fs.children(stagingDir).iterator
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-        .map(n => s"$stagingRel/$n").toSeq.sorted
     val meta = TableMetadata.load(tableDir)
+    val staged = CommitFiles.collect(spark, tableDir, meta.schema, meta.properties, stagingRel)
     // an empty epoch in append mode publishes nothing (no metadata
     // churn); in replace mode it must still truncate — publish anyway
-    if (newFiles.isEmpty && !replace) return
+    if (staged.files.isEmpty && !replace) return
     upsertKeys match {
       case Some(keys) =>
         require(!replace,
           "graft.upsertKeys and complete/truncate output mode are mutually exclusive")
-        Maintenance.watermarkedUpsertPublish(spark, tableDir, newFiles, keys,
-          meta.schema, meta.properties, s"stream-${info.queryId()}", epochId)
+        Maintenance.watermarkedUpsertPublish(spark, tableDir, staged, keys, meta,
+          s"stream-${info.queryId()}", epochId)
       case None =>
-        Maintenance.watermarkedPublish(spark, tableDir, newFiles, meta.schema,
-          meta.properties, s"stream-${info.queryId()}", epochId, replace)
+        Maintenance.watermarkedPublish(spark, tableDir, staged, meta,
+          s"stream-${info.queryId()}", epochId, replace)
     }
   }
 
@@ -163,10 +144,7 @@ class LakehouseStreamingWrite(
       pending = None
       try innerWrite.abort(messages)
       finally {
-        val stagingDir = tableDir.resolve(stagingRel)
-        if (Files.isDirectory(stagingDir)) {
-          Fs.deleteRecursively(stagingDir)
-        }
+        Fs.deleteRecursively(tableDir.resolve(stagingRel))
       }
     }
   }

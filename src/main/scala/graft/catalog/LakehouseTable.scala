@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path}
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -686,43 +685,22 @@ class LakehouseTable(
       .filter(not(coalesce(cond, lit(false))))
     // a bucketed table's rewrite keeps the layout contract: the hit
     // files were bucket-addressable, so their replacements re-cluster
-    // through the one layout writer into a b- commit — otherwise a
-    // single COW DELETE silently degraded the scan's
-    // KeyGroupedPartitioning and the mirror's bucket[n] claim until the
-    // next compaction
-    val (commitRel, kept) = Bucketing.specOf(current.properties) match {
-      case Some((bcol, n)) =>
-        (s"data/b-delete$nextVersion-${UUID.randomUUID().toString.take(8)}",
-          Bucketing.cluster(keptRows, bcol, n, current.properties))
-      case None =>
-        (s"data/c$nextVersion-delete-${UUID.randomUUID().toString.take(8)}", keptRows)
-    }
-    val commitDir = tableDir.resolve(commitRel)
-    SessionConf.writeMicrosParquet(kept, commitDir.toString)
-
-    val staged = Fs.children(commitDir).iterator
-      .map(_.getFileName.toString)
-      .filter(_.endsWith(".parquet"))
-      .map(n => s"$commitRel/$n")
-      .toSeq.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val allFooters = staged.map { f =>
-      f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), current.schema)
-    }.toMap
-    val (newFiles, footers) = Maintenance.dropEmptyFiles(tableDir, staged, allFooters)
-    val newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-    BloomIndex.buildForFiles(spark, tableDir, current.schema, current.properties, newFiles)
-    val survivors = current.files.filterNot(hitFiles.contains)
+    // into a b- commit — otherwise a single COW DELETE silently
+    // degraded the scan's KeyGroupedPartitioning and the mirror's
+    // bucket[n] claim until the next compaction
+    val staged = CommitFiles.writeData(spark, tableDir, current.schema, current.properties,
+      CommitFiles.dataRel(current.properties, nextVersion, "delete"), keptRows)
+    val hitSet = hitFiles.toSet
+    val survivors = current.files.filterNot(hitSet.contains)
     val survivorSet = survivors.toSet
-    val allFiles = survivors ++ newFiles
+    val allFiles = survivors ++ staged.files
     TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
       version = nextVersion,
       files = allFiles,
-      fileStats = current.fileStats.view.filterKeys(survivorSet.contains).toMap ++ newStats,
-      fileRows = current.fileRows.view.filterKeys(survivorSet.contains).toMap ++
-        footers.view.mapValues(_.rows).toMap,
+      fileStats = current.fileStats.view.filterKeys(survivorSet.contains).toMap ++ staged.stats,
+      fileRows = current.fileRows.view.filterKeys(survivorSet.contains).toMap ++ staged.rows,
       snapshots = current.snapshots :+ Snapshot(
-        nextVersion, System.currentTimeMillis(), "delete", newFiles.size, allFiles.size)))
+        nextVersion, System.currentTimeMillis(), "delete", staged.files.size, allFiles.size)))
   }
 
   /** Filtered overwrite (static-mode `INSERT OVERWRITE ... PARTITION`):
@@ -766,31 +744,26 @@ class LakehouseTable(
       startMeta: TableMetadata,
       identBases: Map[String, Long] = Map.empty): Unit = {
     // schema/partitioning are commit-stable; the caller's load is reused
-    val bucketSpec = Bucketing.specOf(startMeta.properties)
+    val op = if (overwrite) "overwrite" else "append"
 
-    /** Cluster `df` per the table's layout contract and write one
-      * commit's files; returns (commitRel, files, footers). Factored so
-      * an identity-range re-mint can rewrite with the SAME clustering
-      * (bucketed tables rely on part-file index = bucket id). */
-    def writeCommitFiles(df: DataFrame)
-        : (String, Seq[String], Map[String, FooterStats.FileFooter]) = {
-      // bucketed commits use the `b-` prefix: their part-file index IS
-      // the bucket id (repartition(n, col) = HashPartitioning), which
-      // the scan relies on for storage-partitioned join planning
-      val commitRel =
-        if (bucketSpec.isDefined) s"data/b-${UUID.randomUUID().toString.take(12)}"
-        else s"data/c-${UUID.randomUUID().toString.take(12)}"
-      val commitDir = tableDir.resolve(commitRel)
+    /** Write one commit's files under the table's layout contract.
+      * Factored so an identity-range re-mint can rewrite with the SAME
+      * clustering (bucketed tables rely on part-file index = bucket
+      * id). */
+    def writeCommitFiles(df: DataFrame): CommitFiles.Staged =
+      CommitFiles.writeData(spark, tableDir, startMeta.schema, startMeta.properties,
+        CommitFiles.dataRel(startMeta.properties, startMeta.version + 1, op), df, layout)
 
-      // Cluster by the declared partition columns so each file covers a
-      // narrow key range; Parquet min/max stats then let pushed-down
-      // filters skip whole files/row groups on read. Bucketed tables
-      // cluster by hash instead: file part-i = bucket i. Hidden
-      // temporal/truncate transforms cluster by their DERIVED value
-      // (each day/hour/prefix lands wholly in its own file set) and sort
-      // within by the SOURCE column — the footer ranges come out tight
-      // and disjoint, so `ts BETWEEN …` file-skips like Iceberg's
-      // partition pruning with no derived column stored or queried.
+    // Cluster by the declared partition columns so each file covers a
+    // narrow key range; Parquet min/max stats then let pushed-down
+    // filters skip whole files/row groups on read (bucketed tables
+    // cluster by hash instead: file part-i = bucket i). Hidden
+    // temporal/truncate transforms cluster by their DERIVED value
+    // (each day/hour/prefix lands wholly in its own file set) and sort
+    // within by the SOURCE column — the footer ranges come out tight
+    // and disjoint, so `ts BETWEEN …` file-skips like Iceberg's
+    // partition pruning with no derived column stored or queried.
+    def layout(df: DataFrame): DataFrame = {
       val hiddenExprs = HiddenPartitioning.clusteringExprs(
         df, startMeta.schema, startMeta.properties)
       // declared write sort order (WriteSortOrder.Prop): refines the
@@ -798,77 +771,46 @@ class LakehouseTable(
       // supplies the whole clustering — range-distribute + sort so files
       // cover disjoint intervals and footer ranges prune like partitions
       val sortOrderCols = WriteSortOrder.colsOf(startMeta.properties)
-      val clustered = bucketSpec match {
-        case Some((bcol, n)) =>
-          // part-file index = bucket id under the table's DECLARED hash
-          // (spark murmur3, or Iceberg's Appendix B hash routed through
-          // Spark's stock shuffle — see Bucketing.cluster)
-          Bucketing.cluster(df, bcol, n, startMeta.properties)
-        case None if hiddenExprs.nonEmpty =>
-          // RANGE partitioning, not hash: derived day/hour/prefix values
-          // are few and ORDINAL — hashing a handful of days can collide
-          // them into one task (and one file spanning all days, whose
-          // footer range prunes nothing); range boundaries fall between
-          // distinct derived values, so each task holds whole
-          // consecutive days and the within-partition sort on the source
-          // column makes every file's range tight. Files end up covering
-          // DISJOINT source intervals, so a time-window read touches
-          // only the overlapping files — Iceberg partition pruning via
-          // footer stats. The partition count is EXPLICIT because AQE
-          // coalesces column-only range shuffles by size, merging
-          // adjacent days back into one file and undoing the clustering
-          // (observed: 3 days → 1 file on a small commit).
-          val idents = startMeta.partitionColumns.map(df.col)
-          val sortCols =
-            HiddenPartitioning.sourceCols(startMeta.properties).map(df.col) ++
-              idents ++ sortOrderCols.map(df.col)
-          df.repartitionByRange(
-              df.sparkSession.sessionState.conf.numShufflePartitions,
-              (hiddenExprs ++ idents): _*)
-            .sortWithinPartitions(sortCols: _*)
-        case None if startMeta.partitionColumns.nonEmpty =>
-          val cols = startMeta.partitionColumns.map(df.col)
-          df.repartition(cols: _*)
-            .sortWithinPartitions(cols ++ sortOrderCols.map(df.col): _*)
-        case None if sortOrderCols.nonEmpty =>
-          // RANGE, not hash: the point is disjoint per-file intervals of
-          // the leading sort column (hash would scatter every value range
-          // across all files and the footer ranges would prune nothing);
-          // explicit partition count for the same AQE-coalescing reason
-          // as the hidden-transform branch above
-          df.repartitionByRange(
-              df.sparkSession.sessionState.conf.numShufflePartitions,
-              sortOrderCols.map(df.col): _*)
-            .sortWithinPartitions(sortOrderCols.map(df.col): _*)
-        case None => df
-      }
-      // INT96 (Spark's legacy default) carries no usable parquet stats —
-      // write modern micros timestamps so timestamp columns are skippable
-      SessionConf.writeMicrosParquet(clustered, commitDir.toString)
-
-      val staged = Fs.children(commitDir).iterator
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet"))
-        .map(n => s"$commitRel/$n")
-        .toSeq.sorted
-      // footer-only stats read per new file → file-level skipping on scan
-      val conf = spark.sessionState.newHadoopConf()
-      val allFooters = staged.map { f =>
-        f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), startMeta.schema)
-      }.toMap
-      // Spark materializes task 0's file even when its partition is
-      // empty — drop zero-row files so no dead entries (or false bucket
-      // claims) enter the metadata
-      val (files, footers) = Maintenance.dropEmptyFiles(tableDir, staged, allFooters)
-      // bloom-indexed tables get sidecars for the new files at write time
-      // (one pass over only the new data), so the index stays fresh
-      BloomIndex.buildForFiles(spark, tableDir, startMeta.schema, startMeta.properties, files)
-      (commitRel, files, footers)
+      if (hiddenExprs.nonEmpty) {
+        // RANGE partitioning, not hash: derived day/hour/prefix values
+        // are few and ORDINAL — hashing a handful of days can collide
+        // them into one task (and one file spanning all days, whose
+        // footer range prunes nothing); range boundaries fall between
+        // distinct derived values, so each task holds whole
+        // consecutive days and the within-partition sort on the source
+        // column makes every file's range tight. Files end up covering
+        // DISJOINT source intervals, so a time-window read touches
+        // only the overlapping files — Iceberg partition pruning via
+        // footer stats. The partition count is EXPLICIT because AQE
+        // coalesces column-only range shuffles by size, merging
+        // adjacent days back into one file and undoing the clustering
+        // (observed: 3 days → 1 file on a small commit).
+        val idents = startMeta.partitionColumns.map(df.col)
+        val sortCols =
+          HiddenPartitioning.sourceCols(startMeta.properties).map(df.col) ++
+            idents ++ sortOrderCols.map(df.col)
+        df.repartitionByRange(
+            df.sparkSession.sessionState.conf.numShufflePartitions,
+            (hiddenExprs ++ idents): _*)
+          .sortWithinPartitions(sortCols: _*)
+      } else if (startMeta.partitionColumns.nonEmpty) {
+        val cols = startMeta.partitionColumns.map(df.col)
+        df.repartition(cols: _*)
+          .sortWithinPartitions(cols ++ sortOrderCols.map(df.col): _*)
+      } else if (sortOrderCols.nonEmpty) {
+        // RANGE, not hash: the point is disjoint per-file intervals of
+        // the leading sort column (hash would scatter every value range
+        // across all files and the footer ranges would prune nothing);
+        // explicit partition count for the same AQE-coalescing reason
+        // as the hidden-transform branch above
+        df.repartitionByRange(
+            df.sparkSession.sessionState.conf.numShufflePartitions,
+            sortOrderCols.map(df.col): _*)
+          .sortWithinPartitions(sortOrderCols.map(df.col): _*)
+      } else df
     }
 
-    var (commitRel, newFiles, footers) = writeCommitFiles(data)
-    var newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-    var newRows = footers.view.mapValues(_.rows).toMap
+    var staged = writeCommitFiles(data)
 
     // Optimistic-concurrency publish with RETRY (the Iceberg commit
     // loop): the data files are written exactly once above; on a
@@ -929,18 +871,15 @@ class LakehouseTable(
               s"${explicitConflicts.mkString(", ")} — nothing was committed; " +
               "re-run the INSERT")
           val shifted = conflicts.foldLeft(
-            spark.read.schema(current.schema).parquet(newFiles.map(abs): _*)) {
+            spark.read.schema(current.schema).parquet(staged.files.map(abs): _*)) {
             case (d, (c, base)) =>
               val f = current.schema.fields.find(_.name.equalsIgnoreCase(c)).get
               d.withColumn(f.name,
                 (col(f.name) + lit(curNext(c) - base)).cast(f.dataType))
           }
-          val staleDir = commitRel
-          val (rel2, files2, footers2) = writeCommitFiles(shifted)
-          commitRel = rel2; newFiles = files2; footers = footers2
-          newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-          newRows = footers.view.mapValues(_.rows).toMap
-          Fs.deleteRecursively(tableDir.resolve(staleDir))
+          val stale = staged.rel
+          staged = writeCommitFiles(shifted)
+          Fs.deleteRecursively(tableDir.resolve(stale))
           mintedFrom = conflicts.map { case (c, _) => c -> curNext(c) } ++
             (mintedFrom -- conflicts.keySet)
           // The shift changed the identity values AFTER row-local
@@ -969,7 +908,7 @@ class LakehouseTable(
         // current.schema, not startMeta.schema: an unseen check may
         // reference a column a racing ALTER just added (read as null
         // from these files — name-resolved), and must still resolve
-        val written = spark.read.schema(current.schema).parquet(newFiles.map(abs): _*)
+        val written = spark.read.schema(current.schema).parquet(staged.files.map(abs): _*)
         unseen.foreach { case (n, sql) =>
           val violations = written.filter(fexpr(sql) <=> flit(false)).count()
           if (violations > 0) throw new IllegalStateException(
@@ -980,16 +919,16 @@ class LakehouseTable(
         verifiedSchema = current.schema
       }
       val nextVersion = current.version + 1
-      val allFiles = if (overwrite) newFiles else current.files ++ newFiles
+      val allFiles = if (overwrite) staged.files else current.files ++ staged.files
       // Set, never Seq.contains: filterKeys over a 1M-file table with a
       // linear contains is O(files^2) of driver CPU per INSERT
       val allSet = allFiles.toSet
       val allStats =
-        if (overwrite) newStats
-        else current.fileStats.view.filterKeys(allSet.contains).toMap ++ newStats
+        if (overwrite) staged.stats
+        else current.fileStats.view.filterKeys(allSet.contains).toMap ++ staged.stats
       val allRows =
-        if (overwrite) newRows
-        else current.fileRows.view.filterKeys(allSet.contains).toMap ++ newRows
+        if (overwrite) staged.rows
+        else current.fileRows.view.filterKeys(allSet.contains).toMap ++ staged.rows
       // an overwrite replaces every file with current-schema data, so
       // dropped-column tombstones (see LakehouseCatalog.alterTable)
       // no longer protect anything
@@ -1002,8 +941,7 @@ class LakehouseTable(
       val props =
         if (mintedFrom.isEmpty) props0
         else IdentityColumns.advance(props0,
-          IdentityColumns.committedExtreme(current.schema, props0, newStats, newRows))
-      val op = if (overwrite) "overwrite" else "append"
+          IdentityColumns.committedExtreme(current.schema, props0, staged.stats, staged.rows))
       // an overwrite replaces every data file at the new sequence: old
       // delete entries can never apply again — drop the dead weight
       val dels = if (overwrite) Seq.empty[DeleteFile] else current.deleteFiles
@@ -1016,9 +954,9 @@ class LakehouseTable(
           deleteFiles = dels,
           properties = props,
           snapshots = current.snapshots :+ Snapshot(
-            nextVersion, System.currentTimeMillis(), op, newFiles.size, allFiles.size)),
+            nextVersion, System.currentTimeMillis(), op, staged.files.size, allFiles.size)),
           delta =
-            if (overwrite) None else Some(TableMetadata.AppendDelta(newFiles)))
+            if (overwrite) None else Some(TableMetadata.AppendDelta(staged.files)))
         committed = true
       } catch {
         case _: IllegalStateException if attempt < maxAttempts =>

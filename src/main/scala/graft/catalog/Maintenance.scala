@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -173,9 +172,8 @@ object Maintenance {
 
     val nextVersion = current.version + 1
     val commitRel =
-      if (bucketSpec.isDefined) s"data/b-compact$nextVersion-${UUID.randomUUID().toString.take(8)}"
-      else s"data/c$nextVersion-compact-${UUID.randomUUID().toString.take(8)}"
-    val commitDir = dir.resolve(commitRel)
+      if (clusterBy.isEmpty) CommitFiles.dataRel(current.properties, nextVersion, "compact")
+      else CommitFiles.plainRel(nextVersion, "compact")
     // the merging read: pending equality deletes fold into the rewrite
     // (compact is their materializer) instead of resurrecting rows
     val df =
@@ -183,48 +181,36 @@ object Maintenance {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], current.schema)
       else MergeOnRead.read(spark, dir, current, current.files)
-    val clustered = bucketSpec match {
-      case Some((bcol, n)) =>
-        // the table's DECLARED hash (iceberg-hash tables must re-bucket
-        // with Iceberg's hash or the repair would silently relabel)
-        Bucketing.cluster(df, bcol, n, current.properties)
-      case None if clusterBy.nonEmpty && zorder =>
-        val z = mortonKey(df, clusterBy)
-        df.repartitionByRange(targetFiles, z).sortWithinPartitions(z)
-      case None if clusterBy.nonEmpty =>
-        df.repartitionByRange(targetFiles, clusterBy.map(df.col): _*)
-          .sortWithinPartitions(clusterBy.map(df.col): _*)
-      case None if current.partitionColumns.nonEmpty =>
+    // a bucketed table re-buckets with its DECLARED hash in the core
+    // (iceberg-hash tables must re-bucket with Iceberg's hash or the
+    // repair would silently relabel); every other layout is this one
+    def layout(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      if (clusterBy.nonEmpty && zorder) {
+        val z = mortonKey(d, clusterBy)
+        d.repartitionByRange(targetFiles, z).sortWithinPartitions(z)
+      } else if (clusterBy.nonEmpty)
+        d.repartitionByRange(targetFiles, clusterBy.map(d.col): _*)
+          .sortWithinPartitions(clusterBy.map(d.col): _*)
+      else if (current.partitionColumns.nonEmpty) {
         val sortCols = current.partitionColumns ++
           WriteSortOrder.colsOf(current.properties)
-        df.repartition(targetFiles, current.partitionColumns.map(df.col): _*)
-          .sortWithinPartitions(sortCols.map(df.col): _*)
-      case None if WriteSortOrder.colsOf(current.properties).nonEmpty =>
+        d.repartition(targetFiles, current.partitionColumns.map(d.col): _*)
+          .sortWithinPartitions(sortCols.map(d.col): _*)
+      } else if (WriteSortOrder.colsOf(current.properties).nonEmpty) {
         // declared write sort order: compaction re-establishes the
         // range-clustered layout accumulated small commits drifted from
         val sortCols = WriteSortOrder.colsOf(current.properties)
-        df.repartitionByRange(targetFiles, sortCols.map(df.col): _*)
-          .sortWithinPartitions(sortCols.map(df.col): _*)
-      case None => df.coalesce(targetFiles)
-    }
-    SessionConf.writeMicrosParquet(clustered, commitDir.toString)
-
-    val staged = Fs.children(commitDir).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$commitRel/$n").toSeq.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val stagedFooters = staged.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(dir.resolve(f).toString), current.schema)
-    }.toMap
-    val (newFiles, footers) = dropEmptyFiles(dir, staged, stagedFooters)
-    val newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-    BloomIndex.buildForFiles(spark, dir, current.schema, current.properties, newFiles)
+        d.repartitionByRange(targetFiles, sortCols.map(d.col): _*)
+          .sortWithinPartitions(sortCols.map(d.col): _*)
+      } else d.coalesce(targetFiles)
+    val staged = CommitFiles.writeData(
+      spark, dir, current.schema, current.properties, commitRel, df, layout)
+    val newFiles = staged.files
     TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
       version = nextVersion,
       files = newFiles,
-      fileStats = newStats,
-      fileRows = footers.view.mapValues(_.rows).toMap,
+      fileStats = staged.stats,
+      fileRows = staged.rows,
       // the rewrite read every row through the merging view: pending
       // equality deletes are now physical, their entries dead
       deleteFiles = Seq.empty,
@@ -382,49 +368,28 @@ object Maintenance {
       case (Bucketing.ColProp, v) if v == oldName => Bucketing.ColProp -> newName
       case kv => kv
     }.filterNot(_._1.startsWith(LakehouseCatalog.TombstonePrefix)) // full rewrite clears them
-    val bucketSpec = Bucketing.specOf(newProps)
 
     val nextVersion = current.version + 1
-    val commitRel =
-      if (bucketSpec.isDefined) s"data/b-rename$nextVersion-${UUID.randomUUID().toString.take(8)}"
-      else s"data/c$nextVersion-rename-${UUID.randomUUID().toString.take(8)}"
-    val commitDir = dir.resolve(commitRel)
-    val df =
-      if (current.files.isEmpty) {
-        // no data: metadata-only commit below, nothing to rewrite
-        None
-      } else Some(MergeOnRead.read(spark, dir, current, current.files)
-        .withColumnRenamed(oldName, newName))
-    df.foreach { data =>
-      val clustered = bucketSpec match {
-        case Some((bcol, n)) =>
-          Bucketing.cluster(data, bcol, n, newProps)
-        case None if newPartCols.nonEmpty =>
-          data.repartition(current.files.size.max(1), newPartCols.map(data.col): _*)
-            .sortWithinPartitions(newPartCols.map(data.col): _*)
-        case None => data.coalesce(current.files.size.max(1))
-      }
-      SessionConf.writeMicrosParquet(clustered, commitDir.toString)
-    }
-    val newFiles =
-      if (df.isEmpty) Nil
-      else Fs.children(commitDir).iterator
-        .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-        .map(n => s"$commitRel/$n").toSeq.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val footers = newFiles.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(dir.resolve(f).toString), newSchema)
-    }.toMap
-    val newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
+    // no data: metadata-only commit below, nothing to rewrite
+    val staged =
+      if (current.files.isEmpty) CommitFiles.Staged.empty
+      else CommitFiles.writeData(spark, dir, newSchema, newProps,
+        CommitFiles.dataRel(newProps, nextVersion, "rename"),
+        MergeOnRead.read(spark, dir, current, current.files).withColumnRenamed(oldName, newName),
+        data =>
+          if (newPartCols.nonEmpty)
+            data.repartition(current.files.size.max(1), newPartCols.map(data.col): _*)
+              .sortWithinPartitions(newPartCols.map(data.col): _*)
+          else data.coalesce(current.files.size.max(1)))
+    val newFiles = staged.files
     TableMetadata.commit(dir, current.copy(
       version = nextVersion,
       schema = newSchema,
       partitionColumns = newPartCols,
       properties = newProps,
       files = newFiles,
-      fileStats = newStats,
-      fileRows = footers.view.mapValues(_.rows).toMap,
+      fileStats = staged.stats,
+      fileRows = staged.rows,
       // full rewrite through the merging read: pending equality deletes
       // are physical now (and their key columns may bear the old name)
       deleteFiles = Seq.empty,
@@ -509,27 +474,11 @@ object Maintenance {
     // the INSERT path's store assignment)
     val aligned = data.select(
       start.schema.fields.toSeq.map(f => data.col(f.name).cast(f.dataType)): _*)
-    val bucketSpec = Bucketing.specOf(start.properties)
-    val commitRel =
-      if (bucketSpec.isDefined) s"data/b-${UUID.randomUUID().toString.take(12)}"
-      else s"data/c-${UUID.randomUUID().toString.take(12)}"
-    val commitDir = dir.resolve(commitRel)
-    val clustered = bucketSpec match {
-      case Some((bcol, n)) =>
-        // bucket-addressable commit dir ⇒ file index MUST be the table's
-        // declared hash's bucket id — route through the one layout writer
-        Bucketing.cluster(aligned, bcol, n, start.properties)
-      case None if start.partitionColumns.nonEmpty =>
-        val cols = start.partitionColumns.map(aligned.col)
-        aligned.repartition(cols: _*).sortWithinPartitions(cols: _*)
-      case None => aligned
-    }
-    SessionConf.writeMicrosParquet(clustered, commitDir.toString)
-    val newFiles = Fs.children(commitDir).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$commitRel/$n").toSeq.sorted
-    watermarkedPublish(spark, dir, newFiles, start.schema, start.properties,
-      txnId, batchId, replace = false, legacyTxnId = legacyTxnId)
+    val staged = CommitFiles.writeData(spark, dir, start.schema, start.properties,
+      CommitFiles.dataRel(start.properties, start.version + 1, "append"), aligned,
+      CommitFiles.byPartition(start.partitionColumns))
+    watermarkedPublish(spark, dir, staged, start, txnId, batchId, replace = false,
+      legacyTxnId = legacyTxnId)
   }
 
   /** Publish already-written data files under a (txnId, batchId)
@@ -542,9 +491,8 @@ object Maintenance {
   private[catalog] def watermarkedPublish(
       spark: SparkSession,
       dir: Path,
-      newFiles: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      propsForBloom: Map[String, String],
+      staged: CommitFiles.Staged,
+      meta: TableMetadata,
       txnId: String,
       batchId: Long,
       replace: Boolean,
@@ -555,14 +503,7 @@ object Maintenance {
     // the caller passes the old id and we honor its watermark read-only;
     // new commits advance only the new key
     val readKeys = key +: legacyTxnId.toSeq.map(id => s"graft.txn.$id")
-    val conf = spark.sessionState.newHadoopConf()
-    val stagedFooters = newFiles.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(dir.resolve(f).toString), schema)
-    }.toMap
-    val (liveFiles, footers) = dropEmptyFiles(dir, newFiles, stagedFooters)
-    val newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-    BloomIndex.buildForFiles(spark, dir, schema, propsForBloom, liveFiles)
+    val liveFiles = staged.files
 
     // append-vs-append races retry on a fresh snapshot; a racer that
     // already applied THIS batch wins and we discard our files
@@ -571,14 +512,12 @@ object Maintenance {
     while (true) {
       val current = TableMetadata.load(dir)
       if (readKeys.exists(k => current.properties.get(k).exists(_.toLong >= batchId))) {
-        newFiles.foreach(f => Files.deleteIfExists(dir.resolve(f)))
+        liveFiles.foreach(f => Files.deleteIfExists(dir.resolve(f)))
         return false
       }
       val allFiles = if (replace) liveFiles else current.files ++ liveFiles
-      val allStats = if (replace) newStats else current.fileStats ++ newStats
-      val allRows =
-        if (replace) footers.view.mapValues(_.rows).toMap
-        else current.fileRows ++ footers.view.mapValues(_.rows).toMap
+      val allStats = if (replace) staged.stats else current.fileStats ++ staged.stats
+      val allRows = if (replace) staged.rows else current.fileRows ++ staged.rows
       val dels = if (replace) Seq.empty[DeleteFile] else current.deleteFiles
       val op = if (replace) "overwrite" else "append"
       // explicit BY DEFAULT identity values in the epoch advance the
@@ -586,8 +525,8 @@ object Maintenance {
       // against the racer's possibly-larger mark (advance never regresses)
       val props = IdentityColumns.advance(
         current.properties + (key -> batchId.toString),
-        IdentityColumns.committedExtreme(schema, current.properties, newStats,
-          footers.view.mapValues(_.rows).toMap))
+        IdentityColumns.committedExtreme(meta.schema, current.properties, staged.stats,
+          staged.rows))
       try {
         TableMetadata.commit(dir, current.copy(
           version = current.version + 1,
@@ -623,43 +562,28 @@ object Maintenance {
   private[catalog] def watermarkedUpsertPublish(
       spark: SparkSession,
       dir: Path,
-      newFiles: Seq[String],
+      staged: CommitFiles.Staged,
       keyColumns: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      propsForBloom: Map[String, String],
+      meta: TableMetadata,
       txnId: String,
       batchId: Long): Boolean = {
     import org.apache.spark.sql.functions.col
     require(keyColumns.nonEmpty, "upsert publish needs at least one key column")
+    val schema = meta.schema
     keyColumns.foreach(k => require(schema.fieldNames.contains(k),
       s"no such upsert key column: $k (schema: ${schema.fieldNames.mkString(", ")})"))
     val key = s"graft.txn.$txnId"
-    def abs(f: String): String = dir.resolve(f).toString
-    val conf = spark.sessionState.newHadoopConf()
-    val footers = newFiles.map { f =>
-      f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), schema)
-    }.toMap
-    val newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-    BloomIndex.buildForFiles(spark, dir, schema, propsForBloom, newFiles)
+    val newFiles = staged.files
 
     // the batch's distinct key tuples, read once from the staged files;
     // the staged footer row count bounds the tuple count, so the write
     // shape (one sorted file vs range-partitioned fan-out) is decided
     // without an extra counting job
-    val kSchema = MergeOnRead.keySchema(schema, keyColumns)
-    val delRel = s"deletes/u-${UUID.randomUUID().toString.take(12)}"
-    val batchKeys = spark.read.schema(schema).parquet(newFiles.map(abs): _*)
+    val batchKeys = spark.read.schema(schema)
+      .parquet(newFiles.map(f => dir.resolve(f).toString): _*)
       .select(keyColumns.map(col): _*).distinct()
-    SessionConf.writeMicrosParquet(
-      MergeOnRead.shapeDeleteWrite(spark, batchKeys, keyColumns.map(batchKeys.col),
-        footers.values.map(_.rows).sum),
-      dir.resolve(delRel).toString)
-    val delFiles = Fs.children(dir.resolve(delRel)).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$delRel/$n").toSeq.sorted
-    val delFooters = delFiles.map { f =>
-      f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), kSchema)
-    }.toMap
+    val dels = CommitFiles.writeDeletes(spark, dir, "u", meta.version + 1, batchKeys,
+      staged.rowCount)
     def discardStaged(): Unit = {
       newFiles.foreach { f =>
         Files.deleteIfExists(dir.resolve(f))
@@ -670,10 +594,7 @@ object Maintenance {
             .foreach(Files.deleteIfExists(_))
         }
       }
-      val d = dir.resolve(delRel)
-      if (Files.isDirectory(d)) {
-        Fs.deleteRecursively(d)
-      }
+      Fs.deleteRecursively(dir.resolve(dels.rel))
     }
 
     val maxAttempts = 10
@@ -687,24 +608,23 @@ object Maintenance {
       val next = current.version + 1
       // seq recomputed per attempt: it must equal THIS commit's version
       // for the entry to cover exactly the pre-batch files
-      val entries = delFiles.map { f =>
+      val entries = dels.files.map { f =>
         // upsert: the entry is born with its replacement files
-        DeleteFile(f, keyColumns, next, delFooters(f).rows, delFooters(f).cols,
-          paired = newFiles.nonEmpty)
+        DeleteFile(f, keyColumns, next, dels.footers(f).rows, dels.footers(f).cols,
+          paired = true)
       }
       val allFiles = current.files ++ newFiles
       // see watermarkedPublish: upserted explicit identity values must
       // advance the mark or a later INSERT re-mints them
       val props = IdentityColumns.advance(
         current.properties + (key -> batchId.toString),
-        IdentityColumns.committedExtreme(schema, current.properties, newStats,
-          footers.view.mapValues(_.rows).toMap))
+        IdentityColumns.committedExtreme(schema, current.properties, staged.stats, staged.rows))
       try {
         TableMetadata.commit(dir, current.copy(
           version = next,
           files = allFiles,
-          fileStats = current.fileStats ++ newStats,
-          fileRows = current.fileRows ++ footers.view.mapValues(_.rows).toMap,
+          fileStats = current.fileStats ++ staged.stats,
+          fileRows = current.fileRows ++ staged.rows,
           deleteFiles = current.deleteFiles ++ entries,
           properties = props,
           snapshots = current.snapshots :+ Snapshot(
@@ -733,25 +653,12 @@ object Maintenance {
   /** Shared copy-on-write commit: replace `hitFiles` with the rows of
     * `newData`, carry every other file into the new snapshot by
     * reference. The same shape `DELETE FROM` uses (LakehouseTable
-    * .deleteWhere); only the row transformation differs. */
-  /** Remove zero-row part files a clustered write materialized (Spark
-    * always writes task 0's file even when its partition is empty, and
-    * a bucket-routed rewrite often fills ONE bucket): an empty file is
-    * harmless to read but is a dead metadata entry per DML at 100 TB
-    * file counts — and on a bucketed table it falsely claims the
-    * bucket its part index names. */
-  private[catalog] def dropEmptyFiles(
-      dir: Path, files: Seq[String],
-      footers: Map[String, FooterStats.FileFooter])
-      : (Seq[String], Map[String, FooterStats.FileFooter]) = {
-    val (empty, live) = files.partition(f => footers.get(f).exists(_.rows == 0L))
-    empty.foreach { f =>
-      try Files.deleteIfExists(dir.resolve(f))
-      catch { case _: Exception => () } // unreferenced leftovers reap later
-    }
-    (live, footers -- empty)
-  }
-
+    * .deleteWhere); only the row transformation differs. A bucketed
+    * table's rewrite keeps the layout contract (b- commit) — COW
+    * UPDATE/MERGE/OVERWRITE would otherwise silently degrade
+    * KeyGroupedPartitioning and the mirror's bucket[n] claim until the
+    * next compaction. compact-where (the only reshape=false caller)
+    * requires an unbucketed table. */
   private[catalog] def commitRewrite(
       spark: SparkSession,
       dir: Path,
@@ -761,48 +668,21 @@ object Maintenance {
       op: String,
       reshape: Boolean = true): Unit = {
     val nextVersion = current.version + 1
-    // a bucketed table's rewrite keeps the layout contract (b- commit
-    // through the one layout writer) — COW UPDATE/MERGE/OVERWRITE would
-    // otherwise silently degrade KeyGroupedPartitioning and the
-    // mirror's bucket[n] claim until the next compaction. compact-where
-    // (the only reshape=false caller) requires an unbucketed table.
-    val bucketSpec =
-      if (reshape) Bucketing.specOf(current.properties) else None
-    val commitRel =
-      if (bucketSpec.isDefined)
-        s"data/b-$op$nextVersion-${UUID.randomUUID().toString.take(8)}"
-      else s"data/c$nextVersion-$op-${UUID.randomUUID().toString.take(8)}"
-    val commitDir = dir.resolve(commitRel)
-    val clustered = bucketSpec match {
-      case Some((bcol, n)) => Bucketing.cluster(newData, bcol, n, current.properties)
-      case None if reshape && current.partitionColumns.nonEmpty =>
-        val cols = current.partitionColumns.map(newData.col)
-        newData.repartition(cols: _*).sortWithinPartitions(cols: _*)
-      case None => newData
-    }
-    SessionConf.writeMicrosParquet(clustered, commitDir.toString)
-    val staged = Fs.children(commitDir).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$commitRel/$n").toSeq.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val allFooters = staged.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(dir.resolve(f).toString), current.schema)
-    }.toMap
-    val (newFiles, footers) = dropEmptyFiles(dir, staged, allFooters)
-    val newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-    BloomIndex.buildForFiles(spark, dir, current.schema, current.properties, newFiles)
-    val survivors = current.files.filterNot(hitFiles.contains)
+    val staged = CommitFiles.writeData(spark, dir, current.schema, current.properties,
+      if (reshape) CommitFiles.dataRel(current.properties, nextVersion, op)
+      else CommitFiles.plainRel(nextVersion, op),
+      newData, if (reshape) CommitFiles.byPartition(current.partitionColumns) else identity)
+    val hitSet = hitFiles.toSet
+    val survivors = current.files.filterNot(hitSet.contains)
     val survivorSet = survivors.toSet
-    val allFiles = survivors ++ newFiles
+    val allFiles = survivors ++ staged.files
     TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
       version = nextVersion,
       files = allFiles,
-      fileStats = current.fileStats.view.filterKeys(survivorSet.contains).toMap ++ newStats,
-      fileRows = current.fileRows.view.filterKeys(survivorSet.contains).toMap ++
-        footers.view.mapValues(_.rows).toMap,
+      fileStats = current.fileStats.view.filterKeys(survivorSet.contains).toMap ++ staged.stats,
+      fileRows = current.fileRows.view.filterKeys(survivorSet.contains).toMap ++ staged.rows,
       snapshots = current.snapshots :+ Snapshot(
-        nextVersion, System.currentTimeMillis(), op, newFiles.size, allFiles.size)))
+        nextVersion, System.currentTimeMillis(), op, staged.files.size, allFiles.size)))
   }
 
   private def fileName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
@@ -1421,40 +1301,26 @@ object Maintenance {
       }
     }
     val next = head.version + 1
-    val rel = s"data/c$next-br$name-${UUID.randomUUID().toString.take(8)}"
-    val clustered =
-      if (head.partitionColumns.nonEmpty) {
-        val cols = head.partitionColumns.map(guarded.col)
-        guarded.repartition(cols: _*).sortWithinPartitions(cols: _*)
-      } else guarded
-    SessionConf.writeMicrosParquet(clustered, dir.resolve(rel).toString)
-    val newFiles = Fs.children(dir.resolve(rel)).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$rel/$n").toSeq.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val footers = newFiles.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(dir.resolve(f).toString), schema)
-    }.toMap
-    BloomIndex.buildForFiles(spark, dir, schema, head.properties, newFiles)
+    val staged = CommitFiles.writeData(spark, dir, schema, head.properties,
+      CommitFiles.plainRel(next, s"br$name"), guarded,
+      CommitFiles.byPartition(head.partitionColumns))
+    val newFiles = staged.files
     // explicit BY-DEFAULT identity values advance the BRANCH's mark
     // (published with the head at fast_forward), so later mints on main
     // never collide with branch-staged ids
     val props = IdentityColumns.advance(head.properties,
-      IdentityColumns.committedExtreme(schema, head.properties,
-        footers.view.mapValues(_.cols).toMap,
-        footers.view.mapValues(_.rows).toMap))
+      IdentityColumns.committedExtreme(schema, head.properties, staged.stats, staged.rows))
     commitToBranchOrRebase(dir, name, head, head.copy(
       version = next,
       files = head.files ++ newFiles,
-      fileStats = head.fileStats ++ footers.view.mapValues(_.cols).toMap,
-      fileRows = head.fileRows ++ footers.view.mapValues(_.rows).toMap,
+      fileStats = head.fileStats ++ staged.stats,
+      fileRows = head.fileRows ++ staged.rows,
       properties = props,
       snapshots = head.snapshots :+ Snapshot(
         next, System.currentTimeMillis(), "append",
         newFiles.size, head.files.size + newFiles.size)),
       appendDelta = Some(TableMetadata.AppendDelta(newFiles)))
-    footers.values.map(_.rows).sum
+    staged.rowCount
   }
 
   /** Merge-on-read DELETE addressed to a BRANCH: the key parquet and
@@ -1478,36 +1344,18 @@ object Maintenance {
     val casted = keys.select(kSchema.fields.map(f =>
       keys.col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
     val next = head.version + 1
-    val delRel = s"deletes/b$next-$name-${UUID.randomUUID().toString.take(8)}"
     val pinned = graft.Materialize.pin(casted)
-    SessionConf.writeMicrosParquet(
-      MergeOnRead.shapeDeleteWrite(spark, pinned, keyCols.map(pinned.col), pinned.count()),
-      dir.resolve(delRel).toString)
-    val conf = spark.sessionState.newHadoopConf()
-    val delFiles = Fs.children(dir.resolve(delRel)).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$delRel/$n").toSeq.sorted
-    val footers = delFiles.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(dir.resolve(f).toString), kSchema)
-    }.toMap
-    val entries = delFiles.map { f =>
-      DeleteFile(f, keyCols, next, footers(f).rows, footers(f).cols)
-    }
-    val keyRows = entries.map(_.rows).sum
-    if (keyRows == 0) {
-      val staging = dir.resolve(delRel)
-      if (Files.isDirectory(staging)) {
-        Fs.deleteRecursively(staging)
-      }
-      return 0
+    val dels = CommitFiles.writeDeletes(spark, dir, "b", next, pinned, pinned.count())
+    if (dels.files.isEmpty) return 0
+    val entries = dels.files.map { f =>
+      DeleteFile(f, keyCols, next, dels.footers(f).rows, dels.footers(f).cols)
     }
     commitToBranchOrRebase(dir, name, head, head.copy(
       version = next,
       deleteFiles = head.deleteFiles ++ entries,
       snapshots = head.snapshots :+ Snapshot(
         next, System.currentTimeMillis(), "mor-delete", 0, head.files.size)))
-    keyRows
+    dels.rowCount
   }
 
   /** Branch-log twin of [[TableMetadata.commitOrRebase]]: a version
@@ -2038,7 +1886,7 @@ object Maintenance {
     }
 
     val nextVersion = current.version + 1
-    val commitRel = s"data/c$nextVersion-addfiles-${UUID.randomUUID().toString.take(8)}"
+    val commitRel = CommitFiles.plainRel(nextVersion, "addfiles")
     val commitDir = dir.resolve(commitRel)
     Files.createDirectories(commitDir)
     val byRel = srcFooters.zipWithIndex.map { case ((p, footer), i) =>
@@ -2051,21 +1899,21 @@ object Maintenance {
       }
       s"$commitRel/$name" -> footer
     }.toMap
-    val newFiles = byRel.keys.toSeq.sorted
-    val newStats = byRel.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-    BloomIndex.buildForFiles(spark, dir, current.schema, current.properties, newFiles)
+    val staged = CommitFiles.keep(spark, dir, current.schema, current.properties, commitRel,
+      byRel.keys.toSeq.sorted, byRel)
+    val newFiles = staged.files
     val allFiles = current.files ++ newFiles
     // imported files carry their own identity values: advance the mint
     // mark past them (from the footers already in hand) so later
     // INSERTs never collide with imported ids
     val props = IdentityColumns.advance(current.properties,
-      IdentityColumns.committedExtreme(current.schema, current.properties, newStats,
-        byRel.view.mapValues(_.rows).toMap))
+      IdentityColumns.committedExtreme(current.schema, current.properties, staged.stats,
+        staged.rows))
     TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
       version = nextVersion,
       files = allFiles,
-      fileStats = current.fileStats ++ newStats,
-      fileRows = current.fileRows ++ byRel.view.mapValues(_.rows).toMap,
+      fileStats = current.fileStats ++ staged.stats,
+      fileRows = current.fileRows ++ staged.rows,
       properties = props,
       snapshots = current.snapshots :+ Snapshot(
         nextVersion, System.currentTimeMillis(), "add_files", newFiles.size, allFiles.size)))

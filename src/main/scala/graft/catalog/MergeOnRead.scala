@@ -1,8 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path}
-import java.util.UUID
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -56,8 +54,8 @@ object MergeOnRead {
     * to fold (deleted rows reappear).
     *
     * Every data file lives at `data/<commit>/<part>.parquet` — three
-    * MACHINE-GENERATED segments (`data`, `c<N>-<hex8>[-tag]`,
-    * Spark part-file names; all `[A-Za-z0-9._-]`, nothing
+    * MACHINE-GENERATED segments (`data`, a [[CommitFiles]] staging
+    * name, Spark part-file names; all `[A-Za-z0-9._-]`, nothing
     * URI-encodable) — so the 3-segment suffix of the reader's
     * file_path URI equals the raw relative path even when the
     * WAREHOUSE path upstream of it contains spaces/%/# that the URI
@@ -122,38 +120,6 @@ object MergeOnRead {
       schema.fields.find(_.name == k).getOrElse(
         throw new IllegalArgumentException(s"no such column: $k"))))
 
-  /** Tuple ceiling for a single-file delete parquet (runtime-settable
-    * via `graft.mor.maxSingleFileDeleteTuples`). Under it, the delete
-    * writes ONE sorted file — the read side's anti-join build is one
-    * footer and (at these sizes) one broadcast. Past it — a MERGE or
-    * UPDATE matching 10⁹ rows — a single-task write is the scale
-    * killer: the tuples serialize through one executor thread. */
-  private[catalog] def singleFileDeleteMax(spark: SparkSession): Long =
-    spark.conf.getOption("graft.mor.maxSingleFileDeleteTuples")
-      .map(_.toLong).getOrElse(1000000L)
-
-  /** Shape a delete-tuple write: one sorted file when `n` is under the
-    * single-file ceiling, else ceil(n / ceiling) RANGE-partitioned
-    * sorted files. Range partitioning keeps each resulting entry's
-    * footer key ranges tight and mutually disjoint, so per data file
-    * only the overlapping entries apply (path-range pruning for
-    * positional entries, stats-disjointness for equality entries) and
-    * the read side joins against one commit's entries as a single
-    * union scan — the plan that survives both a 5-row CDC batch and a
-    * 10⁹-row MERGE. */
-  private[graft] def shapeDeleteWrite(
-      spark: SparkSession,
-      df: DataFrame,
-      sortCols: Seq[org.apache.spark.sql.Column],
-      n: Long): DataFrame = {
-    val cap = math.max(1L, singleFileDeleteMax(spark))
-    if (n <= cap) df.coalesce(1).sortWithinPartitions(sortCols: _*)
-    else {
-      val parts = math.min((n + cap - 1) / cap, 10000L).toInt
-      df.repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
-    }
-  }
-
   /** Read a subset of a snapshot's data files with every applicable
     * delete applied — the Dataset-level merge used by maintenance
     * rewrites (compact / COW DML), which would otherwise resurrect
@@ -185,7 +151,7 @@ object MergeOnRead {
       val base = prep(withPos)
       // entries from the same commit with the same shape are one
       // LOGICAL delete that merely fanned out to several files on
-      // write (shapeDeleteWrite past the single-file ceiling): scan
+      // write (CommitFiles.shapeDeleteWrite past the single-file ceiling): scan
       // them together and anti-join ONCE, instead of chaining one join
       // per file. Anti joins commute, so grouping only changes the
       // plan; the sort keeps it deterministic.
@@ -327,60 +293,33 @@ object MergeOnRead {
       current: TableMetadata,
       filePos: DataFrame,
       newRows: DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
     val next = current.version + 1
-    def abs(f: String): String = tableDir.resolve(f).toString
-    val conf = spark.sessionState.newHadoopConf()
-    def footersOf(rel: Seq[String], sch: StructType) = rel.map { f =>
-      f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), sch)
-    }.toMap
-    val delRel = s"deletes/p$next-${UUID.randomUUID().toString.take(8)}"
     // filePos derives from the eagerly-checkpointed match set, so the
     // shaping count re-reads the checkpoint, not the table
-    SessionConf.writeMicrosParquet(
-      shapeDeleteWrite(spark, filePos, Seq(col(PosFileCol), col(PosPosCol)), filePos.count()),
-      tableDir.resolve(delRel).toString)
-    val delFiles = stagedParquet(tableDir, delRel)
-    val delFooters = footersOf(delFiles, posKeySchema)
-    val entries = delFiles.map { f =>
+    val dels = CommitFiles.writeDeletes(spark, tableDir, "p", next, filePos, filePos.count())
+    val entries = dels.files.map { f =>
       // positional UPDATE: the entry is born with its replacement files
-      DeleteFile(f, Seq(PosFileCol, PosPosCol), next, delFooters(f).rows,
-        delFooters(f).cols, kind = DeleteFile.Positional, paired = true)
+      DeleteFile(f, Seq(PosFileCol, PosPosCol), next, dels.footers(f).rows,
+        dels.footers(f).cols, kind = DeleteFile.Positional, paired = true)
     }
-
     // a bucketed table's replacement rows keep the layout contract
-    // (bucket-addressable b- commit through the one layout writer) —
-    // otherwise one positional UPDATE would silently degrade the scan's
-    // KeyGroupedPartitioning and the mirror's bucket[n] claim until the
-    // next compaction
-    val (dataRel, clustered) = Bucketing.specOf(current.properties) match {
-      case Some((bcol, n)) =>
-        (s"data/b-morupd$next-${UUID.randomUUID().toString.take(8)}",
-          Bucketing.cluster(newRows, bcol, n, current.properties))
-      case None if current.partitionColumns.nonEmpty =>
-        val cols = current.partitionColumns.map(newRows.col)
-        (s"data/c$next-morupd-${UUID.randomUUID().toString.take(8)}",
-          newRows.repartition(cols: _*).sortWithinPartitions(cols: _*))
-      case None =>
-        (s"data/c$next-morupd-${UUID.randomUUID().toString.take(8)}", newRows)
-    }
-    clustered.write.parquet(tableDir.resolve(dataRel).toString)
-    val stagedData = stagedParquet(tableDir, dataRel)
-    val (dataFiles, dataFooters) = Maintenance.dropEmptyFiles(
-      tableDir, stagedData, footersOf(stagedData, current.schema))
-    BloomIndex.buildForFiles(spark, tableDir, current.schema, current.properties, dataFiles)
-
-    val allFiles = current.files ++ dataFiles
+    // (bucket-addressable b- commit) — otherwise one positional UPDATE
+    // would silently degrade the scan's KeyGroupedPartitioning and the
+    // mirror's bucket[n] claim until the next compaction
+    val data = CommitFiles.writeData(spark, tableDir, current.schema, current.properties,
+      CommitFiles.dataRel(current.properties, next, "morupd"), newRows,
+      CommitFiles.byPartition(current.partitionColumns))
+    val allFiles = current.files ++ data.files
     TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
       version = next,
       files = allFiles,
-      fileStats = current.fileStats ++ dataFooters.view.mapValues(_.cols).toMap,
-      fileRows = current.fileRows ++ dataFooters.view.mapValues(_.rows).toMap,
+      fileStats = current.fileStats ++ data.stats,
+      fileRows = current.fileRows ++ data.rows,
       deleteFiles = current.deleteFiles ++ entries,
       snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "mor-update", dataFiles.size, allFiles.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(dataFiles)))
-    dataFooters.values.map(_.rows).sum
+        next, System.currentTimeMillis(), "mor-update", data.files.size, allFiles.size)),
+      appendDelta = Some(TableMetadata.AppendDelta(data.files)))
+    data.rowCount
   }
 
   /** Positional delete: commit a (file, pos) parquet that removes the
@@ -396,39 +335,22 @@ object MergeOnRead {
     * which files it targets, so racer-appended files are never touched
     * and racing rewrites of the targeted files fail the commit. */
   def morDeletePositionalAt(spark: SparkSession, tableDir: Path, filePos: DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{LongType, StringType}
     val current = TableMetadata.load(tableDir)
     val next = current.version + 1
-    def abs(f: String): String = tableDir.resolve(f).toString
     val casted = filePos.select(
       filePos.col(PosFileCol).cast(StringType).as(PosFileCol),
       filePos.col(PosPosCol).cast(LongType).as(PosPosCol))
-    val delRel = s"deletes/p$next-${UUID.randomUUID().toString.take(8)}"
     // checkpoint so the caller's pipeline runs once (shaping count +
     // write); sorted file(s) keep the entry path ranges tight so clean
     // files prune, and a 10⁹-tuple MERGE fans out instead of
     // serializing through one task
     val pinned = casted.pinned
-    SessionConf.writeMicrosParquet(
-      shapeDeleteWrite(spark, pinned, Seq(col(PosFileCol), col(PosPosCol)), pinned.count()),
-      tableDir.resolve(delRel).toString)
-    val delFiles = stagedParquet(tableDir, delRel)
-    val conf = spark.sessionState.newHadoopConf()
-    val footers = delFiles.map { f =>
-      f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), posKeySchema)
-    }.toMap
-    val tuples = footers.values.map(_.rows).sum
-    if (tuples == 0) {
-      val stagingDir = tableDir.resolve(delRel)
-      if (Files.isDirectory(stagingDir)) {
-        Fs.deleteRecursively(stagingDir)
-      }
-      return 0
-    }
-    val entries = delFiles.map { f =>
-      DeleteFile(f, Seq(PosFileCol, PosPosCol), next, footers(f).rows, footers(f).cols,
-        kind = DeleteFile.Positional)
+    val dels = CommitFiles.writeDeletes(spark, tableDir, "p", next, pinned, pinned.count())
+    if (dels.files.isEmpty) return 0
+    val entries = dels.files.map { f =>
+      DeleteFile(f, Seq(PosFileCol, PosPosCol), next, dels.footers(f).rows,
+        dels.footers(f).cols, kind = DeleteFile.Positional)
     }
     TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
       version = next,
@@ -436,7 +358,7 @@ object MergeOnRead {
       snapshots = current.snapshots :+ Snapshot(
         next, System.currentTimeMillis(), "mor-delete-pos", 0, current.files.size)),
       appendDelta = Some(TableMetadata.AppendDelta(Nil)))
-    tuples
+    dels.rowCount
   }
 
   /** Shared commit: write the delete-key parquet (plus optionally the
@@ -464,89 +386,41 @@ object MergeOnRead {
       keys.col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
 
     val next = current.version + 1
-    val conf = spark.sessionState.newHadoopConf()
-    def abs(f: String): String = tableDir.resolve(f).toString
-    def footersOf(rel: Seq[String], sch: StructType) = rel.map { f =>
-      f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), sch)
-    }.toMap
-
     // the delete-key parquet: usually tiny relative to the data it
     // logically removes — one sorted file keeps every reader's
     // anti-join build side one footer + one broadcast; a key set past
     // the single-file ceiling fans out to range-sorted files instead
-    // of serializing through one write task
-    val delRel = s"deletes/d$next-${UUID.randomUUID().toString.take(8)}"
+    // of serializing through one write task. Nothing matched stages
+    // nothing: no entry publishes, and an upsert-shaped call with an
+    // empty key batch still publishes its appended rows below.
     val pinnedKeys = casted.pinned
-    SessionConf.writeMicrosParquet(
-      shapeDeleteWrite(spark, pinnedKeys, keyCols.map(pinnedKeys.col), pinnedKeys.count()),
-      tableDir.resolve(delRel).toString)
-    val delFiles = stagedParquet(tableDir, delRel)
-    val delFooters = footersOf(delFiles, kSchema)
-    val entries = delFiles.map { f =>
-      DeleteFile(f, keyCols, next, delFooters(f).rows, delFooters(f).cols,
+    val dels = CommitFiles.writeDeletes(spark, tableDir, "d", next, pinnedKeys, pinnedKeys.count())
+    if (dels.files.isEmpty && appendData.isEmpty) return 0
+    val entries = dels.files.map { f =>
+      DeleteFile(f, keyCols, next, dels.footers(f).rows, dels.footers(f).cols,
         paired = appendData.isDefined)
     }
-    val keyRows = entries.map(_.rows).sum
-    if (keyRows == 0) {
-      // nothing matched: no entry may publish — a zero-row entry has
-      // NO keyRanges, and applicable() treats a missing range as
-      // "could match", so it would mark EVERY pre-existing file dirty
-      // forever (readers rewritten into pointless anti-joins,
-      // materializeDeletes rewriting the whole table to drop a no-op).
-      // The staging dir also holds committer artifacts (_SUCCESS,
-      // .crc), so remove it recursively. An upsert-shaped call with an
-      // empty key batch still publishes its appended rows below.
-      val stagingDir = tableDir.resolve(delRel)
-      if (Files.isDirectory(stagingDir)) {
-        Fs.deleteRecursively(stagingDir)
-      }
-      if (appendData.isEmpty) return 0
-    }
-    val liveEntries = if (keyRows == 0) Seq.empty else entries
 
-    // optional upsert data files, written before the single commit
-    val (dataFiles, dataFooters) = appendData match {
-      case None => (Seq.empty[String], Map.empty[String, FooterStats.FileFooter])
-      case Some(rows) =>
-        // same layout contract as the morupd path above
-        val (rel, clustered) = Bucketing.specOf(current.properties) match {
-          case Some((bcol, n)) =>
-            (s"data/b-upsert$next-${UUID.randomUUID().toString.take(8)}",
-              Bucketing.cluster(rows, bcol, n, current.properties))
-          case None if current.partitionColumns.nonEmpty =>
-            val cols = current.partitionColumns.map(rows.col)
-            (s"data/c$next-upsert-${UUID.randomUUID().toString.take(8)}",
-              rows.repartition(cols: _*).sortWithinPartitions(cols: _*))
-          case None =>
-            (s"data/c$next-upsert-${UUID.randomUUID().toString.take(8)}", rows)
-        }
-        clustered.write.parquet(tableDir.resolve(rel).toString)
-        val fs = stagedParquet(tableDir, rel)
-        Maintenance.dropEmptyFiles(tableDir, fs, footersOf(fs, schema))
-    }
-    BloomIndex.buildForFiles(spark, tableDir, schema, current.properties, dataFiles)
+    // optional upsert data files, written before the single commit,
+    // under the same layout contract as the morupd path above
+    val data = appendData.fold(CommitFiles.Staged.empty)(rows => CommitFiles.writeData(
+      spark, tableDir, schema, current.properties,
+      CommitFiles.dataRel(current.properties, next, "upsert"), rows,
+      CommitFiles.byPartition(current.partitionColumns)))
 
-    val allFiles = current.files ++ dataFiles
+    val allFiles = current.files ++ data.files
     val op = if (appendData.isDefined) "mor-upsert" else "mor-delete"
     TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
       version = next,
       files = allFiles,
-      fileStats = current.fileStats ++ dataFooters.view.mapValues(_.cols).toMap,
-      fileRows = current.fileRows ++ dataFooters.view.mapValues(_.rows).toMap,
-      deleteFiles = current.deleteFiles ++ liveEntries,
+      fileStats = current.fileStats ++ data.stats,
+      fileRows = current.fileRows ++ data.rows,
+      deleteFiles = current.deleteFiles ++ entries,
       snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), op, dataFiles.size, allFiles.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(dataFiles)))
-    if (appendData.isDefined) dataFooters.values.map(_.rows).sum else keyRows
+        next, System.currentTimeMillis(), op, data.files.size, allFiles.size)),
+      appendDelta = Some(TableMetadata.AppendDelta(data.files)))
+    if (appendData.isDefined) data.rowCount else dels.rowCount
   }
-
-  /** The parquet files a staged write landed under `rel`, as sorted
-    * table-relative paths — the one listing idiom every commit site
-    * shares (committer artifacts like _SUCCESS/.crc filtered out). */
-  private def stagedParquet(tableDir: Path, rel: String): Seq[String] =
-    Fs.children(tableDir.resolve(rel)).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$rel/$n").toSeq.sorted
 
   /** Fold pending deletes into the data: rewrite ONLY the dirty files
     * (those with ≥1 applicable entry) through the merging read, carry
@@ -578,45 +452,24 @@ object MergeOnRead {
     }
     // materializing a bucketed table's dirty files must re-bucket: the
     // inputs were bucket-addressable, so the rewrite's outputs stay so
-    val (rel, matRows) = {
-      val merged = read(spark, dir, current, dirty)
-      Bucketing.specOf(current.properties) match {
-        case Some((bcol, n)) =>
-          (s"data/b-materialize$next-${UUID.randomUUID().toString.take(8)}",
-            Bucketing.cluster(merged, bcol, n, current.properties))
-        case None =>
-          (s"data/c$next-materialize-${UUID.randomUUID().toString.take(8)}", merged)
-      }
-    }
-    val commitDir = dir.resolve(rel)
-    SessionConf.writeMicrosParquet(matRows, commitDir.toString)
-    val stagedMat = Fs.children(commitDir).iterator
-      .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
-      .map(n => s"$rel/$n").toSeq.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val matFooters = stagedMat.map { f =>
-      f -> FooterStats.collectFull(conf,
-        new org.apache.hadoop.fs.Path(dir.resolve(f).toString), current.schema)
-    }.toMap
-    val (newFiles, footers) = Maintenance.dropEmptyFiles(dir, stagedMat, matFooters)
-    BloomIndex.buildForFiles(spark, dir, current.schema, current.properties, newFiles)
+    val mat = CommitFiles.writeData(spark, dir, current.schema, current.properties,
+      CommitFiles.dataRel(current.properties, next, "materialize"),
+      read(spark, dir, current, dirty))
     // Set membership: Seq.contains would make this metadata-only commit
     // O(files × dirty) on the driver — quadratic at the 10k-100k-file
     // scale this operation exists for
     val dirtySet = dirty.toSet
     val kept = current.files.filterNot(dirtySet.contains)
     val keptSet = kept.toSet
-    val allFiles = kept ++ newFiles
+    val allFiles = kept ++ mat.files
     TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
       version = next,
       files = allFiles,
-      fileStats = current.fileStats.view.filterKeys(keptSet.contains).toMap ++
-        footers.view.mapValues(_.cols).toMap,
-      fileRows = current.fileRows.view.filterKeys(keptSet.contains).toMap ++
-        footers.view.mapValues(_.rows).toMap,
+      fileStats = current.fileStats.view.filterKeys(keptSet.contains).toMap ++ mat.stats,
+      fileRows = current.fileRows.view.filterKeys(keptSet.contains).toMap ++ mat.rows,
       deleteFiles = Seq.empty,
       snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "materialize-deletes", newFiles.size, allFiles.size)))
+        next, System.currentTimeMillis(), "materialize-deletes", mat.files.size, allFiles.size)))
     dirty.size
   }
 
@@ -686,7 +539,7 @@ object MergeOnRead {
           .parquet(tableDir.resolve(d.path).toString)
           .collect().groupBy(_.getString(0))
           .map { case (f, rows) => f -> rows.map(_.getLong(1)).distinct.sorted }
-        val rel = s"deletes/dv$next-${UUID.randomUUID().toString.take(8)}.bin"
+        val rel = CommitFiles.deleteRel("dv", next) + ".bin"
         DeletionVectors.write(tableDir, rel, positions)
         n += 1
         d.copy(vector = rel)
@@ -715,7 +568,6 @@ object MergeOnRead {
 
     val next = current.version + 1
     def abs(f: String): String = tableDir.resolve(f).toString
-    val conf = spark.sessionState.newHadoopConf()
     val perGroup: Seq[(Seq[DeleteFile], Seq[DeleteFile])] = groups.map { group =>
       val isPos = group.head.isPositional
       val keyCols = if (isPos) Seq(PosFileCol, PosPosCol) else group.head.keyColumns
@@ -726,11 +578,7 @@ object MergeOnRead {
       val tuples = spark.read.schema(sch)
         .parquet(group.map(e => abs(e.path)): _*).distinct().pinned
       val n = tuples.count()
-      val rel = s"deletes/d$next-consolidated-${UUID.randomUUID().toString.take(8)}"
-      SessionConf.writeMicrosParquet(
-        shapeDeleteWrite(spark, tuples, keyCols.map(tuples.col), n),
-        tableDir.resolve(rel).toString)
-      val delFiles = stagedParquet(tableDir, rel)
+      val dels = CommitFiles.writeDeletes(spark, tableDir, "d", next, tuples, n)
       val seq = group.map(_.seq).max
       // positional groups under the size cap ALSO get a deletion-vector
       // sidecar: the merged read then filters by codegen'd binary
@@ -744,13 +592,13 @@ object MergeOnRead {
           val positions = tuples.collect()
             .groupBy(_.getString(0))
             .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
-          val vRel = s"deletes/dv$next-${UUID.randomUUID().toString.take(8)}.bin"
+          val vRel = CommitFiles.deleteRel("dv", next) + ".bin"
           DeletionVectors.write(tableDir, vRel, positions)
           vRel
         }
-      group -> delFiles.map { f =>
-        val footer = FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), sch)
-        DeleteFile(f, keyCols, seq, footer.rows, footer.cols, kind = group.head.kind,
+      group -> dels.files.map { f =>
+        DeleteFile(f, keyCols, seq, dels.footers(f).rows, dels.footers(f).cols,
+          kind = group.head.kind,
           paired = group.exists(_.paired),
           // record merge provenance (original entry paths, flattened
           // through re-consolidation): rebase guards use it to tell this
@@ -768,10 +616,8 @@ object MergeOnRead {
     // them anyway).
     val (wins, losses) = perGroup.partition { case (g, merged) => merged.size < g.size }
     losses.foreach { case (_, merged) =>
-      merged.map(_.path.split('/').init.mkString("/")).distinct.foreach { rel =>
-        val d = tableDir.resolve(rel)
-        if (Files.isDirectory(d)) Fs.deleteRecursively(d)
-      }
+      merged.map(_.path.split('/').init.mkString("/")).distinct
+        .foreach(rel => Fs.deleteRecursively(tableDir.resolve(rel)))
     }
     if (wins.isEmpty) return 0
     val doomed = wins.flatMap(_._1).toSet

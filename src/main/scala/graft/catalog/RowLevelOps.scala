@@ -1,15 +1,11 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path}
-import java.util.UUID
-import scala.jdk.CollectionConverters._
+import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -154,14 +150,7 @@ class LakehouseRowLevelOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = {
-        val commitRel =
-          s"data/c${base.version + 1}-${cmd.toString.toLowerCase}-${UUID.randomUUID().toString.take(8)}"
-        val commitDir = tableDir.resolve(commitRel)
-        val innerWrite = ParquetTable(identName, spark,
-          new CaseInsensitiveStringMap(Map("path" -> commitDir.toString).asJava),
-          Seq(commitDir.toString), Some(base.schema), classOf[ParquetFileFormat])
-          .newWriteBuilder(info)
-          .build()
+        val commitRel = CommitFiles.plainRel(base.version + 1, cmd.toString.toLowerCase)
         val writeSchema = info.schema()
         // CHECK constraints + generated-column conformance on the COW
         // rewrite's rows: kept rows satisfy them by induction (ADD
@@ -174,17 +163,15 @@ class LakehouseRowLevelOperation(
         new Write {
           override def description: String = s"lakehouse-cow-$cmd"
           override def toBatch: BatchWrite = new BatchWrite {
-            // modern micros timestamps → skippable stats (as
-            // commitInsert); toBatch builds the parquet job conf, so
-            // the scoped conf is captured here and leaks nothing
-            private val delegate = SessionConf.withMicros(spark)(innerWrite.toBatch)
+            private val delegate = CommitFiles.batchWrite(
+              spark, identName, tableDir.resolve(commitRel), base.schema, info)
             override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DataWriterFactory =
               new OperationColumnStrippingWriterFactory(
                 delegate.createBatchWriterFactory(pInfo), writeSchema, rowChecks, rowGen)
             override def useCommitCoordinator(): Boolean = delegate.useCommitCoordinator()
             override def commit(messages: Array[WriterCommitMessage]): Unit = {
-              delegate.commit(messages) // finalize task files into commitDir
-              publish(commitRel, commitDir)
+              delegate.commit(messages) // finalize task files into the staging dir
+              publish(commitRel)
             }
             override def abort(messages: Array[WriterCommitMessage]): Unit =
               delegate.abort(messages)
@@ -197,39 +184,26 @@ class LakehouseRowLevelOperation(
     * commit. A racer that only APPENDED or changed properties commutes
     * — the rewrite rebases onto its commit (commitOrRebase); any racer
     * that touched files or delete entries fails the commit clean. */
-  private def publish(commitRel: String, commitDir: Path): Unit = {
-    val newFiles =
-      if (!Files.isDirectory(commitDir)) Seq.empty
-      else Fs.children(commitDir).iterator
-        .map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet"))
-        .map(n => s"$commitRel/$n")
-        .toSeq.sorted
-    val conf = spark.sessionState.newHadoopConf()
-    val footers = newFiles.map { f =>
-      f -> FooterStats.collectFull(conf, new org.apache.hadoop.fs.Path(abs(f)), base.schema)
-    }.toMap
-    val newStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
+  private def publish(commitRel: String): Unit = {
+    val staged = CommitFiles.collect(spark, tableDir, base.schema, base.properties, commitRel)
     val replaced = scannedFiles.toSet
     val kept = base.files.filterNot(replaced.contains)
-    val allFiles = kept ++ newFiles
+    val allFiles = kept ++ staged.files
     // explicit BY DEFAULT identity values a MERGE inserted must advance
     // the high-water mark, or the next batch INSERT re-mints them as
     // duplicates; rebase merges the marks monotonically under races
     val props = IdentityColumns.advance(base.properties,
-      IdentityColumns.committedExtreme(base.schema, base.properties, newStats,
-        footers.view.mapValues(_.rows).toMap))
+      IdentityColumns.committedExtreme(base.schema, base.properties, staged.stats, staged.rows))
     val keptSet = kept.toSet
     TableMetadata.commitOrRebase(tableDir, base = base, attempt = base.copy(
       version = base.version + 1,
       files = allFiles,
       properties = props,
-      fileStats = base.fileStats.view.filterKeys(keptSet.contains).toMap ++ newStats,
-      fileRows = base.fileRows.view.filterKeys(keptSet.contains).toMap ++
-        footers.view.mapValues(_.rows).toMap,
+      fileStats = base.fileStats.view.filterKeys(keptSet.contains).toMap ++ staged.stats,
+      fileRows = base.fileRows.view.filterKeys(keptSet.contains).toMap ++ staged.rows,
       snapshots = base.snapshots :+ Snapshot(
         base.version + 1, System.currentTimeMillis(),
-        cmd.toString.toLowerCase, newFiles.size, allFiles.size)))
+        cmd.toString.toLowerCase, staged.files.size, allFiles.size)))
   }
 }
 

@@ -49,19 +49,8 @@ object SessionConf {
     * without leaking the writer conf into the session. The conf is
     * consumed synchronously inside `body` (prepareWrite /
     * `.write.parquet` capture it into the job conf), so restoring
-    * after `body` is safe. */
+    * after `body` is safe. [[CommitFiles]] holds every write that
+    * uses it. */
   def withMicros[T](spark: SparkSession)(body: => T): T =
     withConf(spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")(body)
-
-  /** The standard commit write: `df.write.parquet(path)` under the
-    * scoped micros conf. */
-  def writeMicrosParquet(
-      df: org.apache.spark.sql.DataFrame,
-      path: String,
-      mode: Option[String] = None): Unit =
-    withMicros(df.sparkSession) {
-      val w = df.write
-      mode.foreach(w.mode)
-      w.parquet(path)
-    }
 }

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path}
-import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -35,14 +34,9 @@ class StagedLakehouseTable(
     op: String)
   extends StagedTable with SupportsWrite {
 
-  private val bucketSpec = Bucketing.specOf(tableProperties)
-  private val commitRel =
-    if (bucketSpec.isDefined) s"data/b-$op$version-${UUID.randomUUID().toString.take(8)}"
-    else s"data/c$version-$op-${UUID.randomUUID().toString.take(8)}"
+  private val commitRel = CommitFiles.dataRel(tableProperties, version, op)
   private val commitDir = dir.resolve(commitRel)
-  @volatile private var written: Seq[String] = Seq.empty
-  @volatile private var writtenStats: Map[String, Map[String, ColumnRange]] = Map.empty
-  @volatile private var writtenRows: Map[String, Long] = Map.empty
+  @volatile private var written = CommitFiles.Staged.empty
 
   override def name(): String = identName
   override def schema(): StructType = stagedSchema
@@ -66,33 +60,8 @@ class StagedLakehouseTable(
               val data = CheckConstraints.enforce(
                 GeneratedColumns.compute(rawData, stagedSchema, tableProperties),
                 tableProperties)
-              val clustered = bucketSpec match {
-                case Some((bcol, n)) =>
-                  // the one bucket-layout writer: honors graft.bucket.hash
-                  // (a plain Spark repartition here would write b- files
-                  // whose index is the WRONG hash's bucket id)
-                  Bucketing.cluster(data, bcol, n, tableProperties)
-                case None if partitionColumns.nonEmpty =>
-                  val cols = partitionColumns.map(data.col)
-                  data.repartition(cols: _*).sortWithinPartitions(cols: _*)
-                case None => data
-              }
-              SessionConf.writeMicrosParquet(clustered, commitDir.toString)
-              val staged = Fs.children(commitDir).iterator
-                .map(_.getFileName.toString)
-                .filter(_.endsWith(".parquet"))
-                .map(n => s"$commitRel/$n")
-                .toSeq.sorted
-              val conf = spark.sessionState.newHadoopConf()
-              val stagedFooters = staged.map { f =>
-                f -> FooterStats.collectFull(
-                  conf, new org.apache.hadoop.fs.Path(dir.resolve(f).toString), stagedSchema)
-              }.toMap
-              val (live, footers) =
-                Maintenance.dropEmptyFiles(dir, staged, stagedFooters)
-              written = live
-              writtenStats = footers.view.mapValues(_.cols).filter(_._2.nonEmpty).toMap
-              writtenRows = footers.view.mapValues(_.rows).toMap
+              written = CommitFiles.writeData(spark, dir, stagedSchema, tableProperties,
+                commitRel, data, CommitFiles.byPartition(partitionColumns))
             }
           }
       }
@@ -105,16 +74,14 @@ class StagedLakehouseTable(
       schema = stagedSchema,
       partitionColumns = partitionColumns,
       properties = tableProperties,
-      files = written,
-      fileStats = writtenStats,
-      fileRows = writtenRows,
+      files = written.files,
+      fileStats = written.stats,
+      fileRows = written.rows,
       snapshots = priorSnapshots :+ Snapshot(
-        version, System.currentTimeMillis(), op, written.size, written.size)))
+        version, System.currentTimeMillis(), op, written.files.size, written.files.size)))
 
   override def abortStagedChanges(): Unit = {
-    if (Files.isDirectory(commitDir)) {
-      Fs.deleteRecursively(commitDir)
-    }
+    Fs.deleteRecursively(commitDir)
     // a staged CREATE owns the whole directory (no published metadata
     // yet); a staged REPLACE must leave the live table untouched
     if (op == "create" && !TableMetadata.exists(dir) && Files.isDirectory(dir)) {

@@ -225,7 +225,7 @@ class PropertySpec extends AnyFunSuite with Matchers {
       try {
         val dir = java.nio.file.Files.createTempDirectory("shape-prop-")
         val df = (0 until n).map(i => (i * 7919) % 1000).toDF("k")
-        graft.catalog.MergeOnRead.shapeDeleteWrite(
+        graft.catalog.CommitFiles.shapeDeleteWrite(
             spark, df, Seq(col("k")), n.toLong)
           .write.parquet(dir.resolve("out").toString)
         val files = java.nio.file.Files.list(dir.resolve("out")).iterator()
