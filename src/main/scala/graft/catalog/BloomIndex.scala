@@ -3,12 +3,10 @@ package graft.catalog
 import java.io.ByteArrayInputStream
 import java.nio.file.{Files, Path}
 import java.security.MessageDigest
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, In}
@@ -117,14 +115,10 @@ object BloomIndex {
       .getOrElse(Map.empty)
     val allTypes = prevTypes ++ columns.map(c =>
       c -> current.schema(c).dataType.simpleString)
-    TableMetadata.commitOrRebase(dir, base = cur, attempt = cur.copy(
-      version = cur.version + 1,
-      properties = cur.properties +
+    SnapshotChange.commit(dir, cur, SnapshotChange.Change("bloom-index", properties = _ +
         (ColumnsProp -> allCols.mkString(",")) +
-        (TypesProp -> allCols.map(c => s"$c:${allTypes.getOrElse(c, "?")}").mkString(",")),
-      snapshots = cur.snapshots :+ Snapshot(
-        cur.version + 1, System.currentTimeMillis(), "bloom-index", 0, cur.files.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(Nil)))
+        (TypesProp -> allCols.map(c => s"$c:${allTypes.getOrElse(c, "?")}").mkString(","))),
+      SnapshotChange.Rebase)
     written
   }
 

@@ -1,13 +1,12 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{DataWriter, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -239,23 +238,15 @@ private class LakehouseDeltaWrite(
     }
     if (entries.isEmpty && data.files.isEmpty) return // nothing matched, no commit
 
-    val allFiles = base.files ++ data.files
     // a MERGE ... INSERT's explicit BY DEFAULT identity values advance
     // the high-water mark here, exactly as on batch INSERT — otherwise
     // the next minting commit hands the same range out again; rebase
     // merges the marks monotonically under races
-    val props = IdentityColumns.advance(base.properties,
-      IdentityColumns.committedExtreme(base.schema, base.properties, data.stats, data.rows))
-    TableMetadata.commitOrRebase(tableDir, base = base, attempt = base.copy(
-      version = next,
-      files = allFiles,
-      properties = props,
-      fileStats = base.fileStats ++ data.stats,
-      fileRows = base.fileRows ++ data.rows,
-      deleteFiles = base.deleteFiles ++ entries,
-      snapshots = base.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), op, data.files.size, allFiles.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(data.files)))
+    SnapshotChange.commit(tableDir, base, SnapshotChange.Change(op,
+      staged = data, addDeletes = entries,
+      properties = p => IdentityColumns.advance(p,
+        IdentityColumns.committedExtreme(base.schema, p, data.stats, data.rows))),
+      SnapshotChange.Rebase)
   }
 }
 

@@ -39,7 +39,7 @@ import org.json4s.jackson.JsonMethods
   * same refresh obligation the reference's BigQuery mirror carries —
   * UNLESS the table sets `graft.iceberg.mirror=true`, in which case
   * every main-log commit maintains the export as it publishes
-  * ([[maintainMirror]], hooked in [[TableMetadata.commit]]): external
+  * ([[maintainMirror]], hooked in [[SnapshotChange.land]]): external
   * readers then never observe a stale hint, which is the reference's
   * actual contract (`iceberg_table_creation.py:63-74` — the catalog
   * keeps the BigQuery mirror linked on every write).
@@ -527,7 +527,7 @@ object IcebergExport {
 
   // ---- export ---------------------------------------------------------------
 
-  /** Write-through mirror hook, called by [[TableMetadata.commit]] after
+  /** Write-through mirror hook, called by [[SnapshotChange.land]] after
     * every main-log publish. When the committed snapshot carries
     * `graft.iceberg.mirror=true`, the Iceberg export is maintained
     * incrementally so external readers never observe a stale
@@ -641,7 +641,7 @@ object IcebergExport {
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.WRITE)
         catch { case _: java.io.IOException => null }
-      // BOUNDED acquisition: this runs inside TableMetadata.commit's
+      // BOUNDED acquisition: this runs inside SnapshotChange.land's
       // publish, and the contract is that a mirror problem never stalls
       // a data commit — a wedged peer PROCESS holding the lock must
       // surface as a mirror FAILURE (stale marker, hint advances, next
@@ -1025,7 +1025,6 @@ object IcebergExport {
       specFields.map { case (f, fid) => (f.name, f.avroType, fid) })
     val partSchema = entrySchema.getField("data_file").schema()
       .getField("partition").schema()
-    val dataFileSchema = entrySchema.getField("data_file").schema()
     // DELETE files export under their own UNPARTITIONED spec (id 1 when
     // the table spec has fields): Iceberg scopes delete files by
     // (spec, partition tuple) — a delete entry written under the

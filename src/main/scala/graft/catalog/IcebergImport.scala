@@ -630,10 +630,8 @@ object IcebergImport {
     val firstVersion = math.max(current.version + 1, boundaries.size + 1)
     var base = current
     while (base.version + 1 < firstVersion) {
-      base = TableMetadata.commit(dir, base.copy(
-        version = base.version + 1,
-        snapshots = base.snapshots :+ Snapshot(
-          base.version + 1, System.currentTimeMillis(), "import-pad", 0, 0)))
+      base = SnapshotChange.commit(dir, base, SnapshotChange.Change("import-pad"),
+        SnapshotChange.Once)
     }
     histIds.zipWithIndex.foreach { case (id, i) =>
       val v = firstVersion + i
@@ -735,23 +733,21 @@ object IcebergImport {
         } catch {
           case scala.util.control.NonFatal(_) => Map.empty[String, String]
         }
-      base = TableMetadata.commit(dir, base.copy(
-        version = v,
-        files = rels,
-        fileStats = snapFiles.map { case (_, rel, f) => rel -> f.cols }
-          .filter(_._2.nonEmpty).toMap,
-        fileRows = snapFiles.map { case (_, rel, f) => rel -> f.rows }.toMap,
-        fileSeq = snapFiles.map { case (r, rel, _) => rel -> fileRank(r.seq) }.toMap,
-        deleteFiles = snapDeletes,
-        properties = base.properties ++ tagProps ++ statsProps ++ partStatsProps ++
+      base = SnapshotChange.commit(dir, base, SnapshotChange.Change(
+        if (isMain) "import-iceberg" else "import-iceberg-history",
+        restore = Some(base.copy(
+          files = rels,
+          fileStats = snapFiles.map { case (_, rel, f) => rel -> f.cols }
+            .filter(_._2.nonEmpty).toMap,
+          fileRows = snapFiles.map { case (_, rel, f) => rel -> f.rows }.toMap,
+          fileSeq = snapFiles.map { case (r, rel, _) => rel -> fileRank(r.seq) }.toMap,
+          deleteFiles = snapDeletes)),
+        properties = _ ++ tagProps ++ statsProps ++ partStatsProps ++
           (if (isMain) Map(
             "graft.import.source" -> metaPath.toString,
             "graft.import.snapshot" -> mainSnapId.toString)
-           else Map.empty),
-        snapshots = base.snapshots :+ Snapshot(
-          v, System.currentTimeMillis(),
-          if (isMain) "import-iceberg" else "import-iceberg-history",
-          rels.size, rels.size)))
+           else Map.empty)),
+        SnapshotChange.Once)
     }
     (imported.size + posByKey.size + eqEntries.size).toLong
   }

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -478,12 +477,11 @@ class LakehouseCatalog extends TableCatalog with SupportsNamespaces
     GeneratedColumns.validate(spark, schema, cleanProps(properties))
     IdentityColumns.validate(schema, cleanProps(properties))
     KeyConstraints.validate(schema, cleanProps(properties))
-    val meta = TableMetadata(
-      version = 1, name = ident.name, schema = schema,
+    val meta = SnapshotChange.commit(dir, TableMetadata(
+      version = 0, name = ident.name, schema = schema,
       partitionColumns = partCols,
       properties = cleanProps(properties) ++ bucketProps, files = Seq.empty,
-      snapshots = Seq(Snapshot(1, System.currentTimeMillis(), "create", 0, 0)))
-    TableMetadata.commit(dir, meta)
+      snapshots = Seq.empty), SnapshotChange.Change("create"), SnapshotChange.Once)
     new LakehouseTable(spark, fullName(ident), dir, meta)
   }
 
@@ -568,23 +566,18 @@ class LakehouseCatalog extends TableCatalog with SupportsNamespaces
     // merging is not a mechanical delta), but the ALTER itself is
     // replayable: the change list re-FOLDS over the fresh snapshot and
     // every guard (tombstones, widening, duplicate names) re-validates
-    // against it — so a race with an append/compact retries the whole
-    // derivation instead of failing the user's DDL.
-    val maxAttempts = 10
-    var attempt = 0
-    while (true) {
-      try return alterOnce(ident, dir, changes)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage.contains("commit conflict") && attempt < maxAttempts =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    // against it — so a race with an append/compact re-derives the
+    // whole ALTER instead of failing the user's DDL. A new CHECK
+    // constraint or generation expression re-runs its existing-rows
+    // verification against the fresh snapshot the same way, so a
+    // racing INSERT of violating rows and the constraint can never
+    // both land.
+    SnapshotChange.rederive(dir)(current => Some(alterChange(dir, current, changes)))
+    loadTable(ident)
   }
 
-  private def alterOnce(ident: Identifier, dir: Path, changes: Seq[TableChange]): Table = {
-    val current = TableMetadata.load(dir)
+  private def alterChange(
+      dir: Path, current: TableMetadata, changes: Seq[TableChange]): SnapshotChange.Change = {
     val updated = changes.foldLeft(current) { (m, change) =>
       change match {
         case addC: TableChange.AddConstraint =>
@@ -867,31 +860,8 @@ class LakehouseCatalog extends TableCatalog with SupportsNamespaces
     IdentityColumns.validate(updated.schema, updated.properties)
     // nor an informational key constraint's local columns
     KeyConstraints.validate(updated.schema, updated.properties)
-    // property-only alters rebase mechanically onto concurrent commits;
-    // schema alters racing anything make commitOrRebase decline, and
-    // the caller loop above re-derives them from the fresh snapshot.
-    // EXCEPTION: a new/changed CHECK constraint or generation
-    // expression must NOT rebase over a concurrent append — its
-    // existing-rows verification ran against the pre-race snapshot, so
-    // a racing INSERT of violating rows and the constraint could both
-    // land. Committing without rebase makes the race retry the whole
-    // derivation (alterTable's loop), re-verifying against the fresh
-    // snapshot — the verified-at-commit guarantee survives concurrency.
-    val addsVerifiedProps = changes.exists {
-      case set: TableChange.SetProperty =>
-        (set.property.startsWith(CheckConstraints.Prefix) ||
-          set.property.startsWith(GeneratedColumns.Prefix)) &&
-          !current.properties.get(set.property).contains(set.value)
-      case _: TableChange.AddConstraint => true
-      case _ => false
-    }
-    val attempt = updated.copy(
-      version = current.version + 1,
-      snapshots = current.snapshots :+
-        Snapshot(current.version + 1, System.currentTimeMillis(), "alter", 0, current.files.size))
-    if (addsVerifiedProps) TableMetadata.commit(dir, attempt)
-    else TableMetadata.commitOrRebase(dir, base = current, attempt = attempt)
-    loadTable(ident)
+    SnapshotChange.Change("alter", schema = Some(updated.schema),
+      properties = _ => updated.properties)
   }
 
   override def dropTable(ident: Identifier): Boolean = {

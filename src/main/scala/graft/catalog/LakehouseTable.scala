@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperationBuilder, RowLevelOperationInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{col, input_file_name, lit, not, coalesce, substring_index}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.InsertableRelation
@@ -690,17 +690,8 @@ class LakehouseTable(
     // bucket[n] claim until the next compaction
     val staged = CommitFiles.writeData(spark, tableDir, current.schema, current.properties,
       CommitFiles.dataRel(current.properties, nextVersion, "delete"), keptRows)
-    val hitSet = hitFiles.toSet
-    val survivors = current.files.filterNot(hitSet.contains)
-    val survivorSet = survivors.toSet
-    val allFiles = survivors ++ staged.files
-    TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
-      version = nextVersion,
-      files = allFiles,
-      fileStats = current.fileStats.view.filterKeys(survivorSet.contains).toMap ++ staged.stats,
-      fileRows = current.fileRows.view.filterKeys(survivorSet.contains).toMap ++ staged.rows,
-      snapshots = current.snapshots :+ Snapshot(
-        nextVersion, System.currentTimeMillis(), "delete", staged.files.size, allFiles.size)))
+    SnapshotChange.commit(tableDir, current, SnapshotChange.Change(
+      "delete", staged = staged, removed = hitFiles.toSet), SnapshotChange.Rebase)
   }
 
   /** Filtered overwrite (static-mode `INSERT OVERWRITE ... PARTITION`):
@@ -742,7 +733,7 @@ class LakehouseTable(
       data: DataFrame,
       overwrite: Boolean,
       startMeta: TableMetadata,
-      identBases: Map[String, Long] = Map.empty): Unit = {
+      identBases: Map[String, Long]): Unit = {
     // schema/partitioning are commit-stable; the caller's load is reused
     val op = if (overwrite) "overwrite" else "append"
 
@@ -812,17 +803,11 @@ class LakehouseTable(
 
     var staged = writeCommitFiles(data)
 
-    // Optimistic-concurrency publish with RETRY (the Iceberg commit
-    // loop): the data files are written exactly once above; on a
-    // version conflict we re-read the winner's metadata, merge our
-    // file additions on top of it, and publish again. Appends racing
-    // appends therefore all succeed, serialized; only the cheap
-    // metadata step repeats. Rewrite ops (delete/update/compact) do
-    // NOT retry — their file list was computed against a snapshot that
-    // no longer exists, so failing clean is the correct outcome.
-    val maxAttempts = 10
-    var attempt = 0
-    var committed = false
+    // Optimistic-concurrency publish (the Iceberg commit loop): the
+    // data files are written once above; every lost race re-derives the
+    // commit on the winner's metadata — re-checking the racer's identity
+    // and CHECK declarations against the written files — and publishes
+    // again. Appends racing appends therefore all succeed, serialized.
     var verifiedProps = startMeta.properties
     // tracked TOGETHER with verifiedProps: rebuilding the verified set
     // from startMeta.schema after verifiedProps advanced would crash
@@ -831,8 +816,7 @@ class LakehouseTable(
     // identity bases this write's values were minted from — updated if a
     // race forces a shift re-mint
     var mintedFrom = identBases
-    while (!committed) {
-      val current = TableMetadata.load(tableDir)
+    SnapshotChange.rederive(tableDir, owned = Seq(staged)) { current =>
       // Identity-DECLARATION race: a racer added or altered a
       // graft.identity.<col> spec after this write minted/validated its
       // rows against startMeta — the written files may hold NULLs or
@@ -918,50 +902,23 @@ class LakehouseTable(
         verifiedProps = current.properties
         verifiedSchema = current.schema
       }
-      val nextVersion = current.version + 1
-      val allFiles = if (overwrite) staged.files else current.files ++ staged.files
-      // Set, never Seq.contains: filterKeys over a 1M-file table with a
-      // linear contains is O(files^2) of driver CPU per INSERT
-      val allSet = allFiles.toSet
-      val allStats =
-        if (overwrite) staged.stats
-        else current.fileStats.view.filterKeys(allSet.contains).toMap ++ staged.stats
-      val allRows =
-        if (overwrite) staged.rows
-        else current.fileRows.view.filterKeys(allSet.contains).toMap ++ staged.rows
       // an overwrite replaces every file with current-schema data, so
-      // dropped-column tombstones (see LakehouseCatalog.alterTable)
-      // no longer protect anything
-      val props0 =
-        if (overwrite)
-          current.properties.filterNot(_._1.startsWith(LakehouseCatalog.TombstonePrefix))
-        else current.properties
-      // advance the identity high-water marks past the committed
+      // dropped-column tombstones (see LakehouseCatalog.alterTable) no
+      // longer protect anything, and old delete entries can never apply
+      // again; the identity high-water marks advance past the committed
       // extremes — read from the footer stats already in hand, no IO
-      val props =
-        if (mintedFrom.isEmpty) props0
-        else IdentityColumns.advance(props0,
-          IdentityColumns.committedExtreme(current.schema, props0, staged.stats, staged.rows))
-      // an overwrite replaces every data file at the new sequence: old
-      // delete entries can never apply again — drop the dead weight
-      val dels = if (overwrite) Seq.empty[DeleteFile] else current.deleteFiles
-      try {
-        TableMetadata.commit(tableDir, current.copy(
-          version = nextVersion,
-          files = allFiles,
-          fileStats = allStats,
-          fileRows = allRows,
-          deleteFiles = dels,
-          properties = props,
-          snapshots = current.snapshots :+ Snapshot(
-            nextVersion, System.currentTimeMillis(), op, staged.files.size, allFiles.size)),
-          delta =
-            if (overwrite) None else Some(TableMetadata.AppendDelta(staged.files)))
-        committed = true
-      } catch {
-        case _: IllegalStateException if attempt < maxAttempts =>
-          attempt += 1 // lost the race: merge onto the new current and retry
-      }
+      val minted = staged
+      Some(SnapshotChange.Change(op, staged = minted,
+        removed = if (overwrite) current.files.toSet else Set.empty,
+        removedDeletes = if (overwrite) current.deleteFiles.toSet else Set.empty,
+        properties = { p =>
+          val kept =
+            if (overwrite) p.filterNot(_._1.startsWith(LakehouseCatalog.TombstonePrefix))
+            else p
+          if (mintedFrom.isEmpty) kept
+          else IdentityColumns.advance(kept, IdentityColumns.committedExtreme(
+            current.schema, kept, minted.stats, minted.rows))
+        }))
     }
   }
 }

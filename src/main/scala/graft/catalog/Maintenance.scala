@@ -205,22 +205,16 @@ object Maintenance {
       } else d.coalesce(targetFiles)
     val staged = CommitFiles.writeData(
       spark, dir, current.schema, current.properties, commitRel, df, layout)
-    val newFiles = staged.files
-    TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
-      version = nextVersion,
-      files = newFiles,
-      fileStats = staged.stats,
-      fileRows = staged.rows,
+    SnapshotChange.commit(dir, current, SnapshotChange.Change("compact",
+      staged = staged, removed = current.files.toSet,
       // the rewrite read every row through the merging view: pending
       // equality deletes are now physical, their entries dead
-      deleteFiles = Seq.empty,
+      removedDeletes = current.deleteFiles.toSet,
       // every file now carries exactly the current schema: dropped
       // columns' physical data is gone, their names safe to reuse
-      properties = current.properties
-        .filterNot(_._1.startsWith(LakehouseCatalog.TombstonePrefix)),
-      snapshots = current.snapshots :+ Snapshot(
-        nextVersion, System.currentTimeMillis(), "compact", newFiles.size, newFiles.size)))
-    newFiles.size
+      properties = _.filterNot(_._1.startsWith(LakehouseCatalog.TombstonePrefix))),
+      SnapshotChange.Rebase)
+    staged.files.size
   }
 
   /** Partition-scoped compaction — `OPTIMIZE ... WHERE` for the
@@ -321,14 +315,9 @@ object Maintenance {
     val missing = identCols.filterNot(current.schema.fieldNames.contains)
     require(missing.isEmpty, s"no such column(s): ${missing.mkString(", ")}")
     if (identCols == current.partitionColumns && nextProps == current.properties) return
-    TableMetadata.commit(dir, current.copy(
-      version = current.version + 1,
-      partitionColumns = identCols,
-      properties = nextProps,
-      snapshots = current.snapshots :+ Snapshot(
-        current.version + 1, System.currentTimeMillis(),
-        s"set-partitioning(${columns.mkString(",")})", 0, current.files.size)),
-      delta = Some(TableMetadata.AppendDelta(Nil)))
+    SnapshotChange.commit(dir, current, SnapshotChange.Change(
+      s"set-partitioning(${columns.mkString(",")})",
+      partitionColumns = Some(identCols), properties = _ => nextProps), SnapshotChange.Once)
   }
 
   /** Rename a column by REWRITING the data (a new snapshot whose files
@@ -381,21 +370,14 @@ object Maintenance {
             data.repartition(current.files.size.max(1), newPartCols.map(data.col): _*)
               .sortWithinPartitions(newPartCols.map(data.col): _*)
           else data.coalesce(current.files.size.max(1)))
-    val newFiles = staged.files
-    TableMetadata.commit(dir, current.copy(
-      version = nextVersion,
-      schema = newSchema,
-      partitionColumns = newPartCols,
-      properties = newProps,
-      files = newFiles,
-      fileStats = staged.stats,
-      fileRows = staged.rows,
+    SnapshotChange.commit(dir, current, SnapshotChange.Change("rename",
+      staged = staged, removed = current.files.toSet,
       // full rewrite through the merging read: pending equality deletes
       // are physical now (and their key columns may bear the old name)
-      deleteFiles = Seq.empty,
-      snapshots = current.snapshots :+ Snapshot(
-        nextVersion, System.currentTimeMillis(), "rename", newFiles.size, newFiles.size)))
-    newFiles.size
+      removedDeletes = current.deleteFiles.toSet,
+      schema = Some(newSchema), partitionColumns = Some(newPartCols),
+      properties = _ => newProps), SnapshotChange.Once)
+    staged.files.size
   }
 
   /** Roll the table back to an earlier version's state — as a NEW
@@ -426,23 +408,12 @@ object Maintenance {
       throw new IllegalStateException(
         s"cannot roll back to v$toVersion: ${missing.size} data file(s) already vacuumed, " +
           s"first: ${missing.head}")
-    TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
-      version = current.version + 1,
-      schema = target.schema,
-      partitionColumns = target.partitionColumns,
-      properties = target.properties,
-      files = target.files,
-      fileStats = target.fileStats,
-      fileRows = target.fileRows,
-      // restore the HISTORICAL sequence numbers and delete entries:
-      // with fresh seqs, the target's own pending deletes would stop
-      // applying and deleted rows would resurrect (commit() honors
-      // explicitly-supplied fileSeq entries for exactly this)
-      fileSeq = target.fileSeq,
-      deleteFiles = target.deleteFiles,
-      snapshots = current.snapshots :+ Snapshot(
-        current.version + 1, System.currentTimeMillis(), s"rollback(v$toVersion)",
-        0, target.files.size)))
+    // restore carries the HISTORICAL sequence numbers and delete
+    // entries: with fresh seqs, the target's own pending deletes would
+    // stop applying and deleted rows would resurrect
+    SnapshotChange.commit(dir, current,
+      SnapshotChange.Change(s"rollback(v$toVersion)", restore = Some(target)),
+      SnapshotChange.Rebase)
   }
 
   /** Exactly-once append for streaming sinks: the (txnId, batchId)
@@ -503,49 +474,20 @@ object Maintenance {
     // the caller passes the old id and we honor its watermark read-only;
     // new commits advance only the new key
     val readKeys = key +: legacyTxnId.toSeq.map(id => s"graft.txn.$id")
-    val liveFiles = staged.files
-
-    // append-vs-append races retry on a fresh snapshot; a racer that
-    // already applied THIS batch wins and we discard our files
-    val maxAttempts = 10
-    var attempt = 0
-    while (true) {
-      val current = TableMetadata.load(dir)
-      if (readKeys.exists(k => current.properties.get(k).exists(_.toLong >= batchId))) {
-        liveFiles.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-        return false
-      }
-      val allFiles = if (replace) liveFiles else current.files ++ liveFiles
-      val allStats = if (replace) staged.stats else current.fileStats ++ staged.stats
-      val allRows = if (replace) staged.rows else current.fileRows ++ staged.rows
-      val dels = if (replace) Seq.empty[DeleteFile] else current.deleteFiles
-      val op = if (replace) "overwrite" else "append"
-      // explicit BY DEFAULT identity values in the epoch advance the
-      // high-water mark, same as batch INSERT — recomputed per attempt
-      // against the racer's possibly-larger mark (advance never regresses)
-      val props = IdentityColumns.advance(
-        current.properties + (key -> batchId.toString),
-        IdentityColumns.committedExtreme(meta.schema, current.properties, staged.stats,
-          staged.rows))
-      try {
-        TableMetadata.commit(dir, current.copy(
-          version = current.version + 1,
-          files = allFiles,
-          fileStats = allStats,
-          fileRows = allRows,
-          deleteFiles = dels,
-          properties = props,
-          snapshots = current.snapshots :+ Snapshot(
-            current.version + 1, System.currentTimeMillis(), op,
-            liveFiles.size, allFiles.size)),
-          delta =
-            if (replace) None else Some(TableMetadata.AppendDelta(liveFiles)))
-        return true
-      } catch {
-        case _: IllegalStateException if attempt < maxAttempts => attempt += 1
-      }
-    }
-    false // unreachable
+    // append-vs-append races re-derive on the fresh snapshot; a racer
+    // that already applied THIS batch wins and our files are discarded
+    SnapshotChange.rederive(dir, owned = Seq(staged)) { current =>
+      if (readKeys.exists(k => current.properties.get(k).exists(_.toLong >= batchId))) None
+      else Some(SnapshotChange.Change(if (replace) "overwrite" else "append",
+        staged = staged,
+        removed = if (replace) current.files.toSet else Set.empty,
+        removedDeletes = if (replace) current.deleteFiles.toSet else Set.empty,
+        // explicit BY DEFAULT identity values in the epoch advance the
+        // high-water mark, same as batch INSERT — recomputed per attempt
+        // against the racer's possibly-larger mark (advance never regresses)
+        properties = p => IdentityColumns.advance(p + (key -> batchId.toString),
+          IdentityColumns.committedExtreme(meta.schema, p, staged.stats, staged.rows))))
+    }.isDefined
   }
 
   /** [[watermarkedPublish]] in UPSERT mode (the streaming-CDC sink):
@@ -584,68 +526,22 @@ object Maintenance {
       .select(keyColumns.map(col): _*).distinct()
     val dels = CommitFiles.writeDeletes(spark, dir, "u", meta.version + 1, batchKeys,
       staged.rowCount)
-    def discardStaged(): Unit = {
-      newFiles.foreach { f =>
-        Files.deleteIfExists(dir.resolve(f))
-        val bdir = BloomIndex.bloomsDir(dir)
-        if (Files.isDirectory(bdir)) {
-          Fs.children(bdir).iterator
-            .filter(_.getFileName.toString.startsWith(BloomIndex.sidecarPrefix(f)))
-            .foreach(Files.deleteIfExists(_))
-        }
+    SnapshotChange.rederive(dir, owned = Seq(staged, dels)) { current =>
+      if (current.properties.get(key).exists(_.toLong >= batchId)) None
+      else {
+        // seq recomputed per attempt: it must equal THIS commit's version
+        // for the entry to cover exactly the pre-batch files
+        val next = current.version + 1
+        Some(SnapshotChange.Change("mor-upsert", staged = staged,
+          // upsert: the entry is born with its replacement files
+          addDeletes = dels.files.map(f => DeleteFile(f, keyColumns, next,
+            dels.footers(f).rows, dels.footers(f).cols, paired = true)),
+          // see watermarkedPublish: upserted explicit identity values must
+          // advance the mark or a later INSERT re-mints them
+          properties = p => IdentityColumns.advance(p + (key -> batchId.toString),
+            IdentityColumns.committedExtreme(schema, p, staged.stats, staged.rows))))
       }
-      Fs.deleteRecursively(dir.resolve(dels.rel))
-    }
-
-    val maxAttempts = 10
-    var attempt = 0
-    while (true) {
-      val current = TableMetadata.load(dir)
-      if (current.properties.get(key).exists(_.toLong >= batchId)) {
-        discardStaged()
-        return false
-      }
-      val next = current.version + 1
-      // seq recomputed per attempt: it must equal THIS commit's version
-      // for the entry to cover exactly the pre-batch files
-      val entries = dels.files.map { f =>
-        // upsert: the entry is born with its replacement files
-        DeleteFile(f, keyColumns, next, dels.footers(f).rows, dels.footers(f).cols,
-          paired = true)
-      }
-      val allFiles = current.files ++ newFiles
-      // see watermarkedPublish: upserted explicit identity values must
-      // advance the mark or a later INSERT re-mints them
-      val props = IdentityColumns.advance(
-        current.properties + (key -> batchId.toString),
-        IdentityColumns.committedExtreme(schema, current.properties, staged.stats, staged.rows))
-      try {
-        TableMetadata.commit(dir, current.copy(
-          version = next,
-          files = allFiles,
-          fileStats = current.fileStats ++ staged.stats,
-          fileRows = current.fileRows ++ staged.rows,
-          deleteFiles = current.deleteFiles ++ entries,
-          properties = props,
-          snapshots = current.snapshots :+ Snapshot(
-            next, System.currentTimeMillis(), "mor-upsert", newFiles.size, allFiles.size)),
-          delta = Some(TableMetadata.AppendDelta(newFiles)))
-        return true
-      } catch {
-        // only a genuine commit race retries (matching commitOrRebase);
-        // any other failure — and exhausted retries — must not leave the
-        // staged data files, delete parquet, and bloom sidecars orphaned
-        // under the table dir: no snapshot references them, so reclaim
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("commit conflict") =>
-          attempt += 1
-          if (attempt > maxAttempts) { discardStaged(); throw e }
-        case e: Throwable =>
-          discardStaged()
-          throw e
-      }
-    }
-    false // unreachable
+    }.isDefined
   }
 
   // ---- row-level UPDATE / MERGE (copy-on-write) ----------------------------
@@ -672,17 +568,8 @@ object Maintenance {
       if (reshape) CommitFiles.dataRel(current.properties, nextVersion, op)
       else CommitFiles.plainRel(nextVersion, op),
       newData, if (reshape) CommitFiles.byPartition(current.partitionColumns) else identity)
-    val hitSet = hitFiles.toSet
-    val survivors = current.files.filterNot(hitSet.contains)
-    val survivorSet = survivors.toSet
-    val allFiles = survivors ++ staged.files
-    TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
-      version = nextVersion,
-      files = allFiles,
-      fileStats = current.fileStats.view.filterKeys(survivorSet.contains).toMap ++ staged.stats,
-      fileRows = current.fileRows.view.filterKeys(survivorSet.contains).toMap ++ staged.rows,
-      snapshots = current.snapshots :+ Snapshot(
-        nextVersion, System.currentTimeMillis(), op, staged.files.size, allFiles.size)))
+    SnapshotChange.commit(dir, current,
+      SnapshotChange.Change(op, staged = staged, removed = hitFiles.toSet), SnapshotChange.Rebase)
   }
 
   private def fileName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
@@ -1216,31 +1103,17 @@ object Maintenance {
     require(name.matches("[A-Za-z0-9_-]+") && !name.forall(_.isDigit),
       s"invalid branch name '$name' (must contain a non-digit)")
     val dir = lakehouseTable(spark, catalog, namespace, table).tableDir
-    val maxAttempts = 10
-    var attempt = 0
-    while (true) {
-      val current = TableMetadata.load(dir)
+    val forked = SnapshotChange.rederive(dir) { current =>
       require(!current.properties.contains(BranchPrefix + name) &&
         !current.properties.contains(TagPrefix + name),
         s"ref '$name' already exists on ${current.name}")
-      val next = current.version + 1
-      try {
-        TableMetadata.commit(dir, current.copy(
-          version = next,
-          properties = current.properties + (BranchPrefix + name -> next.toString) +
-            (BranchCreatedPrefix + name -> System.currentTimeMillis().toString) ++
-            maxAgeMs.map(a => BranchMaxAgePrefix + name -> a.toString),
-          snapshots = current.snapshots :+ Snapshot(
-            next, System.currentTimeMillis(), s"branch($name)", 0, current.files.size)))
-        Files.createDirectories(branchLogDir(dir, name))
-        return next
-      } catch {
-        case e: IllegalStateException if e.getMessage.contains("commit conflict") =>
-          attempt += 1
-          if (attempt > maxAttempts) throw e
-      }
-    }
-    -1 // unreachable
+      Some(SnapshotChange.Change(s"branch($name)", properties = _ +
+        (BranchPrefix + name -> (current.version + 1).toString) +
+        (BranchCreatedPrefix + name -> System.currentTimeMillis().toString) ++
+        maxAgeMs.map(a => BranchMaxAgePrefix + name -> a.toString)))
+    }.get
+    Files.createDirectories(branchLogDir(dir, name))
+    forked.version
   }
 
   /** Append rows to a BRANCH: data files land under the table dir as
@@ -1304,22 +1177,15 @@ object Maintenance {
     val staged = CommitFiles.writeData(spark, dir, schema, head.properties,
       CommitFiles.plainRel(next, s"br$name"), guarded,
       CommitFiles.byPartition(head.partitionColumns))
-    val newFiles = staged.files
     // explicit BY-DEFAULT identity values advance the BRANCH's mark
     // (published with the head at fast_forward), so later mints on main
-    // never collide with branch-staged ids
-    val props = IdentityColumns.advance(head.properties,
-      IdentityColumns.committedExtreme(schema, head.properties, staged.stats, staged.rows))
-    commitToBranchOrRebase(dir, name, head, head.copy(
-      version = next,
-      files = head.files ++ newFiles,
-      fileStats = head.fileStats ++ staged.stats,
-      fileRows = head.fileRows ++ staged.rows,
-      properties = props,
-      snapshots = head.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "append",
-        newFiles.size, head.files.size + newFiles.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(newFiles)))
+    // never collide with branch-staged ids. Two ingest jobs landing on
+    // the same audit branch (the WAP norm at fleet scale) both succeed:
+    // branch commits rebase with the same commute laws as main.
+    SnapshotChange.commit(dir, head, SnapshotChange.Change("append", staged = staged,
+      properties = p => IdentityColumns.advance(p,
+        IdentityColumns.committedExtreme(schema, p, staged.stats, staged.rows))),
+      SnapshotChange.Rebase, SnapshotChange.BranchLog(name))
     staged.rowCount
   }
 
@@ -1350,80 +1216,9 @@ object Maintenance {
     val entries = dels.files.map { f =>
       DeleteFile(f, keyCols, next, dels.footers(f).rows, dels.footers(f).cols)
     }
-    commitToBranchOrRebase(dir, name, head, head.copy(
-      version = next,
-      deleteFiles = head.deleteFiles ++ entries,
-      snapshots = head.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "mor-delete", 0, head.files.size)))
+    SnapshotChange.commit(dir, head, SnapshotChange.Change("mor-delete", addDeletes = entries),
+      SnapshotChange.Rebase, SnapshotChange.BranchLog(name))
     dels.rowCount
-  }
-
-  /** Branch-log twin of [[TableMetadata.commitOrRebase]]: a version
-    * collision reloads the branch head and re-derives the attempt as a
-    * delta when the changes commute — two ingest jobs landing on the
-    * same audit branch (the WAP norm at fleet scale) both succeed,
-    * with the same commute laws as main (appends always; upsert
-    * re-sequencing; rewrites vs rewrites fail clean). */
-  private def commitToBranchOrRebase(
-      dir: Path, name: String, base: TableMetadata, attempt: TableMetadata,
-      maxAttempts: Int = 10,
-      appendDelta: Option[TableMetadata.AppendDelta] = None): TableMetadata = {
-    var b = base
-    var att = attempt
-    var tries = 0
-    var delta = appendDelta
-    while (true) {
-      try {
-        commitToBranch(dir, name, b, att, delta)
-        return att
-      } catch {
-        case e: IllegalStateException if e.getMessage.contains("commit conflict") =>
-          tries += 1
-          if (tries > maxAttempts) throw e
-          val cur = branchHead(dir, name)
-          delta = None
-          att = TableMetadata.rebase(b, att, cur).getOrElse(throw new IllegalStateException(
-            s"commit conflict: branch '$name' changed concurrently (v${b.version} -> " +
-              s"v${cur.version}) and the changes do not commute; re-run against the " +
-              "current branch head", e))
-          b = cur
-      }
-    }
-    att // unreachable
-  }
-
-  /** Atomic branch-log commit with the same structural fileSeq
-    * maintenance as [[TableMetadata.commit]] (prev = the branch head
-    * the attempt was computed against). A version collision throws
-    * `commit conflict`; [[commitToBranchOrRebase]] is the retry face. */
-  private def commitToBranch(
-      dir: Path, name: String, prev: TableMetadata, meta: TableMetadata,
-      delta: Option[TableMetadata.AppendDelta] = None): Unit = {
-    val bdir = branchLogDir(dir, name)
-    Files.createDirectories(bdir)
-    val target = bdir.resolve(s"v${meta.version}.json")
-    if (Files.exists(target))
-      throw new IllegalStateException(
-        s"commit conflict: branch '$name' version ${meta.version} already exists")
-    // manifest chunks land in the MAIN metadata dir (the shared pool a
-    // fast-forwarded payload keeps pointing into); the predecessor for
-    // delta/seq purposes is the branch's own head file, or the fork
-    // version on main for a branch with no commits yet
-    val md = TableMetadata.metadataDir(dir)
-    val prevFile = Seq(
-      bdir.resolve(s"v${meta.version - 1}.json"),
-      TableMetadata.versionFile(dir, meta.version - 1)).find(Files.exists(_))
-    val (json, _, newManifests, rendered) =
-      TableMetadata.renderNext(md, prevFile, meta, delta)
-    // one publish protocol (link-CAS, no-link fallback, conflict
-    // classification, post-link chunk verification) — shared with the
-    // main log so a fix there can never silently miss the branch path
-    TableMetadata.publishPayload(bdir, target, json, newManifests,
-      meta.name, meta.version, conflictMsg =
-        s"commit conflict: branch '$name' version ${meta.version} already exists",
-      advanceHint = false)
-    // branch heads are successor-rendered too (streaming WAP commits)
-    TableMetadata.seedRenderState(target, rendered)
   }
 
   /** PUBLISH a branch: move main's head to the branch head by copying
@@ -1505,26 +1300,12 @@ object Maintenance {
     }
   }
 
-  /** Metadata-only property commit with append-style retry. */
+  /** Metadata-only property commit, re-derived on every lost race. */
   private def commitPropertyChange(
       dir: Path, op: String,
-      change: Map[String, String] => Map[String, String]): Unit = {
-    val maxAttempts = 10
-    var attempt = 0
-    while (true) {
-      val current = TableMetadata.load(dir)
-      try {
-        TableMetadata.commit(dir, current.copy(
-          version = current.version + 1,
-          properties = change(current.properties),
-          snapshots = current.snapshots :+ Snapshot(
-            current.version + 1, System.currentTimeMillis(), op, 0, current.files.size)))
-        return
-      } catch {
-        case _: IllegalStateException if attempt < maxAttempts => attempt += 1
-      }
-    }
-  }
+      change: Map[String, String] => Map[String, String]): Unit =
+    SnapshotChange.commit(dir, TableMetadata.load(dir),
+      SnapshotChange.Change(op, properties = change), SnapshotChange.Rederive)
 
   /** Consolidate the current manifest list into minimal chunks —
     * Iceberg's `rewrite_manifests`. A streaming sink committing every
@@ -1542,26 +1323,15 @@ object Maintenance {
       catalog: String,
       namespace: Seq[String],
       table: String): Long = {
-    val lt = lakehouseTable(spark, catalog, namespace, table)
-    val dir = lt.tableDir
-    val maxAttempts = 10
-    var attempt = 0
-    while (true) {
-      val meta = TableMetadata.load(dir)
+    val dir = lakehouseTable(spark, catalog, namespace, table).tableDir
+    var seen = 0
+    SnapshotChange.rederive(dir) { meta =>
+      seen = meta.manifests.size
       val minimal = math.max(1,
         (meta.files.size + Manifests.ChunkSize - 1) / Manifests.ChunkSize)
-      if (meta.manifests.size <= minimal) return meta.manifests.size.toLong
-      try {
-        return TableMetadata.commitConsolidatedManifests(dir, meta)
-          .manifests.size.toLong
-      } catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("commit conflict") =>
-          attempt += 1
-          if (attempt > maxAttempts) throw e
-      }
-    }
-    -1L // unreachable
+      if (seen <= minimal) None
+      else Some(SnapshotChange.Change("rewrite-manifests", rechunk = true))
+    }.fold(seen)(_.manifests.size).toLong
   }
 
   /** Expire old metadata versions — Iceberg's `expire_snapshots` for
@@ -1791,7 +1561,7 @@ object Maintenance {
     * read missing columns as null) and yields min/max/null stats plus
     * row counts, so file-skipping and metadata-only COUNT(*) answers
     * work on imported files exactly as on written ones.
-    * `TableMetadata.commit` auto-sequences the new files at the new
+    * The commit auto-sequences the new files at the new
     * version, so pending merge-on-read delete entries do NOT apply to
     * imported rows (they arrived after the delete). Bucketed tables
     * are refused — imported files carry no bucket-to-file mapping and
@@ -1901,23 +1671,14 @@ object Maintenance {
     }.toMap
     val staged = CommitFiles.keep(spark, dir, current.schema, current.properties, commitRel,
       byRel.keys.toSeq.sorted, byRel)
-    val newFiles = staged.files
-    val allFiles = current.files ++ newFiles
     // imported files carry their own identity values: advance the mint
     // mark past them (from the footers already in hand) so later
     // INSERTs never collide with imported ids
-    val props = IdentityColumns.advance(current.properties,
-      IdentityColumns.committedExtreme(current.schema, current.properties, staged.stats,
-        staged.rows))
-    TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
-      version = nextVersion,
-      files = allFiles,
-      fileStats = current.fileStats ++ staged.stats,
-      fileRows = current.fileRows ++ staged.rows,
-      properties = props,
-      snapshots = current.snapshots :+ Snapshot(
-        nextVersion, System.currentTimeMillis(), "add_files", newFiles.size, allFiles.size)))
-    newFiles.size
+    SnapshotChange.commit(dir, current, SnapshotChange.Change("add_files", staged = staged,
+      properties = p => IdentityColumns.advance(p,
+        IdentityColumns.committedExtreme(current.schema, p, staged.stats, staged.rows))),
+      SnapshotChange.Rebase)
+    staged.files.size
   }
 
   /** Zero-copy shallow clone (Delta's SHALLOW CLONE / Iceberg's
@@ -1981,33 +1742,20 @@ object Maintenance {
       finally stream.close()
     }
 
-    val created = TableMetadata.load(dstDir)
-    TableMetadata.commit(dstDir, created.copy(
-      version = created.version + 1,
-      schema = srcMeta.schema,
-      partitionColumns = srcMeta.partitionColumns,
-      // tags and branches name VERSIONS OF THE SOURCE's metadata log;
-      // the clone's log starts fresh, so carrying them would leave
-      // refs pointing at versions that don't exist here (Delta's
-      // SHALLOW CLONE strips them too)
-      properties = srcMeta.properties
-        .filterNot { case (k, _) =>
+    // restore carries every file's seq, so each pending delete entry
+    // applies to exactly the same files. Tags and branches name
+    // VERSIONS OF THE SOURCE's metadata log; the clone's log starts
+    // fresh, so carrying them would leave refs pointing at versions
+    // that don't exist here (Delta's SHALLOW CLONE strips them too)
+    SnapshotChange.commit(dstDir, TableMetadata.load(dstDir), SnapshotChange.Change("clone",
+      restore = Some(srcMeta),
+      properties = _.filterNot { case (k, _) =>
           k.startsWith(TagPrefix) || k.startsWith(BranchPrefix) ||
             k.startsWith(TagCreatedPrefix) || k.startsWith(BranchCreatedPrefix) ||
             k.startsWith(TagMaxAgePrefix) || k.startsWith(BranchMaxAgePrefix)
-        } +
-        ("graft.clone.source" ->
-          s"${(srcNamespace :+ srcTable).mkString(".")}@v${srcMeta.version}"),
-      files = srcMeta.files,
-      fileStats = srcMeta.fileStats,
-      fileRows = srcMeta.fileRows,
-      // explicit seqs survive commit()'s structural sequencing, so
-      // every pending delete entry applies to exactly the same files
-      fileSeq = srcMeta.files.map(f => f -> srcMeta.seqOf(f)).toMap,
-      deleteFiles = srcMeta.deleteFiles,
-      snapshots = created.snapshots :+ Snapshot(
-        created.version + 1, System.currentTimeMillis(), "clone",
-        srcMeta.files.size, srcMeta.files.size)))
+        } + ("graft.clone.source" ->
+          s"${(srcNamespace :+ srcTable).mkString(".")}@v${srcMeta.version}")),
+      SnapshotChange.Once)
     srcMeta.files.size
   }
 

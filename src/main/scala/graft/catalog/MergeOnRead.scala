@@ -309,16 +309,8 @@ object MergeOnRead {
     val data = CommitFiles.writeData(spark, tableDir, current.schema, current.properties,
       CommitFiles.dataRel(current.properties, next, "morupd"), newRows,
       CommitFiles.byPartition(current.partitionColumns))
-    val allFiles = current.files ++ data.files
-    TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
-      version = next,
-      files = allFiles,
-      fileStats = current.fileStats ++ data.stats,
-      fileRows = current.fileRows ++ data.rows,
-      deleteFiles = current.deleteFiles ++ entries,
-      snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "mor-update", data.files.size, allFiles.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(data.files)))
+    SnapshotChange.commit(tableDir, current, SnapshotChange.Change(
+      "mor-update", staged = data, addDeletes = entries), SnapshotChange.Rebase)
     data.rowCount
   }
 
@@ -331,7 +323,7 @@ object MergeOnRead {
     * Returns the number of (file, pos) tuples recorded.
     *
     * Conflict handling matches equality deletes (entry seq preserved
-    * across [[TableMetadata.commitOrRebase]]); the entry is EXACT about
+    * across [[SnapshotChange.Rebase]]); the entry is EXACT about
     * which files it targets, so racer-appended files are never touched
     * and racing rewrites of the targeted files fail the commit. */
   def morDeletePositionalAt(spark: SparkSession, tableDir: Path, filePos: DataFrame): Long = {
@@ -352,18 +344,14 @@ object MergeOnRead {
       DeleteFile(f, Seq(PosFileCol, PosPosCol), next, dels.footers(f).rows,
         dels.footers(f).cols, kind = DeleteFile.Positional)
     }
-    TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
-      version = next,
-      deleteFiles = current.deleteFiles ++ entries,
-      snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "mor-delete-pos", 0, current.files.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(Nil)))
+    SnapshotChange.commit(tableDir, current, SnapshotChange.Change(
+      "mor-delete-pos", addDeletes = entries), SnapshotChange.Rebase)
     dels.rowCount
   }
 
   /** Shared commit: write the delete-key parquet (plus optionally the
     * upsert data files), collect footer stats, publish one snapshot.
-    * Conflicts rebase optimistically ([[TableMetadata.commitOrRebase]]):
+    * Conflicts rebase optimistically ([[SnapshotChange.Rebase]]):
     * the entry's sequence number is PRESERVED across the rebase, so it
     * keeps applying exactly to the data files of the snapshot the keys
     * were computed from and never to rows a racer appended concurrently
@@ -408,17 +396,9 @@ object MergeOnRead {
       CommitFiles.dataRel(current.properties, next, "upsert"), rows,
       CommitFiles.byPartition(current.partitionColumns)))
 
-    val allFiles = current.files ++ data.files
     val op = if (appendData.isDefined) "mor-upsert" else "mor-delete"
-    TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
-      version = next,
-      files = allFiles,
-      fileStats = current.fileStats ++ data.stats,
-      fileRows = current.fileRows ++ data.rows,
-      deleteFiles = current.deleteFiles ++ entries,
-      snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), op, data.files.size, allFiles.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(data.files)))
+    SnapshotChange.commit(tableDir, current, SnapshotChange.Change(
+      op, staged = data, addDeletes = entries), SnapshotChange.Rebase)
     if (appendData.isDefined) data.rowCount else dels.rowCount
   }
 
@@ -438,38 +418,19 @@ object MergeOnRead {
     val current = TableMetadata.load(dir)
     if (current.deleteFiles.isEmpty) return 0
     val dirty = current.files.filter(f => applicable(current, f).nonEmpty)
-    val next = current.version + 1
-    if (dirty.isEmpty) {
-      // every entry is dead (stats-proven cleanliness everywhere):
-      // metadata-only commit dropping them
-      TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
-        version = next,
-        deleteFiles = Seq.empty,
-        snapshots = current.snapshots :+ Snapshot(
-          next, System.currentTimeMillis(), "materialize-deletes", 0, current.files.size)),
-        appendDelta = Some(TableMetadata.AppendDelta(Nil)))
-      return 0
-    }
-    // materializing a bucketed table's dirty files must re-bucket: the
-    // inputs were bucket-addressable, so the rewrite's outputs stay so
-    val mat = CommitFiles.writeData(spark, dir, current.schema, current.properties,
-      CommitFiles.dataRel(current.properties, next, "materialize"),
-      read(spark, dir, current, dirty))
-    // Set membership: Seq.contains would make this metadata-only commit
-    // O(files × dirty) on the driver — quadratic at the 10k-100k-file
-    // scale this operation exists for
-    val dirtySet = dirty.toSet
-    val kept = current.files.filterNot(dirtySet.contains)
-    val keptSet = kept.toSet
-    val allFiles = kept ++ mat.files
-    TableMetadata.commitOrRebase(dir, base = current, attempt = current.copy(
-      version = next,
-      files = allFiles,
-      fileStats = current.fileStats.view.filterKeys(keptSet.contains).toMap ++ mat.stats,
-      fileRows = current.fileRows.view.filterKeys(keptSet.contains).toMap ++ mat.rows,
-      deleteFiles = Seq.empty,
-      snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "materialize-deletes", mat.files.size, allFiles.size)))
+    // every entry dies: dirty files are rewritten through the merging
+    // read; with none dirty (stats-proven cleanliness everywhere) the
+    // commit is metadata-only
+    val mat =
+      if (dirty.isEmpty) CommitFiles.Staged.empty
+      else CommitFiles.writeData(spark, dir, current.schema, current.properties,
+        // a bucketed table's dirty files re-bucket: the inputs were
+        // bucket-addressable, so the rewrite's outputs stay so
+        CommitFiles.dataRel(current.properties, current.version + 1, "materialize"),
+        read(spark, dir, current, dirty))
+    SnapshotChange.commit(dir, current, SnapshotChange.Change("materialize-deletes",
+      staged = mat, removed = dirty.toSet, removedDeletes = current.deleteFiles.toSet),
+      SnapshotChange.Rebase)
     dirty.size
   }
 
@@ -545,12 +506,10 @@ object MergeOnRead {
         d.copy(vector = rel)
       }
     }
-    TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
-      version = next,
-      deleteFiles = updated,
-      snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "vectorize-deletes", 0, current.files.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(Nil)))
+    val changed = current.deleteFiles.zip(updated).filter { case (d, u) => d ne u }
+    SnapshotChange.commit(tableDir, current, SnapshotChange.Change("vectorize-deletes",
+      removedDeletes = changed.map(_._1).toSet, addDeletes = changed.map(_._2)),
+      SnapshotChange.Rebase)
     n
   }
 
@@ -622,13 +581,8 @@ object MergeOnRead {
     if (wins.isEmpty) return 0
     val doomed = wins.flatMap(_._1).toSet
     val mergedEntries = wins.flatMap(_._2)
-    val kept = current.deleteFiles.filterNot(doomed.contains)
-    TableMetadata.commitOrRebase(tableDir, base = current, attempt = current.copy(
-      version = next,
-      deleteFiles = kept ++ mergedEntries,
-      snapshots = current.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "consolidate-deletes", 0, current.files.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(Nil)))
-    current.deleteFiles.size - (kept.size + mergedEntries.size)
+    SnapshotChange.commit(tableDir, current, SnapshotChange.Change("consolidate-deletes",
+      removedDeletes = doomed, addDeletes = mergedEntries), SnapshotChange.Rebase)
+    current.deleteFiles.count(doomed.contains) - mergedEntries.size
   }
 }

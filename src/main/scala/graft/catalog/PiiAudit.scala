@@ -106,15 +106,11 @@ object PiiAudit {
     val encoded = flagged.toSeq.sortBy(_._1)
       .map { case (c, kinds) => s"$c:${kinds.mkString("+")}" }.mkString(",")
     val cur = TableMetadata.load(dir)
-    TableMetadata.commitOrRebase(dir, base = cur, attempt = cur.copy(
-      version = cur.version + 1,
-      properties =
-        (cur.properties - ColumnsProp) +
+    SnapshotChange.commit(dir, cur, SnapshotChange.Change("pii-audit", properties = p =>
+        (p - ColumnsProp) +
           (HasPiiProp -> flagged.nonEmpty.toString) ++
-          (if (flagged.nonEmpty) Map(ColumnsProp -> encoded) else Map.empty),
-      snapshots = cur.snapshots :+ Snapshot(
-        cur.version + 1, System.currentTimeMillis(), "pii-audit", 0, cur.files.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(Nil)))
+          (if (flagged.nonEmpty) Map(ColumnsProp -> encoded) else Map.empty)),
+      SnapshotChange.Rebase)
   }
 
   /** Create (or replace) a PSEUDONYMIZED view of an audited table:

@@ -182,28 +182,19 @@ class LakehouseRowLevelOperation(
 
   /** Swap the scanned files for the rewrite's output in ONE metadata
     * commit. A racer that only APPENDED or changed properties commutes
-    * — the rewrite rebases onto its commit (commitOrRebase); any racer
-    * that touched files or delete entries fails the commit clean. */
+    * — the rewrite rebases onto its commit ([[SnapshotChange.Rebase]]);
+    * any racer that touched files or delete entries fails the commit
+    * clean. */
   private def publish(commitRel: String): Unit = {
     val staged = CommitFiles.collect(spark, tableDir, base.schema, base.properties, commitRel)
-    val replaced = scannedFiles.toSet
-    val kept = base.files.filterNot(replaced.contains)
-    val allFiles = kept ++ staged.files
     // explicit BY DEFAULT identity values a MERGE inserted must advance
     // the high-water mark, or the next batch INSERT re-mints them as
     // duplicates; rebase merges the marks monotonically under races
-    val props = IdentityColumns.advance(base.properties,
-      IdentityColumns.committedExtreme(base.schema, base.properties, staged.stats, staged.rows))
-    val keptSet = kept.toSet
-    TableMetadata.commitOrRebase(tableDir, base = base, attempt = base.copy(
-      version = base.version + 1,
-      files = allFiles,
-      properties = props,
-      fileStats = base.fileStats.view.filterKeys(keptSet.contains).toMap ++ staged.stats,
-      fileRows = base.fileRows.view.filterKeys(keptSet.contains).toMap ++ staged.rows,
-      snapshots = base.snapshots :+ Snapshot(
-        base.version + 1, System.currentTimeMillis(),
-        cmd.toString.toLowerCase, staged.files.size, allFiles.size)))
+    SnapshotChange.commit(tableDir, base, SnapshotChange.Change(cmd.toString.toLowerCase,
+      staged = staged, removed = scannedFiles.toSet,
+      properties = p => IdentityColumns.advance(p,
+        IdentityColumns.committedExtreme(base.schema, p, staged.stats, staged.rows))),
+      SnapshotChange.Rebase)
   }
 }
 

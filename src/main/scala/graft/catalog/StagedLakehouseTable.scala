@@ -68,17 +68,15 @@ class StagedLakehouseTable(
     }
 
   override def commitStagedChanges(): Unit =
-    TableMetadata.commit(dir, TableMetadata(
-      version = version,
+    SnapshotChange.commit(dir, TableMetadata(
+      version = version - 1,
       name = identName.split('.').last,
       schema = stagedSchema,
       partitionColumns = partitionColumns,
       properties = tableProperties,
-      files = written.files,
-      fileStats = written.stats,
-      fileRows = written.rows,
-      snapshots = priorSnapshots :+ Snapshot(
-        version, System.currentTimeMillis(), op, written.files.size, written.files.size)))
+      files = Seq.empty,
+      snapshots = priorSnapshots), SnapshotChange.Change(op, staged = written),
+      SnapshotChange.Once)
 
   override def abortStagedChanges(): Unit = {
     Fs.deleteRecursively(commitDir)

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
@@ -661,53 +660,20 @@ object TableMetadata {
       }
     }
 
-  /** Optimistic-concurrency commit: write to a temp file, then publish
-    * as `v{meta.version}.json` with an operation that FAILS if the
-    * target already exists. `Files.move(ATOMIC_MOVE)` is rename(2) on
-    * Linux, which silently replaces an existing target — two racing
-    * committers would both "succeed". `Files.createLink` maps to
-    * link(2), which atomically fails with EEXIST, so exactly one racer
-    * wins and the loser gets a clear conflict error — the snapshot
-    * isolation story the reference inherits from Iceberg's metadata
-    * swap (`README.md:543-551`). Falls back to move-after-exists-check
-    * only on filesystems without hard links.
-    */
-  /** Publishes `meta` as the next version. Returns the metadata as
-    * actually written — i.e. with the structural fileSeq assignments
-    * filled in — so callers that keep reasoning about the committed
-    * snapshot (rebase tests, applicability checks) see the same seqs a
-    * reader loading it from disk would. */
+  /** Publish a prebuilt `meta` as the next main-log version, one
+    * attempt ([[SnapshotChange.land]]): the payload is claimed with an
+    * operation that FAILS if the version already exists (link(2)'s
+    * EEXIST, see [[claimSlot]]), so exactly one racer wins and the
+    * loser gets a clear conflict error — the snapshot isolation story
+    * the reference inherits from Iceberg's metadata swap
+    * (`README.md:543-551`). Returns the metadata as actually written —
+    * i.e. with the structural fileSeq assignments filled in — so callers
+    * that keep reasoning about the committed snapshot see the same seqs
+    * a reader loading it from disk would. Catalog writes describe their
+    * change to [[SnapshotChange]] instead. */
   def commit(tableDir: Path, meta: TableMetadata,
-      delta: Option[AppendDelta] = None): TableMetadata = {
-    val md = metadataDir(tableDir)
-    Files.createDirectories(md)
-    val target = versionFile(tableDir, meta.version)
-    if (Files.exists(target))
-      throw new IllegalStateException(
-        s"commit conflict: version ${meta.version} already exists for ${meta.name}")
-    val prevFile = if (meta.version <= 1) None else Some(versionFile(tableDir, meta.version - 1))
-    val (json, sequenced, newManifests, rendered) =
-      renderNext(md, prevFile, meta, delta)
-    // write-through Iceberg mirror: tables opted in via
-    // `graft.iceberg.mirror=true` maintain their external snapshot as
-    // part of every main-log publish (never fails the commit — see
-    // [[IcebergExport.maintainMirror]]). The version-hint advances
-    // only AFTER the mirror lands: external readers following
-    // hint → v<N>.metadata.json must never observe N before the
-    // document exists (graft's own readers are indifferent — the
-    // forward probe finds the new contiguous version from any older
-    // hint). On mirror failure the hint still advances: staleness
-    // then surfaces loudly at the reader, the documented contract.
-    val mirrored = isMirrored(meta)
-    publishPayload(md, target, json, newManifests, meta.name, meta.version,
-      advanceHint = !mirrored)
-    // only a PUBLISHED version may seed the render cache: the slot is
-    // immutable from here, so the state is what any successor's fresh
-    // parse would reconstruct
-    seedRenderState(target, rendered)
-    if (mirrored) mirrorThenHint(tableDir, sequenced)
-    sequenced
-  }
+      delta: Option[AppendDelta] = None): TableMetadata =
+    SnapshotChange.land(tableDir, SnapshotChange.MainLog, meta, delta)()
 
   private[catalog] def isMirrored(meta: TableMetadata): Boolean =
     meta.properties.get("graft.iceberg.mirror").contains("true")
@@ -730,17 +696,18 @@ object TableMetadata {
     * race, delete this attempt's freshly-written manifest chunks (they
     * are referenced by nothing — the expire-time orphan reaper is only
     * the crash backstop) and raise the commit conflict. ONE copy of the
-    * publish protocol: the branch log ([[Maintenance]]) lands its
-    * payloads through here too, with its own conflict message.
+    * publish protocol: [[SnapshotChange.land]] lands main-log and
+    * branch-log payloads through here, each with its own conflict
+    * message.
     *
     * Protocol details that are load-bearing:
     *  - [[claimSlot]] makes the slot claim atomic (link(2) EEXIST, or
     *    an O_EXCL create on no-link filesystems) — exactly one racer
     *    wins a version slot, and a loser can never silently replace
     *    the winner's payload.
-    *  - every non-conflict failure is classified: a raw escape would
-    *    bypass [[commitOrRebase]]'s "commit conflict" retry filter and
-    *    leak this attempt's chunks.
+    *  - every failure retracts this attempt's chunks, and a lost claim
+    *    raises the "commit conflict" [[SnapshotChange]]'s retry loop
+    *    filters on.
     *  - the attempt's manifest chunks are re-verified to exist AFTER
     *    the claim: a committer stalled past the orphan reaper's grace
     *    window can have its not-yet-referenced chunks reaped between
@@ -784,8 +751,13 @@ object TableMetadata {
     // payload ever becomes observable (the post-claim re-check below
     // still closes the race with a CONCURRENT expire advancing the
     // floor; this one removes the claim-then-retract flicker from the
-    // common stale-committer wakeup)
-    if (version <= readFloor(md)) expiredConflict()
+    // common stale-committer wakeup). A floor that cannot be read fails
+    // the attempt before or after the claim with its chunks (and slot)
+    // retracted: the caller discards its staged files on that failure.
+    val belowFloor =
+      try version <= readFloor(md)
+      catch { case e: Exception => retract(); throw e }
+    if (belowFloor) expiredConflict()
     val tmp =
       try {
         val t = Files.createTempFile(md, s".v$version-", ".json.tmp")
@@ -810,49 +782,15 @@ object TableMetadata {
           s"v$version was reaped while the commit was in flight (stalled " +
           "past the orphan grace window) — retry re-renders the chunks")
     }
-    if (version <= readFloor(md)) {
+    val expiredSinceClaim =
+      try version <= readFloor(md)
+      catch { case e: Exception => Files.deleteIfExists(target); retract(); throw e }
+    if (expiredSinceClaim) {
       Files.deleteIfExists(target)
       expiredConflict()
     }
     Manifests.promoteSeeds(newManifests)
     if (advanceHint) writeHint(md, version)
-  }
-
-  /** Metadata-only commit that CONSOLIDATES the manifest list: the base
-    * version's entries re-chunk into minimal [[Manifests.ChunkSize]]
-    * runs, file order preserved, data files and delete entries
-    * untouched. The pressure valve for [[renderNext]]'s per-commit
-    * delta: a high-commit-rate table (streaming epochs, frequent small
-    * appends) accrues one tiny ref per commit and planning cost grows
-    * with ref count — Iceberg ships `rewrite_manifests` for exactly
-    * this. `base` must be freshly loaded (resolved). */
-  private[catalog] def commitConsolidatedManifests(
-      tableDir: Path,
-      base: TableMetadata): TableMetadata = {
-    val md = metadataDir(tableDir)
-    val next = base.version + 1
-    val target = versionFile(tableDir, next)
-    if (Files.exists(target))
-      throw new IllegalStateException(
-        s"commit conflict: version $next already exists for ${base.name}")
-    val entries = base.files.map(f => ManifestEntry(
-      f, base.fileRows.get(f), base.seqOf(f), base.fileStats.getOrElse(f, Map.empty)))
-    val refs = Manifests.write(md, next, entries, summaryColumns(base), base.schema)
-    val chunkGroups = refs.zip(entries.grouped(Manifests.ChunkSize).toSeq)
-    val sequenced = base.copy(
-      version = next,
-      fileSeq = entries.map(e => e.path -> e.seq).toMap,
-      manifests = refs,
-      snapshots = base.snapshots :+ Snapshot(
-        next, System.currentTimeMillis(), "rewrite-manifests", 0, base.files.size))
-    val mirrored = isMirrored(sequenced)
-    publishPayload(md, target, sequenced.payloadJson,
-      refs.map(r => md.resolve(r.path)), base.name, next,
-      advanceHint = !mirrored)
-    seedRenderState(target, RenderedState(
-      refs, chunkGroups, base.files.toSet, sequenced.fileSeq))
-    if (mirrored) mirrorThenHint(tableDir, sequenced)
-    sequenced
   }
 
   /** A committer's EXPLICIT statement that its attempt is the
@@ -896,7 +834,7 @@ object TableMetadata {
     * per-file seq map. Version files are immutable once published
     * (expire replaces them with tombstones, and nothing renders
     * against a tombstone), so a cached state can never go stale.
-    * Seeded by [[commit]] AFTER a successful publish — never before:
+    * Seeded by [[SnapshotChange.land]] AFTER a successful publish — never before:
     * a lost slot race would otherwise poison the key with the LOSER's
     * rendering of that version. */
   private[catalog] final case class RenderedState(
@@ -988,7 +926,7 @@ object TableMetadata {
   }
 
   /** The storage half of a commit, shared by the main log and the
-    * branch logs ([[Maintenance]]): sequence `meta` against the
+    * branch logs ([[SnapshotChange.land]]): sequence `meta` against the
     * previous payload, plan the manifest delta, WRITE the new chunks,
     * and render the version payload.
     *
@@ -1165,8 +1103,8 @@ object TableMetadata {
     }
   }
 
-  /** [[commit]] with optimistic rebase — the Iceberg commit loop,
-    * generalized to every commit kind. `attempt` was computed against
+  /** [[commit]] with optimistic rebase — [[SnapshotChange]]'s retry loop
+    * under its Rebase policy, for a prebuilt attempt. `attempt` was computed against
     * `base`; when another writer published versions in between, the
     * commit's DELTA (files and delete entries added/removed, property
     * changes, its snapshot entry) is re-derived and re-applied onto the
@@ -1208,34 +1146,13 @@ object TableMetadata {
       maxAttempts: Int = 10,
       // the append declaration holds only for the ORIGINAL attempt
       // against its own base; a rebased attempt re-verifies fully
-      appendDelta: Option[AppendDelta] = None): TableMetadata = {
-    var b = base
-    var att = attempt
-    var tries = 0
-    var delta = appendDelta
-    while (true) {
-      try {
-        return commit(tableDir, att, delta)
-      } catch {
-        case e: IllegalStateException if e.getMessage.contains("commit conflict") =>
-          tries += 1
-          if (tries > maxAttempts) throw e
-          val cur = load(tableDir)
-          delta = None
-          att = rebase(b, att, cur).getOrElse(throw new IllegalStateException(
-            s"commit conflict: ${att.name} changed concurrently (v${b.version} -> " +
-              s"v${cur.version}) and the changes do not commute; re-run against the " +
-              "current snapshot", e))
-          b = cur
-      }
-    }
-    att // unreachable
-  }
+      appendDelta: Option[AppendDelta] = None): TableMetadata =
+    SnapshotChange.rebaseAttempt(tableDir, base, attempt, appendDelta, maxAttempts)
 
   /** Re-derive base→attempt as a delta and apply it to `cur`, or None
     * when the concurrent base→cur change does not commute with it.
-    * `private[catalog]`: branch-log commits (Maintenance) run the same
-    * rebase loop against the branch head. */
+    * [[SnapshotChange]]'s Rebase policy runs it against the main head
+    * or a branch head. */
   private[catalog] def rebase(
       base: TableMetadata,
       attempt: TableMetadata,
@@ -1274,9 +1191,9 @@ object TableMetadata {
     // declaration-time verification scanned only the files committed
     // before it. Rebasing a file-adding commit over it would land
     // unverified rows and the constraint together (the race the INSERT
-    // commit loop defends by re-verifying its written files; every
-    // commitOrRebase site — add_files import, MoR DML, streaming
-    // epochs, COW rewrites — gets the decline instead: the commit
+    // commit defends by re-verifying its written files; every
+    // Rebase-policy commit — add_files import, MoR DML, COW
+    // rewrites — gets the decline instead: the commit
     // fails clean and the caller re-runs against the snapshot that
     // carries the new constraint). Property keys the attempt itself
     // changed are already arbitrated by the property-merge rules.

@@ -3,7 +3,6 @@ package graft.catalog
 import java.util.OptionalLong
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -192,18 +191,13 @@ object TableStats {
     val cur = TableMetadata.load(dir)
     // drop stale range/hist entries for re-analyzed columns that no
     // longer produce them (e.g. a column gone all-null)
-    val cleared = cur.properties --
-      cols.map(rangeProp) -- cols.map(histProp)
-    TableMetadata.commitOrRebase(dir, base = cur, attempt = cur.copy(
-      version = cur.version + 1,
-      properties = cleared ++
-        Map(NumRowsProp -> numRows.toString, VersionProp -> cur.version.toString) ++
-        colStats.map { case (c, v) => colProp(c) -> v } ++
-        rangeStats.map { case (c, v) => rangeProp(c) -> v } ++
-        histStats.map { case (c, v) => histProp(c) -> v },
-      snapshots = cur.snapshots :+ Snapshot(
-        cur.version + 1, System.currentTimeMillis(), "analyze", 0, cur.files.size)),
-      appendDelta = Some(TableMetadata.AppendDelta(Nil)))
+    SnapshotChange.commit(dir, cur, SnapshotChange.Change("analyze", properties = p =>
+        (p -- cols.map(rangeProp) -- cols.map(histProp)) ++
+          Map(NumRowsProp -> numRows.toString, VersionProp -> cur.version.toString) ++
+          colStats.map { case (c, v) => colProp(c) -> v } ++
+          rangeStats.map { case (c, v) => rangeProp(c) -> v } ++
+          histStats.map { case (c, v) => histProp(c) -> v }),
+      SnapshotChange.Rebase)
     numRows
   }
 

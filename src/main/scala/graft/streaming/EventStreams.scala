@@ -41,11 +41,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("cnt"), col("sum_value"))
 
-  /** Per-user running totals via update-mode aggregation. */
-  def runningUserTotals(events: DataFrame): DataFrame =
-    events.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-
   /** Stream–static enrichment: join the unbounded stream against a
     * bounded dimension table (e.g. a lakehouse table). Spark re-plans
     * the static side per micro-batch, so a slowly-updated dim table is

@@ -137,6 +137,14 @@ class CommitFilesSpec extends AnyFunSuite with Matchers {
       val read = rowsOf(spark.table(s"lakehouse.$Ns.$table"))
       read shouldBe rowsOf(MergeOnRead.read(spark, dir, meta, meta.files))
       read shouldBe expected()
+      // the snapshot metadata the commit derived: per-file maps keyed by
+      // exactly the live files, one snapshot entry per version, and the
+      // head entry's file count
+      meta.fileStats.keySet shouldBe meta.files.toSet
+      meta.fileRows.keySet shouldBe meta.files.toSet
+      meta.fileSeq.keySet shouldBe meta.files.toSet
+      meta.snapshots.map(_.version) shouldBe (1 to meta.version)
+      meta.snapshots.last.totalFiles shouldBe meta.files.size
     }
     val t = s"lakehouse.$Ns.t"
 
