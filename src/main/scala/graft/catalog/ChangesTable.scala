@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}

@@ -1,7 +1,6 @@
 package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained materialized aggregates over lakehouse

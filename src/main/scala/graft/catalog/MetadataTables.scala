@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.Path
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow

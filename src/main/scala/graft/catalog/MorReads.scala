@@ -1,7 +1,5 @@
 package graft.catalog
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualNullSafe, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.LeftAnti

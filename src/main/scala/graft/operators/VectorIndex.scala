@@ -433,7 +433,6 @@ object VectorIndex {
           "use createPq() for ADC search)")))
     val m = books.length
     val kCodes = books(0).length
-    val subDim = books(0)(0).length
     val index = fq(catalog, namespace, indexName)
 
     // per-query ADC lookup table + norm, from the bounded query set

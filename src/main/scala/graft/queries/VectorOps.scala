@@ -205,7 +205,6 @@ object VectorOps {
   val q29d = Q(
     "q29d_topk_agg",
     (s, d) => {
-      import s.implicits._
       val e = withNorm(s, d)
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("nrm").as("qn"))
@@ -584,7 +583,7 @@ object VectorOps {
       // ROUND μ/σ to 1e-6 (both engines): the moment sums are
       // accumulation-order-dependent, so unrounded stats differ in the
       // last ulps across engines/partitionings and every z-vector would
-      // inherit the drift — the same re-synchronization lloydAssign
+      // inherit the drift — the same re-synchronization the Lloyd core
       // applies to centroids. The guard is sign-flip-proof: a variance
       // within noise of zero rounds to a σ of 0 on BOTH sides of the
       // flip (√|ε| < 5e-7) and lands on the 1.0 constant-dimension path.
@@ -834,59 +833,26 @@ object VectorOps {
         .stripMargin
     })
 
-  /** Lloyd's k-means over the embedding corpus and its FINAL assignment
-    * (vec_id, embedding, nrm, cid, dist): K literal centroids seeded
-    * from vec_id 0..K-1, `iters` update rounds. The industrial layout:
-    *  - ASSIGNMENT is map-side only: the K centroids ride into codegen
-    *    as literals of an argmin projection (array_min over (dist, cid)
-    *    structs, [[graft.functions.SqDistFD]] distances) — no join, no
-    *    shuffle, no window touches the corpus; at 100 TB only the
-    *    per-iteration full scans remain, exactly what distributed
-    *    k-means costs everywhere.
-    *  - UPDATE ships one [[graft.functions.VecSumAgg]] buffer (d+1
-    *    doubles) per (partition, cluster) — O(partitions·K·d) bytes per
-    *    iteration, corpus-independent — and collects K rows (K·d
-    *    doubles of driver state per round, bounded by design).
+  /** Lloyd's k-means over the embedding corpus for q109/q110: K = 8
+    * centroids seeded from vec_id 0..K-1, 3 update rounds, on the
+    * [[Lloyd]] core.
+    *  - The corpus is scanned once, fanned out to the core budget when
+    *    the scan is narrower, and pinned as an RDD of float vectors.
+    *  - Each round is ONE shuffle-free `treeAggregate` job: a scan of
+    *    the pinned points that assigns each one to its nearest centroid
+    *    and ships per-cluster (n, Σx), K·(d+1) doubles per partition, to
+    *    the driver. No round plans a query or re-reads the table; at
+    *    100 TB the per-round cost is one pass over the pinned points,
+    *    which is what distributed k-means costs everywhere.
     *  - DETERMINISM vs the DuckDB oracle: centroids round to 1e-6 each
-    *    iteration in both engines (the mean's summation order differs
-    *    across engines/partitionings, and the rounding re-synchronizes
-    *    the noise before it can flip a later assignment); distances use
-    *    the same ascending-dimension (a−b)² fold as the oracle's
-    *    LIST_REDUCE, and ties break to the smaller cid in both. */
-  private def lloydAssign(s: SparkSession, d: String, k: Int, iters: Int,
-      dim: Int): DataFrame = {
-    val ev = withNorm(s, d)
-    def sqDist(vc: Column, c: Seq[Double]): Column =
-      call_function("sq_dist_d", vc, typedLit(c))
-    // init: the first K vectors (the same rows the oracle seeds from);
-    // float→double widening is exact, so both engines start identically
-    var cents: Seq[(Long, Seq[Double])] =
-      ev.filter(col("vec_id") < k).orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble))).toSeq
-    def assigned = {
-      val opts = array(cents.map { case (cid, c) =>
-        struct(sqDist(col("embedding"), c).as("dist"), lit(cid).as("cid"))
-      }: _*)
-      ev.withColumn("best", array_min(opts))
-        .select(col("vec_id"), col("embedding"), col("nrm"),
-          col("best.cid").as("cid"), col("best.dist").as("dist"))
-    }
-    val sumAgg = udaf(new graft.functions.VecSumAgg(dim))
-    (1 to iters).foreach { _ =>
-      val upd = assigned.groupBy(col("cid"))
-        .agg(sumAgg(col("embedding").cast("array<double>")).as("m"))
-        .collect() // bounded: K rows of d+1 doubles
-        .map { r =>
-          val m = r.getSeq[Double](1)
-          val n = m.head
-          r.getLong(0) -> m.tail.map(x =>
-            BigDecimal(x / n).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }.toMap
-      // an emptied cluster keeps its previous centroid (both engines)
-      cents = cents.map { case (cid, c) => cid -> upd.getOrElse(cid, c) }
-    }
-    assigned
-  }
+    *    round in both engines (the mean's summation order differs
+    *    across engines and partitionings, and the rounding
+    *    re-synchronizes the noise before it can flip a later
+    *    assignment); distances use the same ascending-dimension (a−b)²
+    *    fold as the oracle's LIST_REDUCE, and ties break to the smaller
+    *    cid in both. */
+  private def lloyd(s: SparkSession, d: String): Lloyd.Fit =
+    Lloyd.fit(s, embeddings(s, d), k = 8, iters = 3, dim = 64)
 
   /** ONE copy of the oracle-side unrolled Lloyd's (shared by q109 and
     * q110 so the two oracles can never desynchronize): CTEs `c0` (seed),
@@ -920,11 +886,9 @@ object VectorOps {
 
   val q109 = Q(
     "q109_kmeans_cluster",
-    (s, d) =>
-      lloydAssign(s, d, k = 8, iters = 3, dim = 64)
-        .groupBy(col("cid").cast("long").as("cluster"))
-        .agg(count(lit(1)).as("n_vecs"), round(sum(col("dist")), 3).as("inertia_r"))
-        .orderBy(col("cluster")),
+    // the final assignment, per-cluster counts and Σdist fold into one
+    // last aggregate job that ends in a local frame
+    (s, d) => lloyd(s, d).clusterStats(s),
     Some(
       s"""WITH ev AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
          |${oracleLloydCtes(k = 8, iters = 3, dim = 64)}
@@ -949,8 +913,8 @@ object VectorOps {
   val q110 = Q(
     "q110_semdedup",
     (s, d) => {
-      val a = lloydAssign(s, d, k = 8, iters = 3, dim = 64)
-        .select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
+      val a = lloyd(s, d).assignment(s)
+        .select(col("cid"), col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       val l = a.select(col("cid"), col("vec_id").as("id1"),
         col("embedding").as("v1"), col("nrm").as("n1"))
       val r = a.select(col("cid"), col("vec_id").as("id2"),

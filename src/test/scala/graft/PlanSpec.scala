@@ -518,16 +518,6 @@ class PlanSpec extends AnyFunSuite with Matchers {
     plan should not include "Join"
   }
 
-  test("q109 k-means assignment is a map-side argmin: no join, no window") {
-    // the K centroids ride into codegen as literals (sq_dist_d argmin
-    // projection); any Join or Window in the final plan would mean the
-    // corpus is being shuffled per iteration
-    val plan = executedPlan(graft.queries.VectorOps.q109.run(spark, sf))
-    plan should include("sq_dist_d")
-    plan should not include "Join"
-    plan should not include "Window"
-  }
-
   test("q110 semdedup pairs only within clusters: keyed join, never a cross product") {
     // Σ|cluster|² pair candidates, not |corpus|² — the join must stay
     // an equi join on cid
